@@ -92,14 +92,22 @@ object Bench {
       })
     }
     val counts = scala.collection.mutable.LinkedHashMap.empty[String, Acc]
+    // A query that throws is a failure, never a timing: it goes to stderr
+    // and the counts file's `failed` list, and out of the result line.
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+      .flatMap { case (name, fn) =>
       val t = (0 until math.max(1, runs)).map { i =>
         val profiled = countsPath.isDefined && i == 0
         if (profiled) current.set(new Acc)
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"FAILED $name: $e")
+            false
+          }
         val dt = (System.nanoTime() - t0) / 1e9
         if (profiled) {
           // listener events are async: let the bus drain before detaching
@@ -113,15 +121,17 @@ object Bench {
         // blocking: removal must FINISH before the next timer starts
         if (!sys.env.contains("SPARK_GRAFT_NO_SWEEP"))
           Housekeeping.releaseAll(spark, blocking = true)
-        dt
-      }.min
-      name -> t
+        (ok, dt)
+      }
+      if (t.forall(_._1)) Some(name -> t.map(_._2).min)
+      else { failed += name; None }
     }
     countsPath.foreach { p =>
-      val body = counts.map { case (name, a) =>
+      val body = (counts.map { case (name, a) =>
         s"""  "$name": {"jobs":${a.jobs},"stages":${a.stages},"tasks":${a.tasks},""" +
           s""""shuffle_write":${a.shufW},"shuffle_read":${a.shufR},"input":${a.input}}"""
-      }.mkString("{\n", ",\n", "\n}")
+      } ++ Seq(failed.map("\"" + _ + "\"").mkString("  \"failed\": [", ",", "]")))
+        .mkString("{\n", ",\n", "\n}")
       java.nio.file.Files.write(java.nio.file.Paths.get(p),
         body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.meta.StacCatalog
 import graft.model.{DatasetDescriptor, TimeUnitKind}
-import graft.ops.{Normalize, QcDrivers}
+import graft.ops.{DeltaProfile, Normalize, QcDrivers}
 import graft.sources.Manifest
 import graft.store.GridStore
 
@@ -115,16 +115,30 @@ trait DatasetManager extends Logging {
     * post-parse QC (parse, publish.py:41-129; O7 runs after the write,
     * publish.py:824-895). `postParseQc = true` samples cells from the
     * input files and compares against the freshly-written store, raising
-    * on any mismatch. */
+    * on any mismatch.
+    *
+    * The delta is profiled ONCE ([[graft.ops.DeltaProfile]], one
+    * aggregate) and that profile serves both the pre-parse gate and the
+    * store's publish stats. An update's delta is materialized first (an
+    * executor-local checkpoint of the small side, which the profile job
+    * fills), so the profile, the store's gate, padding and write all read
+    * it once; an initial or rebuild publish streams its input instead. */
   def run(dryRun: Boolean = false, rebuild: Boolean = false,
       skipPreParseQc: Boolean = false, postParseQc: Boolean = false,
       postParseMaxChecks: Int = 100): Unit = {
     val t0 = System.nanoTime()
-    val df = transform()
-    if (!skipPreParseQc)
-      QcDrivers.preParseQualityCheck(df, desc, hasExisting = store.hasExisting,
-        rebuild = rebuild)
-    store.publish(df, rebuild = rebuild, dryRun = dryRun)
+    // a scan may infer its schema with a job (parquet inputs do)
+    val df = JobLabel(spark, "graft.manager: transform")(transform())
+    val hasExisting = store.hasExisting
+    val isUpdate = hasExisting && !rebuild
+    val delta = if (isUpdate) df.localCheckpoint(false) else df
+    try {
+      val profile = DeltaProfile(delta, desc)
+      if (!skipPreParseQc)
+        QcDrivers.preParseQualityCheckProfiled(profile, desc, hasExisting = hasExisting,
+          rebuild = rebuild)
+      store.publish(delta, rebuild = rebuild, dryRun = dryRun, profiled = Some(profile))
+    } finally if (isUpdate) graft.Housekeeping.release(delta)
     if (postParseQc && !dryRun) {
       val keys = desc.standardDims
       // store side is bucket-pruned per sampled file range — never a full
@@ -133,8 +147,7 @@ trait DatasetManager extends Logging {
         inputFiles(), f => Normalize.normalize(Manifest.openInput(spark, f), desc,
           pre = preprocess, post = postprocess),
         keys, desc.dataVar, desc, maxChecks = postParseMaxChecks)
-      val bad = mismatches.limit(1).count()
-      if (bad > 0)
+      if (!mismatches.isEmpty)
         throw new IllegalStateException(
           s"Post-parse QC found mismatched cells between inputs and store")
     }
@@ -160,7 +173,9 @@ trait DatasetManager extends Logging {
     val ds = store.dataset()
     // one aggregation pass for all dim cardinalities, not one job per dim
     val dims = desc.standardDims.filter(ds.columns.contains)
-    val statsRow = graft.ops.Stats.dimSizeStats(ds, dims).head()
+    val statsRow = JobLabel(spark, "graft.meta: stac dim sizes") {
+      graft.ops.Stats.dimSizeStats(ds, dims).head()
+    }
     val dimSizes = dims.map(d => d -> statsRow.getAs[Long](s"n_$d")).toMap
     stac.pushItem(desc.datasetName, s"${desc.datasetName}-latest", bbox,
       start, end, desc, dimSizes, extraProperties = desc.staticMetadata)

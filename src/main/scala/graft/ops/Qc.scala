@@ -7,8 +7,8 @@ import graft.model.DatasetDescriptor
 /** Statistical quality gates (SURVEY §2.6 A4-A6, §2.5 J4, §2.8 O7-O9).
   *
   * These dominate the reference's test corpus, so they are first-class
-  * operators here. All sampling runs distributed (`df.sample`), only the
-  * tiny per-timestep summaries come back to the driver.
+  * operators here. Scans run distributed; only the tiny per-timestep
+  * summaries come back to the driver.
   */
 object Qc {
 
@@ -20,14 +20,10 @@ object Qc {
     "deg_F" -> (-129.0, 140.0),
   )
 
-  /** Sampled random-cell check: forbidden NaNs (when `hasNans` is false) and
-    * unit-based extreme values. Returns violating rows; empty = pass.
-    *
-    * Reference: `check_random_values` (utils/publish.py:666-700), sampler
-    * 1246-1280 — 100 random cells. Spark-first: `sample` + `limit`, the
-    * filter runs inside codegen; only violations are collected.
-    */
-  /** Violation predicate shared by the sampled and exhaustive checkers. */
+  /** Value-violation predicate: forbidden NaNs (when `hasNans` is false)
+    * and unit-based extreme values. Reference: `check_random_values`
+    * (utils/publish.py:666-700), which samples 100 cells; the pre-parse
+    * gate counts it over every cell in [[DeltaProfile]]'s one pass. */
   def valueViolation(desc: DatasetDescriptor): Column = {
     val v = col(desc.dataVar)
     val nanViolation = if (desc.hasNans) lit(false) else isnan(v)
@@ -38,35 +34,7 @@ object Qc {
     nanViolation || extremeViolation
   }
 
-  def randomValueViolations(
-      df: DataFrame,
-      desc: DatasetDescriptor,
-      n: Int = 100,
-      seed: Long = 42L,
-      approxRows: Option[Long] = None): DataFrame = {
-    // No full-scan count: the fraction comes from a caller-supplied row
-    // estimate (store manifest / descriptor) or a fixed tiny fraction,
-    // mirroring the reference's fixed 100-cell sampler
-    // (utils/publish.py:1246-1280). limit(n) bounds the worst case.
-    val fraction = approxRows match {
-      case Some(total) if total > 0 => math.min(1.0, (n * 10.0) / total.toDouble)
-      case _ => 1e-3
-    }
-    // The deterministic limit(n) arm guarantees the check sees cells even
-    // when the fraction undershoots (tiny inputs); CollectLimit reads only
-    // the first partitions, so it stays cheap at scale. distinct() keeps a
-    // cell that lands in BOTH arms from being reported twice (identical
-    // violating rows collapse too — fine for a sampled report).
-    df.sample(withReplacement = false, fraction, seed)
-      .limit(n * 10)
-      .unionAll(df.limit(n))
-      .filter(valueViolation(desc))
-      .distinct()
-      .limit(n)
-  }
-
-  /** Exhaustive (deterministic) variant of the random-value check: every
-    * violating cell, not a sample. Used by the correctness gate. */
+  /** Every violating cell as rows. Used by the correctness gate. */
   def allValueViolations(df: DataFrame, desc: DatasetDescriptor): DataFrame =
     df.filter(valueViolation(desc))
 
@@ -143,12 +111,11 @@ object Qc {
     * only FAILING timesteps survive (reference raises
     * NanFrequencyMismatchError — utils/publish.py:1178-1243, errors.py).
     * The Wilson bound is closed-form arithmetic, so it runs as columns and
-    * only violating timesteps ever reach the driver — at ERA5 scale (>639k
-    * timesteps, docs/etl_developers_manual.md:158) collecting every
-    * per-timestep row first (the reference's loop, utils/publish.py:702-728)
-    * would not fly; a collect-then-loop variant is deliberately NOT
-    * provided. Input: output of [[nanFrequencyByTime]]. Output adds
-    * ci_lo/ci_hi.
+    * only violating timesteps reach the driver. The pre-parse gate takes
+    * the same verdict from [[DeltaProfile]], whose per-timestep rows it
+    * collects anyway (one row per timestep: ERA5's >639k hourly steps,
+    * docs/etl_developers_manual.md:158, are tens of MB). Input: output of
+    * [[nanFrequencyByTime]]. Output adds ci_lo/ci_hi.
     */
   def nanFrequencyViolationsDF(
       freqByTime: DataFrame,

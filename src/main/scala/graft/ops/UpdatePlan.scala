@@ -187,16 +187,24 @@ object UpdatePlan {
       throw new IllegalStateException("Update contains no new or changed records")
     if (nApp > 0) {
       require(r.get(3) != null, "classified frame carries no existing_end row")
-      val deltaMin = (ms(r.get(2)) - ms(r.get(3))) / 60000L
-      val contiguous = cadenceBounds match {
-        case Some((lo, hi)) => deltaMin >= lo.toMinutes && deltaMin <= hi.toMinutes
-        case None => deltaMin == resolution.toMinutes
-      }
-      if (!contiguous)
+      val gapMs = ms(r.get(2)) - ms(r.get(3))
+      if (!gapAllowed(gapMs, resolution, cadenceBounds))
         throw new IllegalStateException(
           s"Append is not contiguous with existing end ${r.get(3)} " +
-            s"(gap $deltaMin min, expected ${resolution.toMinutes})")
+            s"(gap ${gapMs / 60000L} min, expected ${resolution.toMinutes})")
     }
+  }
+
+  /** Whether a gap of `gapMs` between consecutive timesteps fits the
+    * dataset's cadence: inside `cadenceBounds` for irregular datasets,
+    * else exactly one `resolution` step. The one driver-side copy of the
+    * rule, shared by the pre-parse cadence check ([[DeltaProfile]]) and
+    * the append-contiguity gate above; [[cadenceViolations]] is its
+    * column form. */
+  def gapAllowed(gapMs: Long, resolution: TimeSpan,
+      cadenceBounds: Option[(TimeSpan, TimeSpan)]): Boolean = cadenceBounds match {
+    case Some((lo, hi)) => gapMs >= lo.toMillis && gapMs <= hi.toMillis
+    case None => gapMs == resolution.toMillis
   }
 
   /** Compatibility form over separate insert/append frames — delegates to

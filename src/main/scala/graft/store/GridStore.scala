@@ -4,12 +4,13 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampNTZType
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType, TimestampNTZType}
 
-import graft.model.{DatasetDescriptor, TimeSpan, TimeUnitKind}
-import graft.ops.UpdatePlan
+import graft.JobLabel
+import graft.model.{DatasetDescriptor, TimeUnitKind}
+import graft.ops.{DeltaProfile, UpdatePlan}
 
 /** Incremental grid store on bucket-partitioned parquet — the Spark-native
   * re-expression of the reference's Zarr write engine
@@ -129,17 +130,21 @@ final class GridStore(
           s"$kh:${dataCols.filterNot(_ == "__bucket").mkString(",")}")
     }
 
-  /** Directory-key expression for the time bucket. */
-  private def bucketExpr = {
-    val pattern = bucketSpan match {
-      case TimeUnitKind.Days => "yyyy-MM-dd"
-      case TimeUnitKind.Months => "yyyy-MM"
-      case TimeUnitKind.Years => "yyyy"
-      case other => throw new IllegalArgumentException(
-        s"Unsupported bucket span: $other (use days/months/years)")
-    }
-    date_format(col(timeCol), pattern)
+  /** Directory-key pattern of the time bucket: Spark's `date_format` of
+    * the time column on the write side, the same pattern over the
+    * session-zone wall time on the driver side. */
+  private def bucketPattern: String = bucketSpan match {
+    case TimeUnitKind.Days => "yyyy-MM-dd"
+    case TimeUnitKind.Months => "yyyy-MM"
+    case TimeUnitKind.Years => "yyyy"
+    case other => throw new IllegalArgumentException(
+      s"Unsupported bucket span: $other (use days/months/years)")
   }
+
+  private def bucketExpr = date_format(col(timeCol), bucketPattern)
+
+  private def bucketKey(t: java.time.LocalDateTime): String =
+    t.format(java.time.format.DateTimeFormatter.ofPattern(bucketPattern))
 
   // ------------------------------------------------------------- existence
 
@@ -157,9 +162,47 @@ final class GridStore(
     * skip unlisted bucket directories entirely. */
   def dataset(): DataFrame = {
     require(hasExisting, s"No existing store at $path")
-    encryptedRead.parquet(dataPath)
-      .withColumn(timeCol, col(timeCol).cast(TimestampNTZType))
-      .drop("__bucket")
+    storeRows(lit(true))
+  }
+
+  /** The store's rows matching `pred` (which may test `__bucket`), time as
+    * TIMESTAMP_NTZ, `__bucket` dropped. One filter and one projection: each
+    * Dataset step is an analysis pass on the driver, paid at every open. */
+  private def storeRows(pred: Column): DataFrame = {
+    val files = storeFiles
+    files.filter(pred).select(files.columns.toSeq.filter(_ != "__bucket").map {
+      case c if c == timeCol => col(c).cast(TimestampNTZType).as(c)
+      case c => col(c)
+    }: _*)
+  }
+
+  /** Every data file as one frame, `__bucket` included. A store whose
+    * attrs pin the data schema opens with it: no footer-inference job at
+    * open. A store without the key infers from the files. */
+  private def storeFiles: DataFrame = {
+    val reader = encryptedRead
+    pinnedSchema.fold(reader)(reader.schema).parquet(dataPath)
+  }
+
+  private def pinnedSchema: Option[StructType] =
+    readAttrs().get(DataSchemaAttr).map(DataType.fromJson(_).asInstanceOf[StructType])
+
+  /** The schema a frame's data files read back with: its columns, all
+    * nullable as Spark reads files, then the string `__bucket` column. */
+  private def storeSchema(df: DataFrame): StructType =
+    StructType(df.schema.fields.map(f => StructField(f.name, f.dataType)) :+
+      StructField("__bucket", StringType))
+
+  /** An update must carry the pinned schema's columns and types: the
+    * store's reads decode every file with it. Fails before any write. */
+  private def checkSchema(update: DataFrame): Unit = pinnedSchema.foreach { pinned =>
+    val want = StructType(pinned.filterNot(_.name == "__bucket"))
+    val got = StructType(storeSchema(update).filterNot(_.name == "__bucket"))
+    def cols(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSet
+    if (cols(want) != cols(got))
+      throw new IllegalArgumentException(
+        s"Update schema ${got.simpleString} does not match the store's pinned " +
+          s"schema ${want.simpleString} at $path")
   }
 
   /** Partition-pruned read of specific buckets: the `__bucket` predicate is
@@ -167,30 +210,15 @@ final class GridStore(
     * never listed or footer-read — the mechanism every update-path read of
     * the existing store uses. */
   def readBuckets(buckets: Set[String]): DataFrame =
-    encryptedRead.parquet(dataPath)
-      .filter(col("__bucket").isin(buckets.toSeq: _*))
-      .withColumn(timeCol, col(timeCol).cast(TimestampNTZType))
-      .drop("__bucket")
+    storeRows(col("__bucket").isin(buckets.toSeq: _*))
 
   /** F1 at store level — time-range read with bucket-level partition
     * pruning (bucket strings sort chronologically) plus the exact time
     * predicate for row-group pruning within the edge buckets. */
   def readRange(start: java.time.LocalDateTime,
-      end: java.time.LocalDateTime): DataFrame = {
-    val fmtStr = bucketSpan match {
-      case TimeUnitKind.Days => "yyyy-MM-dd"
-      case TimeUnitKind.Months => "yyyy-MM"
-      case TimeUnitKind.Years => "yyyy"
-      case other => throw new IllegalArgumentException(s"Unsupported: $other")
-    }
-    val fmt = java.time.format.DateTimeFormatter.ofPattern(fmtStr)
-    encryptedRead.parquet(dataPath)
-      .filter(col("__bucket") >= start.format(fmt) &&
-        col("__bucket") <= end.format(fmt))
-      .withColumn(timeCol, col(timeCol).cast(TimestampNTZType))
-      .filter(col(timeCol).between(lit(start), lit(end)))
-      .drop("__bucket")
-  }
+      end: java.time.LocalDateTime): DataFrame =
+    storeRows(col("__bucket") >= bucketKey(start) && col("__bucket") <= bucketKey(end) &&
+      col(timeCol).cast(TimestampNTZType).between(lit(start), lit(end)))
 
   // ----------------------------------------------------------- attrs (W8)
 
@@ -317,8 +345,10 @@ final class GridStore(
     * store). */
   private def materialize(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
-  /** W3 — initial write (publish.py:301-318). */
-  def writeInitial(df: DataFrame, dryRun: Boolean = false): Unit = {
+  /** W3 — initial write (publish.py:301-318). `profiled`: the caller's
+    * [[DeltaProfile]] of `df`, if it built one (see [[publish]]). */
+  def writeInitial(df: DataFrame, dryRun: Boolean = false,
+      profiled: Option[DeltaProfile] = None): Unit = {
     if (dryRun) return
     // A full (re)build rewrites EVERY data file, so it is the one path
     // that may change the profile: an explicit constructor key is adopted
@@ -348,22 +378,22 @@ final class GridStore(
       if (hasExisting && adopted != persisted)
         Map(EncryptionKeyHashAttr -> adopted.get)
       else Map.empty
-    // Overlap the attrs stats aggregate with the data write (guide §2.6):
-    // both read df independently, and the aggregate's scalars are only
-    // consumed AFTER the write succeeds (withCommitMarker evaluates
-    // postAttrs lazily) — so the formerly-serial stats job now back-fills
-    // while the write's tail drains. A failed write just abandons the
-    // (read-only) stats future.
+    // Without a caller's profile, overlap the profile aggregate with the
+    // data write (guide §2.6): both read df independently, and the
+    // profile's scalars are only consumed AFTER the write succeeds
+    // (withCommitMarker evaluates postAttrs lazily) — so the stats job
+    // back-fills while the write's tail drains. A failed write just
+    // abandons the (read-only) profile future.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = ZarrStore.axisEc
-    val statsF = Future {
-      spark.sparkContext.setJobDescription("graft.store: initial attrs stats")
-      try updateStats(df)
-      finally spark.sparkContext.setJobDescription(null)
+    val statsF = profiled match {
+      case Some(p) => Future.successful(updateStats(p))
+      case None => Future(updateStats(DeltaProfile(df, desc)))
     }
-    withCommitMarker(computedAttrs(df, isUpdate = false,
-        Some(Await.result(statsF, Duration.Inf))) ++ rotation) {
+    withCommitMarker(computedAttrs(isUpdate = false,
+        Await.result(statsF, Duration.Inf)) ++ rotation +
+        (DataSchemaAttr -> storeSchema(df).json)) {
       writeJob(df, "overwrite")
     }
   }
@@ -413,40 +443,58 @@ final class GridStore(
   }
 
   /** W2 — publish dispatch (publish.py:86-129): initial when nothing
-    * exists (or rebuilding), else classify + insert + append. */
+    * exists (or rebuilding), else classify + insert + append.
+    *
+    * `profiled`: a caller that already built the [[DeltaProfile]] of
+    * `update` (DatasetManager.run does, for its pre-parse gate) passes it
+    * here, and the store takes its stats from it instead of profiling
+    * again. On the update path such a caller also passes `update`
+    * materialized and keeps ownership of its blocks: the store neither
+    * checkpoints nor releases it. */
   def publish(
       update: DataFrame,
       rebuild: Boolean = false,
       allowOverwrite: Boolean = true,
-      dryRun: Boolean = false): Unit = {
+      dryRun: Boolean = false,
+      profiled: Option[DeltaProfile] = None): Unit = {
     if (!hasExisting || rebuild) {
       if (hasExisting && rebuild && !allowOverwrite)
         throw new IllegalStateException(
           "Rebuild of an existing store requires allowOverwrite " +
             "(publish.py:342-348 semantics)")
-      writeInitial(update, dryRun)
-    } else runUpdate(update, dryRun)
+      writeInitial(update, dryRun, profiled)
+    } else runUpdate(update, dryRun, profiled)
   }
 
-  /** Update path (publish.py:322-356): guard, classify times, gate, insert
-    * per region, then append. */
-  private def runUpdate(updateDf0: DataFrame, dryRun: Boolean): Unit = {
+  /** Update path (publish.py:322-356): guard the in-progress flag and the
+    * pinned schema, profile the delta (unless the caller did), then
+    * classify times, gate, pad and write. */
+  private def runUpdate(update: DataFrame, dryRun: Boolean,
+      profiled: Option[DeltaProfile]): Unit = {
     checkNotInProgress()
-    // Materialize the delta ONCE: classification, gate checks, bucket
-    // discovery, and both write paths all re-read it, and its lineage may be
-    // an arbitrary upstream pipeline. An update is a bounded delta relative
-    // to the store (the reference holds it in memory too), so this is an
-    // executor-local checkpoint of the small side, never the store. LAZY
-    // (r16): the stats aggregate right below is the first action and
-    // materializes the blocks as it folds — an eager checkpoint was a
-    // whole extra job per publish.
-    val updateDf = updateDf0.localCheckpoint(false)
+    checkSchema(update)
+    // Materialize the delta ONCE: profile, classification, padding and the
+    // write all re-read it, and its lineage may be an arbitrary upstream
+    // pipeline. An update is a bounded delta relative to the store (the
+    // reference holds it in memory too), so this is an executor-local
+    // checkpoint of the small side, never the store. LAZY (r16): the
+    // profile aggregate right below is the first action and materializes
+    // the blocks as it folds — an eager checkpoint was a whole extra job
+    // per publish. A caller that passes its profile materialized the
+    // delta itself and releases it.
+    val updateDf = if (profiled.isDefined) update else update.localCheckpoint(false)
+    try updateProfiled(updateDf, profiled.getOrElse(DeltaProfile(updateDf, desc)), dryRun)
+    finally if (profiled.isEmpty) graft.Housekeeping.release(updateDf)
+  }
+
+  private def updateProfiled(updateDf: DataFrame, profile: DeltaProfile,
+      dryRun: Boolean): Unit = {
     // Classification only needs the store's times INSIDE the update window
     // (a time can only be an insert if both sides contain it), so the
     // existing side is a bucket-pruned range read — never a full-store
-    // scan, even of just the time column. The ONE updateStats action also
-    // serves attrs assembly and bucket planning below.
-    val stats = updateStats(updateDf)
+    // scan, even of just the time column. The profile's stats also serve
+    // attrs assembly and bucket planning below.
+    val stats = updateStats(profile)
     // The gate's ONE aggregate action, scoped so `classified` — whose plan
     // reads the CURRENT store files — cannot gain a post-write consumer
     // (the write below replaces those files; a later read of this frame
@@ -460,14 +508,13 @@ final class GridStore(
       val classified =
         UpdatePlan.classifyUpdateTimes(existing, updateDf, timeCol)
           .unionByName(existingEndFrame)
-      spark.sparkContext.setJobDescription("graft.store: update gate")
-      try UpdatePlan.updateQualityCheckClassified(classified, timeCol,
-        desc.timeResolution, desc.updateCadenceBounds)
-      finally spark.sparkContext.setJobDescription(null)
+      JobLabel(spark, "graft.store: update gate") {
+        UpdatePlan.updateQualityCheckClassified(classified, timeCol,
+          desc.timeResolution, desc.updateCadenceBounds)
+      }
     }
     if (dryRun) {
       runGate()
-      graft.Housekeeping.release(updateDf)
       return
     }
     // Overlap the gate with the padding read (guide §2.6): both are
@@ -483,9 +530,7 @@ final class GridStore(
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = ZarrStore.axisEc
     val padF = Future {
-      spark.sparkContext.setJobDescription("graft.store: padding read")
-      try paddedDelta(updateDf, stats.touched)
-      finally spark.sparkContext.setJobDescription(null)
+      JobLabel(spark, "graft.store: padding read")(paddedDelta(updateDf, stats.touched))
     }
     val gateOutcome = scala.util.Try(runGate())
     // the padding job must complete either way — a failed gate must not
@@ -495,21 +540,19 @@ final class GridStore(
       padOutcome.foreach { case (padded, wasPadded) =>
         if (wasPadded) graft.Housekeeping.release(padded)
       }
-      graft.Housekeeping.release(updateDf)
       throw e
     }
     val (padded, wasPadded) = padOutcome.get
     try {
-      withCommitMarker(computedAttrs(updateDf, isUpdate = true, Some(stats))) {
-        spark.sparkContext.setJobDescription("graft.store: delta write")
-        try writeJob(padded, "overwrite", dynamic = true)
-        finally spark.sparkContext.setJobDescription(null)
+      withCommitMarker(computedAttrs(isUpdate = true, stats)) {
+        JobLabel(spark, "graft.store: delta write") {
+          writeJob(padded, "overwrite", dynamic = true)
+        }
       }
     } finally {
-      // every consumer (gate, padding, write) has run: the update delta's
-      // (and the padded frame's) checkpoint blocks are dead
+      // every consumer (gate, padding, write) has run: the padded frame's
+      // checkpoint blocks are dead (runUpdate releases the delta's)
       if (wasPadded) graft.Housekeeping.release(padded)
-      graft.Housekeeping.release(updateDf)
     }
   }
 
@@ -523,9 +566,8 @@ final class GridStore(
     * frame and rides the classification job. */
   private def existingEndFrame: DataFrame = {
     val bounded = existingBuckets.toSeq.sorted.lastOption match {
-      case Some(last) =>
-        encryptedRead.parquet(dataPath).filter(col("__bucket") === last)
-      case None => encryptedRead.parquet(dataPath)
+      case Some(last) => storeFiles.filter(col("__bucket") === last)
+      case None => storeFiles
     }
     bounded.agg(max(col(timeCol).cast(TimestampNTZType)).as(timeCol))
       .select(col(timeCol), lit("existing_end").as("kind"))
@@ -543,56 +585,38 @@ final class GridStore(
       .toSet
   }
 
-  /** W14 — attrs assembly after a write (metadata.py:870-921): date range,
-    * update range, previous end, append-only flag, bbox when the frame
-    * carries lat/lon spatial dims. */
-  /** One multi-aggregate over the update frame serving EVERY scalar the
-    * publish protocol needs — raw time bounds (classification window),
-    * formatted date range + bbox (attrs assembly), and the touched bucket
-    * set (dynamic-overwrite planning). Folding these into a single action
-    * is what keeps the per-publish driver job count flat: each extra
-    * scalar round-trip is protocol latency, not data volume. */
+  /** Every scalar the publish protocol needs, derived on the driver from
+    * the delta's [[DeltaProfile]] — raw time bounds (classification
+    * window), formatted date range + bbox (attrs assembly), and the touched
+    * bucket set (dynamic-overwrite planning). Wall times are session-zone
+    * (a TIMESTAMP column's `cast(time as timestamp_ntz)`), so the
+    * formatted range and the buckets equal Spark's `date_format` of the
+    * time column. */
   private[store] final case class UpdateStats(
       uLo: java.time.LocalDateTime, uHi: java.time.LocalDateTime,
       lo: String, hi: String,
       bbox: Option[(Double, Double, Double, Double)],
       touched: Set[String])
 
-  private def hasBboxCols(df: DataFrame): Boolean = {
-    val spatial = desc.spatialDims.take(2)
-    spatial.length == 2 && spatial.forall(df.columns.contains) &&
-      spatial == Seq("latitude", "longitude")
-  }
-
-  private def updateStats(df: DataFrame): UpdateStats = {
-    val fmt = "yyyyMMddHH"
-    val hasBbox = hasBboxCols(df)
-    val aggs = Seq(
-      min(col(timeCol).cast(TimestampNTZType)).as("raw_lo"),
-      max(col(timeCol).cast(TimestampNTZType)).as("raw_hi"),
-      date_format(min(col(timeCol)), fmt).as("lo"),
-      date_format(max(col(timeCol)), fmt).as("hi"),
-      collect_set(bucketExpr).as("touched")) ++
-      (if (hasBbox) Seq(
-        round(min(col("longitude")), desc.bboxRounding).as("bb0"),
-        round(min(col("latitude")), desc.bboxRounding).as("bb1"),
-        round(max(col("longitude")), desc.bboxRounding).as("bb2"),
-        round(max(col("latitude")), desc.bboxRounding).as("bb3"))
-      else Seq.empty)
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
+  private[store] def updateStats(profile: DeltaProfile): UpdateStats = {
+    val locals = profile.timed.map(_.local)
+    if (locals.isEmpty)
+      throw new IllegalStateException("Update contains no new or changed records")
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHH")
+    implicit val ldtOrd: Ordering[java.time.LocalDateTime] =
+      Ordering.fromLessThan(_ isBefore _)
     UpdateStats(
-      uLo = r.getAs[java.time.LocalDateTime]("raw_lo"),
-      uHi = r.getAs[java.time.LocalDateTime]("raw_hi"),
-      lo = r.getAs[String]("lo"), hi = r.getAs[String]("hi"),
-      bbox = if (!hasBbox) None
-        else Some((r.getAs[Double]("bb0"), r.getAs[Double]("bb1"),
-          r.getAs[Double]("bb2"), r.getAs[Double]("bb3"))),
-      touched = r.getAs[Seq[String]]("touched").toSet)
+      uLo = locals.min, uHi = locals.max,
+      // steps are in the column's own order: the first is min(time)
+      lo = locals.head.format(fmt), hi = locals.last.format(fmt),
+      bbox = profile.bbox,
+      touched = locals.map(bucketKey).toSet)
   }
 
-  private def computedAttrs(df: DataFrame, isUpdate: Boolean,
-      pre: Option[UpdateStats] = None): Map[String, String] = {
-    val stats = pre.getOrElse(updateStats(df))
+  /** W14 — attrs assembly after a write (metadata.py:870-921): date range,
+    * update range, previous end, append-only flag, bbox when the frame
+    * carries lat/lon spatial dims. */
+  private def computedAttrs(isUpdate: Boolean, stats: UpdateStats): Map[String, String] = {
     val (lo, hi) = (stats.lo, stats.hi)
     val prior = readAttrs() // one sidecar read serves bbox merge + ranges
     val bboxAttrs = stats.bbox match {
@@ -627,6 +651,11 @@ final class GridStore(
 
 object GridStore {
   val UpdateInProgressKey = "update_in_progress"
+
+  /** Attrs key pinning the data files' schema (Spark's JSON form, with the
+    * `__bucket` partition column): reads open with it instead of inferring
+    * it from a footer. Written by every initial publish. */
+  val DataSchemaAttr = "data_schema"
 
   /** Attrs key persisting the store's master-key hash (never the key) —
     * the parquet analog of the zarr filter chain's key_hash config. */

@@ -2,6 +2,7 @@ package graft
 
 import java.time.LocalDateTime
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -34,4 +35,24 @@ trait SparkSpec extends AnyFunSuite {
 
   def collectSet(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
+
+  /** The `spark.job.description` of every Spark job `body` starts, in
+    * start order ("" for an unlabeled job). */
+  def jobDescriptions(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Thread.sleep(300) // listener events are delivered asynchronously
+    } finally spark.sparkContext.removeSparkListener(listener)
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  def countJobs(body: => Unit): Int = jobDescriptions(body).size
 }
