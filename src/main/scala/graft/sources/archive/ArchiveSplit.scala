@@ -1,7 +1,6 @@
 package graft.sources.archive
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, Path => HPath}
+import org.apache.hadoop.fs.FSDataInputStream
 
 /** Shared machinery of the SPLITTABLE archive scans (`format("warc")`,
   * `format("webdataset")`): byte-range planning and a lazily-grown
@@ -27,33 +26,6 @@ private[archive] object ArchiveSplit {
     require(split > 0, s"maxSplitBytes $split")
     if (len == 0) Seq.empty
     else (0L until len by split).map(s => (s, math.min(s + split, len)))
-  }
-
-  /** Natural-sorted archive files under the given paths (dirs expand; a
-    * missing dir is empty) — the GRIB listing discipline, bounded-pool
-    * parallel stats. */
-  def listFiles(conf: Configuration, paths: Seq[String],
-      accept: String => Boolean): Seq[org.apache.hadoop.fs.FileStatus] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.traverse(paths) { p0 =>
-      Future(scala.concurrent.blocking {
-        val p = new HPath(p0)
-        val fs = p.getFileSystem(conf)
-        try {
-          val st = fs.getFileStatus(p)
-          if (st.isDirectory)
-            fs.listStatus(p).toSeq.filter(_.isFile)
-              .filter(f => accept(f.getPath.getName))
-          else Seq(st)
-        } catch {
-          case _: java.io.FileNotFoundException =>
-            Seq.empty[org.apache.hadoop.fs.FileStatus]
-        }
-      })
-    }, Duration.Inf).flatten
-      .sortBy(st => graft.sources.Manifest.naturalKey(st.getPath.toString))
   }
 }
 
@@ -278,113 +250,6 @@ private[archive] object ZstdDicts {
       }
     Some(dict)
   }
-}
-
-/** Streaming offset for the archive landing-dir sources: the natural-
-  * order filename watermark of the last admitted file — the same
-  * contract as the GRIB/NetCDF streams (files are IMMUTABLE, the
-  * directory is append-only with naturally-increasing names, offsets
-  * only move forward). */
-final case class ArchiveOffset(watermark: String)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = graft.meta.JStr(watermark).render
-}
-
-/** MICRO_BATCH_READ over an archive landing directory — the live-crawl
-  * shape (a fetcher drops finished `.warc.gz` segments / WebDataset
-  * shards into a bucket; the curation pipeline drains them
-  * incrementally). Batch admission is per FILE (a segment is the unit a
-  * fetcher commits atomically); each admitted file then fans out into
-  * the SAME split partitions the batch scan plans, so intra-file
-  * parallelism carries over to streaming. `maxFilesPerTrigger` bounds a
-  * batch so attaching to a pre-populated bucket drains it
-  * incrementally. */
-private[archive] final class ArchiveMicroBatchStream(
-    paths: Seq[String],
-    @transient conf: Configuration,
-    accept: String => Boolean,
-    maxFilesPerTrigger: Option[Int],
-    planFile: (String, Long) => Seq[org.apache.spark.sql.connector.read.InputPartition],
-    factory: org.apache.spark.sql.connector.read.PartitionReaderFactory)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit, ReadMaxFiles}
-  import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-
-  require(paths.nonEmpty, "archive streaming needs the source paths")
-
-  private def key(p: String): String = graft.sources.Manifest.naturalKey(p)
-  private def listing(): Seq[org.apache.hadoop.fs.FileStatus] =
-    ArchiveSplit.listFiles(conf, paths, accept)
-
-  @volatile private var lastBatch: Option[(String, String,
-    Seq[org.apache.hadoop.fs.FileStatus])] = None
-  @volatile private var availableNowTarget: Option[String] = None
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    val files = listing()
-    availableNowTarget = Some(
-      if (files.isEmpty) "" else files.last.getPath.toString)
-  }
-
-  override def reportLatestOffset(): Offset = {
-    val files = listing()
-    ArchiveOffset(if (files.isEmpty) "" else files.last.getPath.toString)
-  }
-
-  override def initialOffset(): Offset = ArchiveOffset("")
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxFilesPerTrigger.map(n => ReadLimit.maxFiles(n): ReadLimit)
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(start, limit) is used (SupportsAdmissionControl)")
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val lo = start.asInstanceOf[ArchiveOffset].watermark
-    val candidates = listing()
-      .filter(st => key(st.getPath.toString) > key(lo))
-      .filter(st => availableNowTarget.forall(t =>
-        key(st.getPath.toString) <= key(t)))
-    val admitted = limit match {
-      case m: ReadMaxFiles => candidates.take(m.maxFiles())
-      case _ => candidates
-    }
-    if (admitted.isEmpty) { lastBatch = None; start }
-    else {
-      val hi = admitted.last.getPath.toString
-      lastBatch = Some((lo, hi, admitted))
-      ArchiveOffset(hi)
-    }
-  }
-
-  override def deserializeOffset(json: String): Offset =
-    graft.meta.JValue.parse(json) match {
-      case graft.meta.JStr(w) => ArchiveOffset(w)
-      case other => throw new IllegalArgumentException(s"Bad archive offset $other")
-    }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val lo = start.asInstanceOf[ArchiveOffset].watermark
-    val hi = end.asInstanceOf[ArchiveOffset].watermark
-    val batch = lastBatch match {
-      case Some((l, h, files)) if l == lo && h == hi => files // cached this trigger
-      case _ => // checkpoint replay: re-derive from the (immutable) dir
-        listing().filter { st =>
-          val k = key(st.getPath.toString)
-          k > key(lo) && k <= key(hi)
-        }
-    }
-    batch.flatMap(st => planFile(st.getPath.toString, st.getLen)).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = factory
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** A window of file bytes `[base, loadedEnd)` grown lazily by positioned

@@ -16,6 +16,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Warc
+import graft.sources.{LandingDir, LandingDirStream}
 import graft.sources.nc.SerializableHadoopConf
 
 /** DataSource V2 batch reader for WARC archives —
@@ -115,8 +116,8 @@ object WarcTable {
       .map(_.toLong).getOrElse(128L << 20)
     val maxMember = Option(options.get("maxMemberBytes"))
       .map(_.toLong).getOrElse(256L << 20)
-    val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
-    val files = ArchiveSplit.listFiles(conf, paths, isWarcName)
+    val maxFiles = LandingDir.maxFilesPerTrigger(options)
+    val files = LandingDir.list(conf, paths, isWarcName)
       .map(st => (st.getPath.toString, st.getLen))
     new WarcTable(files, conf, maxSplit, maxMember, paths, maxFiles)
   }
@@ -151,16 +152,19 @@ final class WarcScan(table: WarcTable, required: StructType)
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
+  private def partitionsOfFile(path: String, len: Long): Seq[InputPartition] =
+    ArchiveSplit.ranges(len, table.maxSplitBytes).map { case (s, e) =>
+      WarcInputPartition(path, s, e, len, WarcTable.codecOf(path),
+        table.maxMemberBytes, required.fieldNames)
+    }
+
   /** Streaming over a landing dir: per-file admission, then the SAME
     * split partitions as the batch scan. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ArchiveMicroBatchStream(table.paths, table.conf,
+    new LandingDirStream(table.paths, table.conf,
       WarcTable.isWarcName, table.maxFilesPerTrigger,
-      (path, len) => ArchiveSplit.ranges(len, table.maxSplitBytes)
-        .map { case (s, e) => WarcInputPartition(path, s, e, len,
-          WarcTable.codecOf(path), table.maxMemberBytes,
-          required.fieldNames) },
+      st => partitionsOfFile(st.getPath.toString, st.getLen),
       createReaderFactory())
 
   override def description(): String =
@@ -169,13 +173,7 @@ final class WarcScan(table: WarcTable, required: StructType)
       s"ReadSchema: ${required.simpleString}"
 
   override def planInputPartitions(): Array[InputPartition] =
-    table.files.flatMap { case (path, len) =>
-      ArchiveSplit.ranges(len, table.maxSplitBytes).map { case (s, e) =>
-        WarcInputPartition(path, s, e, len,
-          WarcTable.codecOf(path), table.maxMemberBytes,
-          required.fieldNames)
-      }
-    }.toArray
+    table.files.flatMap { case (path, len) => partitionsOfFile(path, len) }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new WarcReaderFactory(new SerializableHadoopConf(table.conf))

@@ -16,6 +16,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Tar
+import graft.sources.{LandingDir, LandingDirStream}
 import graft.sources.nc.SerializableHadoopConf
 
 /** DataSource V2 batch reader for WebDataset shards —
@@ -103,8 +104,8 @@ object WebdatasetTable {
       .map(_.toLong).getOrElse(128L << 20)
     val maxMember = Option(options.get("maxMemberBytes"))
       .map(_.toLong).getOrElse(256L << 20)
-    val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
-    val files = ArchiveSplit.listFiles(conf, paths, isTarName)
+    val maxFiles = LandingDir.maxFilesPerTrigger(options)
+    val files = LandingDir.list(conf, paths, isTarName)
       .map(st => (st.getPath.toString, st.getLen))
     new WebdatasetTable(files, conf, maxSplit, maxMember, paths, maxFiles)
   }
@@ -165,9 +166,10 @@ final class WebdatasetScan(table: WebdatasetTable, required: StructType)
     * the SAME split partitions as the batch scan. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ArchiveMicroBatchStream(table.paths, table.conf,
+    new LandingDirStream(table.paths, table.conf,
       WebdatasetTable.isTarName, table.maxFilesPerTrigger,
-      partitionsOfFile, createReaderFactory())
+      st => partitionsOfFile(st.getPath.toString, st.getLen),
+      createReaderFactory())
 
   override def description(): String =
     s"graft-webdataset shards=${table.files.length}, " +

@@ -3,7 +3,7 @@ package graft.sources.archive
 import java.util.OptionalLong
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -18,6 +18,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Zip
+import graft.sources.{HeaderCache, LandingDir, LandingDirStream}
 import graft.sources.nc.SerializableHadoopConf
 
 /** DataSource V2 batch reader for ZIP archives —
@@ -27,8 +28,7 @@ import graft.sources.nc.SerializableHadoopConf
   * the central directory at the file tail is an exact member index, so
   * planning needs no byte scanning at all — the driver reads the tail
   * + directory (one or two positioned reads per file, memoized per
-  * (path, mtime, len) in a bounded LRU — the GRIB header-cache
-  * discipline) and bins CONSECUTIVE members into partitions of
+  * (path, mtime, len) in the shared `HeaderCache` LRU) and bins CONSECUTIVE members into partitions of
   * ≤ `maxSplitBytes` compressed bytes. Each task then does positioned
   * reads of exactly its members' byte ranges: no resync, no false-sync
   * residual, intra-file parallelism exact.
@@ -72,28 +72,17 @@ object ZipTable {
   private[archive] def isZipName(n: String): Boolean =
     n.toLowerCase.endsWith(".zip") || n.toLowerCase.endsWith(".epub")
 
-  /** Directory-cache bound (files); ACCESS-ordered LRU, the GRIB
-    * header-cache discipline. */
-  private[archive] var MaxCachedFiles = 4096
-  private val dirCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), Seq[Zip.Central]](
-          256, 0.75f, /* accessOrder = */ true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), Seq[Zip.Central]])
-            : Boolean = size() > MaxCachedFiles
-      })
+  /** Parsed central directories per (path, mtime, length). */
+  private val directories = new HeaderCache[Seq[Zip.Central]](4096)
 
   /** Read + parse one archive's central directory (driver-side, two
     * positioned reads: tail window, then the directory region). */
   private[archive] def directoryOf(conf: Configuration,
-      path: String, mtime: Long, len: Long): Seq[Zip.Central] = {
-    val key = (path, mtime, len)
-    val hit = dirCache.get(key)
-    if (hit != null) return hit
-    val p = new HPath(path)
-    val in = p.getFileSystem(conf).open(p)
-    val ms = try {
+      st: FileStatus): Seq[Zip.Central] = directories(st) { _ =>
+    val path = st.getPath.toString
+    val len = st.getLen
+    val in = st.getPath.getFileSystem(conf).open(st.getPath)
+    try {
       def readAt(off: Long, n: Int): Array[Byte] = {
         val take = math.min(n.toLong, len - off).toInt
         val b = new Array[Byte](math.max(0, take))
@@ -115,8 +104,6 @@ object ZipTable {
       // localOff values in the directory are already absolute
       Zip.parseCentral(0L, cdBytes, 0, nEntries)
     } finally in.close()
-    dirCache.put(key, ms)
-    ms
   }
 
   def resolve(options: CaseInsensitiveStringMap): ZipTable = {
@@ -126,15 +113,14 @@ object ZipTable {
     require(paths.nonEmpty, "zip scan needs a path")
     val maxSplit = Option(options.get("maxSplitBytes"))
       .map(_.toLong).getOrElse(128L << 20)
-    val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
-    val files = ArchiveSplit.listFiles(conf, paths, isZipName)
-      .map(st => (st.getPath.toString, st.getModificationTime, st.getLen))
+    val maxFiles = LandingDir.maxFilesPerTrigger(options)
+    val files = LandingDir.list(conf, paths, isZipName)
     new ZipTable(files, conf, maxSplit, paths, maxFiles)
   }
 }
 
 final class ZipTable(
-    val files: Seq[(String, Long, Long)],
+    val files: Seq[FileStatus],
     @transient val conf: Configuration,
     val maxSplitBytes: Long,
     val paths: Seq[String],
@@ -188,9 +174,8 @@ final class ZipScan(table: ZipTable, required: StructType, pushed: Array[Filter]
 
   /** One archive's partitions: members pruned by the pushed name
     * predicates, then CONSECUTIVE survivors binned by compressed size. */
-  private def partitionsOfFile(path: String, mtime: Long,
-      len: Long): Seq[InputPartition] = {
-    val members = ZipTable.directoryOf(table.conf, path, mtime, len)
+  private def partitionsOfFile(st: FileStatus): Seq[InputPartition] = {
+    val members = ZipTable.directoryOf(table.conf, st)
       .filter(c => !c.name.endsWith("/")) // directories carry no row
       .filter(keep)
     if (members.isEmpty) return Seq.empty
@@ -205,14 +190,8 @@ final class ZipScan(table: ZipTable, required: StructType, pushed: Array[Filter]
       cur += c; size += c.csize
     }
     if (cur.nonEmpty) groups += cur.toSeq
-    groups.map(g => ZipInputPartition(path, len, g, required.fieldNames)).toSeq
-  }
-
-  // streaming reuses this per admitted file (mtime from a fresh stat)
-  private[archive] def partitionsForStream(path: String, len: Long): Seq[InputPartition] = {
-    val p = new HPath(path)
-    val st = p.getFileSystem(table.conf).getFileStatus(p)
-    partitionsOfFile(path, st.getModificationTime, len)
+    groups.map(g => ZipInputPartition(st.getPath.toString, st.getLen, g,
+      required.fieldNames)).toSeq
   }
 
   override def description(): String =
@@ -221,24 +200,22 @@ final class ZipScan(table: ZipTable, required: StructType, pushed: Array[Filter]
       s"ReadSchema: ${required.simpleString}"
 
   override def planInputPartitions(): Array[InputPartition] =
-    table.files.flatMap { case (path, mtime, len) =>
-      partitionsOfFile(path, mtime, len)
-    }.toArray
+    table.files.flatMap(partitionsOfFile).toArray
 
   /** Streaming over a landing dir of archives. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ArchiveMicroBatchStream(table.paths, table.conf,
+    new LandingDirStream(table.paths, table.conf,
       ZipTable.isZipName, table.maxFilesPerTrigger,
-      partitionsForStream, createReaderFactory())
+      partitionsOfFile, createReaderFactory())
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ZipReaderFactory(new SerializableHadoopConf(table.conf))
 
   /** EXACT stats — the directory is an index. */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val survivors = table.files.flatMap { case (p, m, l) =>
-      ZipTable.directoryOf(table.conf, p, m, l)
+    private val survivors = table.files.flatMap { st =>
+      ZipTable.directoryOf(table.conf, st)
         .filter(c => !c.name.endsWith("/")).filter(keep)
     }
     override def sizeInBytes(): OptionalLong =

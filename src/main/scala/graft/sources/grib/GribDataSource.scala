@@ -3,7 +3,7 @@ package graft.sources.grib
 import java.util.OptionalLong
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -16,6 +16,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sources.{HeaderCache, LandingDir, LandingDirStream, Manifest}
 import graft.sources.nc.{NcScan, SerializableHadoopConf}
 import GribFormat.GribMessage
 
@@ -104,79 +105,17 @@ object GribTable {
   private[grib] def baseOf(m: GribMessage): java.time.LocalDateTime =
     if (m.baseTime == null) m.validTime else m.baseTime
 
-  /** Header-cache bound (files). `private[grib] var` so the eviction spec
-    * can shrink it; production never writes it. */
-  private[grib] var MaxCachedFiles = 4096
-  /** Cache-miss parses — observability for the eviction spec. */
-  private[grib] val headerParses = new java.util.concurrent.atomic.AtomicLong
+  /** Parsed message headers per (path, mtime, length). */
+  private[grib] val headers = new HeaderCache[Seq[GribMessage]](4096)
 
-  /** ACCESS-ordered LRU bounded at [[MaxCachedFiles]]: crossing the
-    * bound evicts only the oldest-touched entries, so planning a
-    * >bound-file archive re-parses the spillover — not, as the old
-    * clear-all did, the entire working set on every subsequent plan. */
-  private val messageCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), Seq[GribMessage]](
-          256, 0.75f, /* accessOrder = */ true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), Seq[GribMessage]])
-            : Boolean = size() > MaxCachedFiles
-      })
-
-  /** Spec hook: start the LRU from empty so eviction order is
-    * deterministic (production never calls this). */
-  private[grib] def clearHeaderCache(): Unit = messageCache.clear()
-
-  private[grib] def cachedMessages(conf: Configuration,
-      st: org.apache.hadoop.fs.FileStatus): Seq[GribMessage] = {
-    val key = (st.getPath.toString, st.getModificationTime, st.getLen)
-    val hit = messageCache.get(key)
-    if (hit != null) hit
-    else {
-      // parse OUTSIDE the map lock: the planner's bounded pool parses
-      // misses concurrently, and holding the LRU lock through remote I/O
-      // would serialize them; a rare duplicate parse of one file is
-      // cheaper than that convoy
-      headerParses.incrementAndGet()
+  /** Every file's message headers, in order — a cache miss is one header
+    * walk (payloads are skipped, not read). */
+  private[grib] def messagesOf(conf: Configuration,
+      files: Seq[FileStatus]): Seq[Seq[GribMessage]] =
+    headers.all(files) { st =>
       val in = st.getPath.getFileSystem(conf).open(st.getPath)
-      val ms = try GribFormat.parseMessages(in) finally in.close()
-      messageCache.put(key, ms)
-      ms
+      try GribFormat.parseMessages(in) finally in.close()
     }
-  }
-
-  private def isGrib(name: String): Boolean =
-    graft.sources.Manifest.isGrib(name)
-
-  /** Natural-sorted GRIB files under the given paths (dirs expand; a
-    * missing dir — a streaming landing dir not yet created — is empty).
-    * Path statuses resolve on a bounded pool: a manager passing one
-    * explicit path per archive FILE must not pay O(files) SERIAL remote
-    * round trips at planning. */
-  private[grib] def listGribFiles(conf: Configuration,
-      paths: Seq[String]): Seq[org.apache.hadoop.fs.FileStatus] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.traverse(paths) { p0 =>
-      Future(scala.concurrent.blocking {
-        val p = new HPath(p0)
-        val fs = p.getFileSystem(conf)
-        // one RPC, not exists + getFileStatus
-        try {
-          val st = fs.getFileStatus(p)
-          if (st.isDirectory)
-            fs.listStatus(p).toSeq.filter(_.isFile)
-              .filter(f => isGrib(f.getPath.getName))
-          else Seq(st)
-        } catch {
-          case _: java.io.FileNotFoundException =>
-            Seq.empty[org.apache.hadoop.fs.FileStatus]
-        }
-      })
-    }, Duration.Inf).flatten
-      .sortBy(st => graft.sources.Manifest.naturalKey(st.getPath.toString))
-  }
 
   /** Per-file interval-window keys straight from the memoized message
     * HEADERS — zero payload decode, for manager-level window checks: the
@@ -191,37 +130,16 @@ object GribTable {
       ref: java.time.LocalDateTime, end: Long, start: Long)
   private[graft] def windowKeys(conf: Configuration, paths: Seq[String])
       : Seq[(String, Seq[WindowKey])] = {
-    val files = listGribFiles(conf, paths)
-    parseParallel(conf, files)
-    files.map(st => st.getPath.toString ->
-      cachedMessages(conf, st).map(m => WindowKey(
+    val files = LandingDir.list(conf, paths, Manifest.isGrib)
+    files.zip(messagesOf(conf, files)).map { case (st, ms) =>
+      st.getPath.toString -> ms.map(m => WindowKey(
         m.paramId, m.member, m.derived, m.levelType,
         java.lang.Double.doubleToLongBits(m.level),
         java.lang.Double.doubleToLongBits(m.levelTo),
         m.probType, java.lang.Double.doubleToLongBits(m.probLo),
         java.lang.Double.doubleToLongBits(m.probHi), m.percentile,
         baseOf(m), m.stepMinutes,
-        m.stepStartMinutes)).distinct)
-  }
-
-  /** Parse the cache MISSES on a bounded pool — header walks are one
-    * remote round-trip per file (payloads are skipped, not read), and
-    * `resolve` runs twice per read (inferSchema, then getTable), so
-    * planning a thousand-file archive must not be O(files) SERIAL I/O.
-    * Same discipline as the NC scan's layout planning. */
-  private[grib] def parseParallel(conf: Configuration,
-      files: Seq[org.apache.hadoop.fs.FileStatus]): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val misses = files.filter(st => !messageCache.containsKey(
-      (st.getPath.toString, st.getModificationTime, st.getLen)))
-    if (misses.nonEmpty) {
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(
-        Future.traverse(misses) { st =>
-          // blocking{}: Hadoop IO — let the pool grow past CPU count
-          Future(scala.concurrent.blocking { cachedMessages(conf, st) })
-        }, Duration.Inf)
+        m.stepStartMinutes)).distinct
     }
   }
 
@@ -230,11 +148,9 @@ object GribTable {
     val conf = spark.sparkContext.hadoopConfiguration
     val paths = Option(options.get("path")).toSeq
     require(paths.nonEmpty, "grib1 scan needs a path")
-    val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
-    val files = listGribFiles(conf, paths)
-    parseParallel(conf, files)
-    val byFile = files.map(st =>
-      st.getPath.toString -> cachedMessages(conf, st))
+    val maxFiles = LandingDir.maxFilesPerTrigger(options)
+    val files = LandingDir.list(conf, paths, Manifest.isGrib)
+    val byFile = files.map(_.getPath.toString).zip(messagesOf(conf, files))
     // spectral fields have no lat/lon rows — they scan through the
     // coefficient-space source, never silently through this schema
     byFile.find(_._2.exists(_.spectral.isDefined)).foreach { case (p, _) =>
@@ -243,10 +159,6 @@ object GribTable {
           "with spark.read.format(\"grib-spectral\") (rows: time, param, " +
           "member, m, n, part, value)")
     }
-    // size-bounded LRU eviction happens inline in cachedMessages — a
-    // long-lived driver scanning many (or rewritten — each rewrite is a
-    // fresh (path,mtime,len) key) GRIB files stays bounded without ever
-    // dropping its working set
     new GribTable(byFile, conf, paths, maxFiles)
   }
 }
@@ -340,15 +252,17 @@ final class GribScan(
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GribMicroBatchStream(this, paths, conf, maxFilesPerTrigger)
+    new LandingDirStream(paths, conf, Manifest.isGrib,
+      maxFilesPerTrigger, planFile, createReaderFactory())
 
   /** Streaming batches reuse the batch pruning + partitioning verbatim. */
-  private[grib] def partitionsOf(path: String,
-      ms: Seq[GribMessage]): Seq[InputPartition] =
+  private def planFile(st: FileStatus): Seq[InputPartition] = {
+    val path = st.getPath.toString
+    val ms = GribTable.messagesOf(conf, Seq(st)).head
     GribSplit.pack(ms.filter(keep).map(path -> _)).map { case (p, packed) =>
       GribInputPartition(p, packed, required.fieldNames)
     }
-  private[grib] def readerFactory: PartitionReaderFactory = createReaderFactory()
+  }
 
   /** SAME conversion as the filter-literal side (NcScan.toKey) so the
     * Double equality in keep() is exact by construction. */
@@ -599,113 +513,4 @@ final class GribPartitionReader(part: GribInputPartition, conf: Configuration)
   }
 
   override def close(): Unit = in.close()
-}
-
-/** Streaming offset: the natural-order key watermark of the last admitted
-  * file (same convention as the NetCDF stream — part10 sorts after part9). */
-final case class GribOffset(watermark: String)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = graft.meta.JStr(watermark).render
-}
-
-/** MICRO_BATCH_READ over a GRIB landing directory — the live-feed shape of
-  * operational archives (MRMS/RTMA drop a new GRIB file per product cycle).
-  * Same contract as [[graft.sources.nc.NcMicroBatchStream]]: files are
-  * IMMUTABLE, the directory is append-only with naturally-increasing names,
-  * offsets are filename watermarks that only move forward, and
-  * `maxFilesPerTrigger` bounds each batch so attaching to a pre-populated
-  * archive drains it incrementally. Message pruning and the positioned-slab
-  * reader are the batch scan's, verbatim. */
-final class GribMicroBatchStream(
-    scan: GribScan,
-    paths: Seq[String],
-    @transient conf: Configuration,
-    maxFilesPerTrigger: Option[Int])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit, ReadMaxFiles}
-
-  require(paths.nonEmpty, "grib streaming needs the source paths")
-
-  private def key(p: String): String = graft.sources.Manifest.naturalKey(p)
-
-  private def listing(): Seq[org.apache.hadoop.fs.FileStatus] =
-    GribTable.listGribFiles(conf, paths)
-
-  /** One listing per trigger: latestOffset selects the batch and caches it
-    * for the planInputPartitions call that follows. */
-  @volatile private var lastBatch: Option[(String, String,
-    Seq[org.apache.hadoop.fs.FileStatus])] = None
-
-  @volatile private var availableNowTarget: Option[String] = None
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    val files = listing()
-    availableNowTarget = Some(
-      if (files.isEmpty) "" else files.last.getPath.toString)
-  }
-
-  override def reportLatestOffset(): Offset = {
-    val files = listing()
-    GribOffset(if (files.isEmpty) "" else files.last.getPath.toString)
-  }
-
-  override def initialOffset(): Offset = GribOffset("")
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxFilesPerTrigger.map(n => ReadLimit.maxFiles(n): ReadLimit)
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(start, limit) is used (SupportsAdmissionControl)")
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val lo = start.asInstanceOf[GribOffset].watermark
-    val candidates = listing()
-      .filter(st => key(st.getPath.toString) > key(lo))
-      .filter(st => availableNowTarget.forall(t =>
-        key(st.getPath.toString) <= key(t)))
-    val admitted = limit match {
-      case m: ReadMaxFiles => candidates.take(m.maxFiles())
-      case _ => candidates
-    }
-    if (admitted.isEmpty) { lastBatch = None; start }
-    else {
-      val hi = admitted.last.getPath.toString
-      lastBatch = Some((lo, hi, admitted))
-      GribOffset(hi)
-    }
-  }
-
-  override def deserializeOffset(json: String): Offset =
-    graft.meta.JValue.parse(json) match {
-      case graft.meta.JStr(w) => GribOffset(w)
-      case other => throw new IllegalArgumentException(s"Bad GRIB offset $other")
-    }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val lo = start.asInstanceOf[GribOffset].watermark
-    val hi = end.asInstanceOf[GribOffset].watermark
-    val batch = lastBatch match {
-      case Some((l, h, files)) if l == lo && h == hi => files // cached this trigger
-      case _ => // checkpoint replay: re-derive from the (immutable) dir
-        listing().filter { st =>
-          val k = key(st.getPath.toString)
-          k > key(lo) && k <= key(hi)
-        }
-    }
-    batch.flatMap { st =>
-      scan.partitionsOf(st.getPath.toString,
-        GribTable.cachedMessages(conf, st))
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    scan.readerFactory // identical reader path as batch
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }

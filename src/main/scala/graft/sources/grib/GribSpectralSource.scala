@@ -80,12 +80,10 @@ object GribSpectralTable {
     val conf = spark.sparkContext.hadoopConfiguration
     val paths = Option(options.get("path")).toSeq
     require(paths.nonEmpty, "grib-spectral scan needs a path")
-    val files = GribTable.listGribFiles(conf, paths)
-    GribTable.parseParallel(conf, files) // bounded-pool header fan-out
-    val byFile = files.map(st =>
-      st.getPath.toString -> GribTable.cachedMessages(conf, st))
-    // the shared header cache is LRU-bounded inline (GribTable
-    // .cachedMessages) — no explicit eviction step needed here
+    val files = graft.sources.LandingDir.list(conf, paths,
+      graft.sources.Manifest.isGrib)
+    val byFile = files.map(_.getPath.toString)
+      .zip(GribTable.messagesOf(conf, files))
     byFile.find(_._2.exists(_.spectral.isEmpty)).foreach { case (p, _) =>
       throw new IllegalArgumentException(
         s"$p holds gridded (lat/lon) fields — read them with " +

@@ -5,7 +5,7 @@ import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -18,6 +18,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sources.{HeaderCache, LandingDir, LandingDirStream, Manifest}
 import NcFormat._
 
 /** DataSource V2 batch reader for classic NetCDF grids — S9's real form
@@ -154,11 +155,14 @@ object NcTable {
       providedSchema: Option[StructType]): Table with SupportsRead = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val paths: Seq[String] = Option(options.get("paths")) match {
-      case Some(js) => "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(js)
-        .map(_.group(1)).toSeq
+      case Some(js) => // minimal JSON-array-of-strings decode
+        "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(js).map(_.group(1)).toSeq
       case None => Option(options.get("path")).toSeq
     }
-    val files = if (paths.nonEmpty) listFiles(conf, paths) else Seq.empty
+    val maxFilesPerTrigger = LandingDir.maxFilesPerTrigger(options)
+    val splitBytes = Option(options.get("splitBytes")).map(_.toLong)
+      .getOrElse(128L * 1024 * 1024)
+    val files = LandingDir.list(conf, paths, Manifest.isNetcdf)
     val hdf5 = files.headOption.exists { st =>
       val in = st.getPath.getFileSystem(conf).open(st.getPath)
       val magic = new Array[Byte](8)
@@ -166,50 +170,36 @@ object NcTable {
       catch { case _: java.io.EOFException => false }
       finally in.close()
     }
-    if (!hdf5) resolve(options, providedSchema)
+    if (!hdf5)
+      resolve(conf, paths, files, splitBytes, maxFilesPerTrigger, providedSchema)
     else {
-      val splitBytes = Option(options.get("splitBytes")).map(_.toLong)
-        .getOrElse(128L * 1024 * 1024)
       // xarray's group= addressing for grouped netCDF-4 files: scan ONE
       // group's variables; an unselected grouped file refuses by name
       val group = Option(options.get("group")).filter(_.nonEmpty)
       val filePaths = files.map(_.getPath.toString)
-      // resolve runs twice per read (inferSchema, then getTable) and the
-      // manifest walks every file's metadata — memoize per (path, mtime,
-      // length) set like the classic-NC layout cache
-      val key = files.map(st =>
-        (st.getPath.toString + group.fold("")("#" + _),
-          st.getModificationTime, st.getLen))
-      val store = h5StoreCache.computeIfAbsent(key, _ =>
+      // the manifest walks every file's metadata: memoize per file set
+      val store = h5Stores.combined(files, group)(
         graft.sources.zarr.ZarrMeta.resolveRefsDoc(
           graft.sources.h5.Hdf5Kerchunk.combineHdf5(conf, filePaths, group)))
-      if (h5StoreCache.size > 1024) h5StoreCache.clear()
       val label = paths.mkString(",") +
         (if (filePaths.length > 1) s" (${filePaths.length} nc4 files)" else "")
       graft.sources.zarr.ZarrTable.fromStore(conf, label, store, splitBytes)
     }
   }
 
-  private val h5StoreCache = new java.util.concurrent.ConcurrentHashMap[
-    Seq[(String, Long, Long)], graft.sources.zarr.ZarrMeta.ResolvedStore]()
+  /** netCDF-4 combines (kerchunk manifest → zarr store) per file set and
+    * group. */
+  private val h5Stores =
+    new HeaderCache[graft.sources.zarr.ZarrMeta.ResolvedStore](1024)
 
-  def resolve(options: CaseInsensitiveStringMap,
-      providedSchema: Option[StructType] = None): NcTable = {
-    val spark = SparkSession.active
-    val conf = spark.sparkContext.hadoopConfiguration
-    val paths: Seq[String] =
-      Option(options.get("paths")) match {
-        case Some(js) => // minimal JSON-array-of-strings decode
-          "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(js).map(_.group(1)).toSeq
-        case None => Option(options.get("path")).toSeq
-      }
+  /** Classic-NetCDF layouts per (path, mtime, length). */
+  private[sources] val layouts = new HeaderCache[FileLayout](4096)
+
+  private def resolve(conf: Configuration, paths: Seq[String],
+      files: Seq[FileStatus], splitBytes: Long,
+      maxFilesPerTrigger: Option[Int],
+      providedSchema: Option[StructType]): NcTable = {
     require(paths.nonEmpty, "netcdf scan needs a path")
-    val files = listFiles(conf, paths)
-    val splitBytes = Option(options.get("splitBytes")).map(_.toLong)
-      .getOrElse(128L * 1024 * 1024)
-    val maxFilesPerTrigger = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
-    maxFilesPerTrigger.foreach(n => require(n > 0,
-      s"maxFilesPerTrigger must be positive, got $n (0 would stall the stream silently)"))
     if (files.isEmpty) {
       // only a user/checkpoint-provided schema can stand in for the files
       require(providedSchema.isDefined,
@@ -217,82 +207,30 @@ object NcTable {
       return new NcTable(Seq.empty, providedSchema.get, splitBytes, conf, paths,
         maxFilesPerTrigger)
     }
-    // Header+axis reads are one remote round-trip per file and `resolve`
-    // runs twice per read (inferSchema, then getTable): memoize per
-    // (path, mtime, length) and fan the cache misses out on a bounded pool
-    // so planning a thousand-file archive is not O(files) SERIAL reads.
-    val layouts = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val misses = files.filter(st => !layoutCache.containsKey(cacheKey(st)))
-      if (misses.nonEmpty) {
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        Await.result(
-          Future.traverse(misses) { st =>
-            // blocking{}: these are blocking Hadoop IO calls — let the
-            // global fork-join pool grow past CPU count instead of
-            // deadlocking if resolve is ever entered from a global-EC thread
-            Future(scala.concurrent.blocking {
-              layoutCache.putIfAbsent(cacheKey(st),
-                layout(conf, st.getPath.toString))
-            })
-          }, Duration.Inf)
-      }
-      val out = files.map(st => Option(layoutCache.get(cacheKey(st)))
-        .getOrElse(layout(conf, st.getPath.toString)))
-      // evict AFTER serving this resolve — clearing before the map would
-      // re-read every header serially, defeating the cache exactly for the
-      // large archives it exists for
-      if (layoutCache.size > 4096) layoutCache.clear()
-      out
-    }
-    val first = layouts.head
+    val ls = layoutsOf(conf, files)
+    val first = ls.head
     val schema = scanSchemaOf(first)
     // every file must present the same scan schema (a multi-file archive is
     // one dataset split along the record dim, like the reference's
     // multi-file kerchunk combine, S10)
-    layouts.tail.foreach { l =>
+    ls.tail.foreach { l =>
       val s = scanSchemaOf(l)
       require(s == schema, s"${l.path} schema $s differs from ${first.path} $schema")
     }
     providedSchema.foreach(p => require(p == schema,
       s"Provided schema $p differs from the files' $schema"))
-    new NcTable(layouts, schema, splitBytes, conf, paths, maxFilesPerTrigger)
+    new NcTable(ls, schema, splitBytes, conf, paths, maxFilesPerTrigger)
   }
 
-  /** Listing in NATURAL-sort order (digit runs compare numerically) — the
-    * manifest convention (`Manifest.naturalKey`): part10.nc sorts AFTER
-    * part9.nc, so the streaming filename watermark never strands it. */
-  private[nc] def listFiles(conf: Configuration,
-      paths: Seq[String]): Seq[org.apache.hadoop.fs.FileStatus] =
-    paths.flatMap(expand(conf, _))
-      .sortBy(st => graft.sources.Manifest.naturalKey(st.getPath.toString))
+  /** Every file's layout, in order — shared by batch planning and the
+    * micro-batch stream. */
+  private[nc] def layoutsOf(conf: Configuration,
+      files: Seq[FileStatus]): Seq[FileLayout] =
+    layouts.all(files)(st => layout(conf, st.getPath.toString))
 
   private[nc] def scanSchemaOf(l: FileLayout): StructType = StructType(
     l.axes.map(a => StructField(a.name, a.sparkType, nullable = false)) ++
       l.dataVars.map(dataField))
-
-  /** Memoized per-(path, mtime, length) layout — shared by batch planning
-    * and the micro-batch stream. */
-  private[nc] def cachedLayout(conf: Configuration,
-      st: org.apache.hadoop.fs.FileStatus): FileLayout =
-    layoutCache.computeIfAbsent(cacheKey(st), _ => layout(conf, st.getPath.toString))
-
-  private val layoutCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), FileLayout]()
-
-  private def cacheKey(st: org.apache.hadoop.fs.FileStatus): (String, Long, Long) =
-    (st.getPath.toString, st.getModificationTime, st.getLen)
-
-  private def expand(conf: Configuration, path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val p = new HPath(path)
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    if (st.isDirectory)
-      fs.listStatus(p).toSeq.filter(_.isFile)
-        .filter(f => graft.sources.Manifest.isNetcdf(f.getPath.getName))
-    else Seq(st)
-  }
 
   private def layout(conf: Configuration, path: String): FileLayout = {
     val p = new HPath(path)
@@ -480,14 +418,6 @@ final class NcScan(
 
   override def readSchema(): StructType = required
 
-  private[nc] def fullSchema: StructType = tableSchema
-
-  /** Axis columns referenced by CLAIMED (fully-handled) pushed filters —
-    * a late-landing streamed file must keep these monotonic or the
-    * index-range rewrite would be wrong (no residual filter remains). */
-  private[nc] def pushedFilterRefs: Set[String] =
-    pushed.flatMap(_.references).toSet
-
   override def description(): String = {
     val ranges = layouts.headOption.map { first =>
       prunedRanges(first).map { r =>
@@ -512,7 +442,27 @@ final class NcScan(
     * in batch scans. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new NcMicroBatchStream(this, paths, conf, maxFilesPerTrigger)
+    new LandingDirStream(paths, conf, Manifest.isNetcdf, maxFilesPerTrigger,
+      planFile, createReaderFactory())
+
+  /** One landed file's partitions, planned exactly as in batch. */
+  private def planFile(st: FileStatus): Seq[InputPartition] = {
+    val l = NcTable.layoutsOf(conf, Seq(st)).head
+    // a late-landing file must present the stream's schema, like S10's
+    // identical-dims assertion in the batch combine
+    require(NcTable.scanSchemaOf(l) == tableSchema,
+      s"${l.path} schema ${NcTable.scanSchemaOf(l)} drifted from the " +
+        s"stream's $tableSchema")
+    // …and axes backing CLAIMED pushed filters must stay monotonic: the
+    // index-range rewrite is exact only then, and no residual filter
+    // remains in the plan to catch an out-of-order late file
+    pushed.flatMap(_.references).toSet.foreach { (ref: String) =>
+      l.axes.find(_.name == ref).foreach(a => require(a.monotonic,
+        s"${l.path}: axis $ref is not monotonic but a pushed filter " +
+          "references it — refuse rather than return wrong rows"))
+    }
+    partitionsFor(l)
+  }
 
   /** Pruned [lo, hi] per data dim, or None when any axis range is empty —
     * the whole file is skipped (file-level pruning, the F6 analog). */
@@ -535,7 +485,7 @@ final class NcScan(
   private def requiredVars(l: FileLayout): Seq[NcVar] =
     l.dataVars.filter(v => required.fieldNames.contains(v.name))
 
-  private[nc] def partitionsFor(l: FileLayout): Seq[NcInputPartition] =
+  private def partitionsFor(l: FileLayout): Seq[NcInputPartition] =
     prunedRanges(l) match {
       case None => Seq.empty
       case Some(ranges) =>
@@ -575,137 +525,6 @@ final class NcScan(
     override def sizeInBytes(): OptionalLong = OptionalLong.of(rows * math.max(1L, rowBytes))
     override def numRows(): OptionalLong = OptionalLong.of(rows)
   }
-}
-
-/** Offset = the NATURAL-sort-largest file path ingested so far ("" =
-  * nothing yet). JSON form is a quoted string. */
-final case class NcOffset(watermark: String)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = graft.meta.JStr(watermark).render
-}
-
-/** Micro-batch source over a landing directory.
-  *
-  * Contract (documented, like FileStreamSource's): landed files are
-  * IMMUTABLE and the directory is append-only with naturally-increasing
-  * names (the manifest convention — part10 sorts after part9 because
-  * comparisons use `Manifest.naturalKey`). Offsets only ever move forward
-  * (each latestOffset is anchored on the previous end), and
-  * `maxFilesPerTrigger` (table option) bounds how many files one batch
-  * admits, so attaching to a pre-populated archive drains it in bounded
-  * batches instead of one giant transaction. */
-final class NcMicroBatchStream(
-    scan: NcScan,
-    paths: Seq[String],
-    @transient conf: Configuration,
-    maxFilesPerTrigger: Option[Int])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit, ReadMaxFiles}
-
-  require(paths.nonEmpty, "netcdf streaming needs the source paths")
-
-  private def key(p: String): String = graft.sources.Manifest.naturalKey(p)
-
-  // NcTable.listFiles is already natural-sorted; filters below preserve it
-  private def listing(): Seq[org.apache.hadoop.fs.FileStatus] =
-    NcTable.listFiles(conf, paths)
-
-  /** One listing per trigger: latestOffset selects the batch and caches it
-    * for the planInputPartitions call that follows (object stores bill and
-    * throttle LIST calls). */
-  @volatile private var lastBatch: Option[(String, String,
-    Seq[org.apache.hadoop.fs.FileStatus])] = None
-
-  /** Trigger.AvailableNow target: pinned at query start so the
-    * MultiBatchExecutor drains up to exactly this point in
-    * maxFilesPerTrigger-bounded batches, then terminates. Without this
-    * interface Spark falls back to ONE single batch whose read limit
-    * would silently strand the backlog. */
-  @volatile private var availableNowTarget: Option[String] = None
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    val files = listing()
-    availableNowTarget = Some(
-      if (files.isEmpty) "" else files.last.getPath.toString)
-  }
-
-  override def reportLatestOffset(): Offset = {
-    val files = listing()
-    NcOffset(if (files.isEmpty) "" else files.last.getPath.toString)
-  }
-
-  override def initialOffset(): Offset = NcOffset("")
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxFilesPerTrigger.map(n => ReadLimit.maxFiles(n): ReadLimit)
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(start, limit) is used (SupportsAdmissionControl)")
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val lo = start.asInstanceOf[NcOffset].watermark
-    val candidates = listing()
-      .filter(st => key(st.getPath.toString) > key(lo))
-      .filter(st => availableNowTarget.forall(t =>
-        key(st.getPath.toString) <= key(t)))
-    val admitted = limit match {
-      case m: ReadMaxFiles => candidates.take(m.maxFiles())
-      case _ => candidates
-    }
-    if (admitted.isEmpty) { lastBatch = None; start }
-    else {
-      val hi = admitted.last.getPath.toString
-      lastBatch = Some((lo, hi, admitted))
-      NcOffset(hi)
-    }
-  }
-
-  override def deserializeOffset(json: String): Offset =
-    graft.meta.JValue.parse(json) match {
-      case graft.meta.JStr(w) => NcOffset(w)
-      case other => throw new IllegalArgumentException(s"Bad NC offset $other")
-    }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val lo = start.asInstanceOf[NcOffset].watermark
-    val hi = end.asInstanceOf[NcOffset].watermark
-    val batch = lastBatch match {
-      case Some((l, h, files)) if l == lo && h == hi => files // cached this trigger
-      case _ => // checkpoint replay: re-derive from the (immutable) dir
-        listing().filter { st =>
-          val k = key(st.getPath.toString)
-          k > key(lo) && k <= key(hi)
-        }
-    }
-    batch.flatMap { st =>
-      val l = NcTable.cachedLayout(conf, st)
-      // a late-landing file must present the stream's schema, like S10's
-      // identical-dims assertion in the batch combine
-      require(NcTable.scanSchemaOf(l) == scan.fullSchema,
-        s"${l.path} schema ${NcTable.scanSchemaOf(l)} drifted from the " +
-          s"stream's ${scan.fullSchema}")
-      // …and axes backing CLAIMED pushed filters must stay monotonic: the
-      // index-range rewrite is exact only then, and no residual filter
-      // remains in the plan to catch an out-of-order late file
-      scan.pushedFilterRefs.foreach { ref =>
-        l.axes.find(_.name == ref).foreach(a => require(a.monotonic,
-          s"${l.path}: axis $ref is not monotonic but a pushed filter " +
-            "references it — refuse rather than return wrong rows"))
-      }
-      scan.partitionsFor(l)
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    scan.createReaderFactory() // identical reader path as batch
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 sealed trait NcColSpec extends Serializable

@@ -3,7 +3,7 @@ package graft.sources.tiff
 import java.util.OptionalLong
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -17,6 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.{HeaderCache, LandingDir, LandingDirStream}
 import graft.sources.nc.SerializableHadoopConf
 import TiffFormat.TiffRaster
 
@@ -102,68 +103,26 @@ object TiffTable {
     StructField("band", IntegerType, nullable = false),
     StructField("value", DoubleType, nullable = true)))
 
-  /** Header-cache bound (files); `private[tiff] var` for the eviction
-    * spec, like the GRIB cache. */
-  private[tiff] var MaxCachedFiles = 4096
-  private[tiff] val headerParses = new java.util.concurrent.atomic.AtomicLong
+  /** Parsed IFDs per (path, mtime, length, overview level). */
+  private[tiff] val headers = new HeaderCache[TiffRaster](4096)
 
-  private val rasterCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long, Int), TiffRaster](
-          256, 0.75f, /* accessOrder = */ true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long, Int), TiffRaster]): Boolean =
-          size() > MaxCachedFiles
-      })
-  private[tiff] def clearHeaderCache(): Unit = rasterCache.clear()
-
-  /** Positioned header reads against one open stream per parse. */
-  private[tiff] def parseFile(conf: Configuration,
-      st: org.apache.hadoop.fs.FileStatus, overview: Int = 0): TiffRaster = {
-    val key = (st.getPath.toString, st.getModificationTime, st.getLen, overview)
-    val hit = rasterCache.get(key)
-    if (hit != null) hit
-    else {
-      headerParses.incrementAndGet()
+  /** Every file's raster header at the given overview level, in order:
+    * positioned header reads against one open stream per parse. */
+  private[tiff] def rastersOf(conf: Configuration, files: Seq[FileStatus],
+      overview: Int = 0): Seq[TiffRaster] =
+    headers.all(files, overview) { st =>
       val in = st.getPath.getFileSystem(conf).open(st.getPath)
-      val r = try TiffFormat.parse((off, len) => {
+      try TiffFormat.parse((off, len) => {
         val n = math.min(len.toLong, st.getLen - off).toInt
         val b = new Array[Byte](math.max(0, n))
         if (n > 0) in.readFully(off, b)
         b
       }, st.getLen, overview) finally in.close()
-      rasterCache.put(key, r)
-      r
     }
-  }
 
-  private def isTiff(name: String): Boolean = {
+  private[tiff] def isTiff(name: String): Boolean = {
     val n = name.toLowerCase
     n.endsWith(".tif") || n.endsWith(".tiff")
-  }
-
-  private[tiff] def listTiffFiles(conf: Configuration,
-      paths: Seq[String]): Seq[org.apache.hadoop.fs.FileStatus] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.traverse(paths) { p0 =>
-      Future(scala.concurrent.blocking {
-        val p = new HPath(p0)
-        val fs = p.getFileSystem(conf)
-        try {
-          val st = fs.getFileStatus(p)
-          if (st.isDirectory)
-            fs.listStatus(p).toSeq.filter(_.isFile)
-              .filter(f => isTiff(f.getPath.getName))
-          else Seq(st)
-        } catch {
-          case _: java.io.FileNotFoundException =>
-            Seq.empty[org.apache.hadoop.fs.FileStatus]
-        }
-      })
-    }, Duration.Inf).flatten
-      .sortBy(st => graft.sources.Manifest.naturalKey(st.getPath.toString))
   }
 
   /** Per-file band counts straight from the memoized HEADERS — zero
@@ -171,8 +130,8 @@ object TiffTable {
     * pattern). */
   private[graft] def bandCounts(conf: Configuration,
       paths: Seq[String]): Seq[(String, Int)] = {
-    val files = listTiffFiles(conf, paths)
-    files.map(st => st.getPath.toString -> parseFile(conf, st).bands)
+    val files = LandingDir.list(conf, paths, isTiff)
+    files.map(_.getPath.toString).zip(rastersOf(conf, files).map(_.bands))
   }
 
   /** Identity of a read for the inferSchema→getTable handoff. */
@@ -185,22 +144,13 @@ object TiffTable {
     val conf = spark.sparkContext.hadoopConfiguration
     val paths = Option(options.get("path")).toSeq
     require(paths.nonEmpty, "geotiff scan needs a path")
-    val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
+    val maxFiles = LandingDir.maxFilesPerTrigger(options)
     // COG pyramid level: 0 = full resolution (default); k = k-th
     // overview — a preview-scale scan plans 4^-k of the tile bytes
     val overview = Option(options.get("overview")).map(_.toInt).getOrElse(0)
-    val files = listTiffFiles(conf, paths)
-    // parse cache misses on a bounded pool — header-only, one remote
-    // round trip per file, never serial O(files) on the driver
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(Future.traverse(files)(st =>
-        Future(scala.concurrent.blocking(parseFile(conf, st, overview)))), Duration.Inf)
-    }
-    val byFile = files.map(st =>
-      st.getPath.toString -> parseFile(conf, st, overview))
+    val files = LandingDir.list(conf, paths, isTiff)
+    val byFile = files.map(_.getPath.toString)
+      .zip(rastersOf(conf, files, overview))
     // one CRS class per scan: a directory mixing projected and
     // geographic rasters has no single honest schema — refuse by name
     val (proj, geo) = byFile.partition(_._2.projected)
@@ -291,19 +241,19 @@ final class TiffScan(
   override def toBatch: Batch = this
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new TiffMicroBatchStream(this, paths, conf, maxFilesPerTrigger, overview)
+    new LandingDirStream(paths, conf, TiffTable.isTiff, maxFilesPerTrigger,
+      planFile, createReaderFactory())
 
   /** Streaming batches reuse the batch pruning + packing verbatim (one
     * file per call, so the budget sees that file's surviving tiles). */
-  private[tiff] def partitionsOf(path: String,
-      r: TiffRaster): Seq[InputPartition] =
-    fileTiles(path, r).toSeq.flatMap { f =>
+  private def planFile(st: FileStatus): Seq[InputPartition] =
+    fileTiles(st.getPath.toString,
+      TiffTable.rastersOf(conf, Seq(st), overview).head).toSeq.flatMap { f =>
       val openCost = graft.sources.SplitBudget.openCostInBytes
       val maxSplit = graft.sources.SplitBudget.maxSplitBytes(
         f._3.map(_.count).sum + openCost)
       packTiles(f, maxSplit, openCost)
     }
-  private[tiff] def readerFactory: PartitionReaderFactory = createReaderFactory()
 
   // all rasters in one scan share a CRS class (resolve() refused a mix)
   private val projectedCrs = byFile.headOption.exists(_._2.projected)
@@ -584,109 +534,4 @@ final class TiffPartitionReader(part: TiffInputPartition, conf: Configuration)
   }
 
   override def close(): Unit = in.close()
-}
-
-final case class TiffOffset(watermark: String)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = graft.meta.JStr(watermark).render
-}
-
-/** MICRO_BATCH_READ over a COG landing directory — the live-feed shape
-  * (one raster lands per date): natural-order filename watermark, the
-  * same admission-control / AvailableNow / checkpoint-replay protocol
-  * as the GRIB and NC streams, batch pruning + partitioning reused
-  * verbatim. */
-final class TiffMicroBatchStream(
-    scan: TiffScan,
-    paths: Seq[String],
-    @transient conf: Configuration,
-    maxFilesPerTrigger: Option[Int],
-    overview: Int = 0)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit, ReadMaxFiles}
-
-  require(paths.nonEmpty, "geotiff streaming needs the source paths")
-
-  private def key(p: String): String = graft.sources.Manifest.naturalKey(p)
-
-  private def listing(): Seq[org.apache.hadoop.fs.FileStatus] =
-    TiffTable.listTiffFiles(conf, paths)
-
-  /** One listing per trigger: latestOffset selects the batch and caches
-    * it for the planInputPartitions call that follows. */
-  @volatile private var lastBatch: Option[(String, String,
-    Seq[org.apache.hadoop.fs.FileStatus])] = None
-
-  @volatile private var availableNowTarget: Option[String] = None
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    val files = listing()
-    availableNowTarget = Some(
-      if (files.isEmpty) "" else files.last.getPath.toString)
-  }
-
-  override def reportLatestOffset(): Offset = {
-    val files = listing()
-    TiffOffset(if (files.isEmpty) "" else files.last.getPath.toString)
-  }
-
-  override def initialOffset(): Offset = TiffOffset("")
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxFilesPerTrigger.map(n => ReadLimit.maxFiles(n): ReadLimit)
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(start, limit) is used (SupportsAdmissionControl)")
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val lo = start.asInstanceOf[TiffOffset].watermark
-    val candidates = listing()
-      .filter(st => key(st.getPath.toString) > key(lo))
-      .filter(st => availableNowTarget.forall(t =>
-        key(st.getPath.toString) <= key(t)))
-    val admitted = limit match {
-      case m: ReadMaxFiles => candidates.take(m.maxFiles())
-      case _ => candidates
-    }
-    if (admitted.isEmpty) { lastBatch = None; start }
-    else {
-      val hi = admitted.last.getPath.toString
-      lastBatch = Some((lo, hi, admitted))
-      TiffOffset(hi)
-    }
-  }
-
-  override def deserializeOffset(json: String): Offset =
-    graft.meta.JValue.parse(json) match {
-      case graft.meta.JStr(w) => TiffOffset(w)
-      case other => throw new IllegalArgumentException(s"Bad COG offset $other")
-    }
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val lo = start.asInstanceOf[TiffOffset].watermark
-    val hi = end.asInstanceOf[TiffOffset].watermark
-    val batch = lastBatch match {
-      case Some((l, h, files)) if l == lo && h == hi => files // cached this trigger
-      case _ => // checkpoint replay: re-derive from the (immutable) dir
-        listing().filter { st =>
-          val k = key(st.getPath.toString)
-          k > key(lo) && k <= key(hi)
-        }
-    }
-    batch.flatMap { st =>
-      scan.partitionsOf(st.getPath.toString,
-        TiffTable.parseFile(conf, st, overview))
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    scan.readerFactory // identical reader path as batch
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }

@@ -154,7 +154,7 @@ class ManagerStreamingSpec extends SparkSpec {
     runOnce()
     assert(store.dataset().count() == 3 * 4)
     // second scheduled run picks up ONLY the newly landed file (the
-    // NcOffset watermark round-trips through the checkpoint)
+    // landing-dir watermark offset round-trips through the checkpoint)
     writeNcDaily(s"$root/input/b.nc", 4, 2, base = 9.0)
     runOnce()
     assert(store.dataset().count() == 5 * 4)

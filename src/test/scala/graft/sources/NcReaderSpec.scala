@@ -356,26 +356,37 @@ class NcReaderSpec extends SparkSpec {
   }
 
   test("a stream can start on an EMPTY landing dir with a provided schema") {
-    val dir = Files.createTempDirectory("ncstream_empty").toString
     val probe = Files.createTempDirectory("ncstream_probe").toString
     writeGrid(s"$probe/schema_probe.nc", nt = 1)
     val schema = spark.read.format("netcdf").load(probe).schema
-    val counts = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = spark.readStream.format("netcdf").schema(schema).load(dir)
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        counts.addAndGet(df.count()); ()
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory("ncstream_empty_ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable() // nothing yet — must not throw
-      assert(counts.get() == 0)
-      writeGrid(s"$dir/a.nc", nt = 2)
-      q.processAllAvailable()
-      assert(counts.get() == 2 * 3 * 4)
-    } finally q.stop()
+    // an existing empty dir, and one that is not created yet
+    val emptyDir = Files.createTempDirectory("ncstream_empty").toString
+    val notYetDir = s"${Files.createTempDirectory("ncstream_parent")}/landing"
+    for (dir <- Seq(emptyDir, notYetDir)) {
+      val counts = new java.util.concurrent.atomic.AtomicLong(0)
+      val q = spark.readStream.format("netcdf").schema(schema).load(dir)
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          counts.addAndGet(df.count()); ()
+        }
+        .option("checkpointLocation",
+          Files.createTempDirectory("ncstream_empty_ckpt").toString)
+        .start()
+      try {
+        q.processAllAvailable() // nothing yet — must not throw
+        assert(counts.get() == 0)
+        Files.createDirectories(java.nio.file.Paths.get(dir))
+        writeGrid(s"$dir/a.nc", nt = 2)
+        q.processAllAvailable()
+        assert(counts.get() == 2 * 3 * 4)
+      } finally q.stop()
+    }
+    // a BATCH read of a missing path has no schema to stand in: it fails,
+    // naming the path
+    val missing = s"${Files.createTempDirectory("nc_missing")}/nowhere"
+    val e = intercept[IllegalArgumentException](
+      spark.read.format("netcdf").load(missing))
+    assert(e.getMessage.contains(s"No .nc files under $missing"), e.getMessage)
   }
 
   test("maxFilesPerTrigger bounds each micro-batch (admission control)") {

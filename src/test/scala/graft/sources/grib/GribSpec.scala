@@ -136,35 +136,50 @@ class GribSpec extends SparkSpec {
 
   test("header cache is a true LRU: crossing the bound evicts only the " +
       "oldest-touched files — the working set survives a re-plan") {
-    val dir = Files.createTempDirectory("griblru").toString
-    val files = (0 until 6).map { i =>
-      val p = s"$dir/f$i.grb"
-      writeDay(p, day = i + 1, base = i * 10.0)
-      p
-    }
-    def parses(body: => Unit): Long = {
-      val before = GribTable.headerParses.get()
-      body
-      GribTable.headerParses.get() - before
-    }
-    def touch(ps: Seq[String]): Unit =
-      ps.foreach(p => assert(spark.read.format("grib1").load(p).count() == 12))
-    val oldBound = GribTable.MaxCachedFiles
-    GribTable.clearHeaderCache()
-    GribTable.MaxCachedFiles = 4
-    try {
-      // first pass parses every file once (the per-read double resolve
-      // hits the cache the second time)
-      assert(parses(touch(files)) == 6)
-      // the 4 most-recently-touched files are the working set — a second
-      // plan over them re-parses NOTHING
-      assert(parses(touch(files.drop(2))) == 0)
-      // the 2 oldest were evicted when the bound was crossed: exactly
-      // those re-parse, and only those — clear-all would re-parse all 6
-      assert(parses(touch(files.take(2))) == 2)
-    } finally {
-      GribTable.MaxCachedFiles = oldBound
-      GribTable.clearHeaderCache()
+    // (format, its shared header cache, file extension, write file i,
+    // rows per file): GRIB messages, and NetCDF layouts through the
+    // same cache
+    import graft.sources.nc.NcFormat
+    val inputs: Seq[(String, graft.sources.HeaderCache[_], String,
+        (String, Int) => Unit, Long)] = Seq(
+      ("grib1", GribTable.headers, ".grb",
+        (p: String, i: Int) => writeDay(p, day = i + 1, base = i * 10.0), 12L),
+      ("netcdf", graft.sources.nc.NcTable.layouts, ".nc",
+        (p: String, i: Int) => NcFormat.writeFile(spark, p,
+          dims = Seq("cell" -> 4), vars = Seq(NcFormat.WriteVar("v",
+            Seq("cell"), NcFormat.NcFloat, Array.tabulate(4)(_ + i * 10.0)))),
+        4L))
+    for ((format, cache, ext, write, rows) <- inputs) {
+      val dir = Files.createTempDirectory(s"${format}lru").toString
+      val files = (0 until 6).map { i =>
+        val p = s"$dir/f$i$ext"
+        write(p, i)
+        p
+      }
+      def parses(body: => Unit): Long = {
+        val before = cache.parses.get()
+        body
+        cache.parses.get() - before
+      }
+      def touch(ps: Seq[String]): Unit =
+        ps.foreach(p => assert(spark.read.format(format).load(p).count() == rows))
+      val oldBound = cache.maxFiles
+      cache.clear()
+      cache.maxFiles = 4
+      try {
+        // first pass parses every file once (the per-read double resolve
+        // hits the cache the second time)
+        assert(parses(touch(files)) == 6)
+        // the 4 most-recently-touched files are the working set — a second
+        // plan over them re-parses NOTHING
+        assert(parses(touch(files.drop(2))) == 0)
+        // the 2 oldest were evicted when the bound was crossed: exactly
+        // those re-parse, and only those — clear-all would re-parse all 6
+        assert(parses(touch(files.take(2))) == 2)
+      } finally {
+        cache.maxFiles = oldBound
+        cache.clear()
+      }
     }
   }
 }

@@ -204,37 +204,37 @@ class TiffScanSpec extends SparkSpec {
     for (d <- 1 to 6)
       writeTiff(s"$dir/f_$d.tif", 4, 4,
         Array(Array.tabulate(16)(_.toDouble)), 1, 8, 0, 4, 1.0)
-    TiffTable.clearHeaderCache()
-    val before = TiffTable.headerParses.get()
+    TiffTable.headers.clear()
+    val before = TiffTable.headers.parses.get()
     spark.read.format("geotiff").load(dir).count()
-    val afterFirst = TiffTable.headerParses.get()
+    val afterFirst = TiffTable.headers.parses.get()
     assert(afterFirst - before == 6, s"first plan parses all 6: ${afterFirst - before}")
     spark.read.format("geotiff").load(dir).count()
-    assert(TiffTable.headerParses.get() == afterFirst,
+    assert(TiffTable.headers.parses.get() == afterFirst,
       "second plan over cached headers must not re-parse")
     // crossing the bound evicts oldest-first, NOT clear-all: after a
     // 6-file plan under a 4-entry bound, the last-touched 4 stay hot
     // (0 re-parses) while the 2 evictees re-parse individually
-    val oldMax = TiffTable.MaxCachedFiles
+    val oldMax = TiffTable.headers.maxFiles
     try {
-      TiffTable.MaxCachedFiles = 4
-      TiffTable.clearHeaderCache()
-      val base = TiffTable.headerParses.get()
+      TiffTable.headers.maxFiles = 4
+      TiffTable.headers.clear()
+      val base = TiffTable.headers.parses.get()
       spark.read.format("geotiff").load(dir).count()
       // working set (6) > bound (4): the one plan may thrash up to 2x,
       // but it ends with the LAST-touched 4 files hot
-      val p1 = TiffTable.headerParses.get() - base
+      val p1 = TiffTable.headers.parses.get() - base
       assert(p1 >= 6 && p1 <= 12, s"bound-crossing plan parsed $p1")
       spark.read.format("geotiff").load(s"$dir/f_5.tif").count()
       spark.read.format("geotiff").load(s"$dir/f_6.tif").count()
-      assert(TiffTable.headerParses.get() - base == p1,
+      assert(TiffTable.headers.parses.get() - base == p1,
         "recently-touched files stay cached past the bound crossing")
       spark.read.format("geotiff").load(s"$dir/f_1.tif").count()
-      assert(TiffTable.headerParses.get() - base == p1 + 1,
+      assert(TiffTable.headers.parses.get() - base == p1 + 1,
         "an evicted file re-parses once, alone")
     } finally {
-      TiffTable.MaxCachedFiles = oldMax
-      TiffTable.clearHeaderCache()
+      TiffTable.headers.maxFiles = oldMax
+      TiffTable.headers.clear()
     }
   }
 
@@ -255,7 +255,7 @@ class TiffScanSpec extends SparkSpec {
     val st = new org.apache.hadoop.fs.Path(s"$dir/utm.tif")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/utm.tif"))
-    val raster = TiffTable.parseFile(spark.sparkContext.hadoopConfiguration, st)
+    val raster = TiffTable.rastersOf(spark.sparkContext.hadoopConfiguration, Seq(st)).head
     assert(raster.projected && raster.epsg == 32633)
   }
 
