@@ -2,6 +2,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
+    // local-iteration filter (comma-separated names); unset, the full
+    // board is timed. Deterministic (sorted) execution order: per-query
+    // timings stay comparable across rounds.
+    val selected = SparkEntry.registry
+      .select(sys.env.get("SPARK_GRAFT_BENCH_ONLY")).sortBy(_.name)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // One-bench-per-JVM is guaranteed by `run / fork := true`, but a
@@ -39,13 +44,6 @@ object Bench {
     // Untimed, as before; timing loop, sweep and JSON output unchanged.
     warmup(spark, sfDir)
     Housekeeping.releaseAll(spark, blocking = true)
-    // Deterministic (sorted) execution order: per-query timings stay
-    // comparable across rounds even as the query map grows (Map iteration
-    // order reshuffles whenever entries are added).
-    // local-iteration filter (comma-separated names); the driver sets no
-    // filter and always times the full board
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     // SPARK_GRAFT_BENCH_RUNS=N times each query N times and reports the
     // MIN — the variance-pinning mode behind SCALING.md's per-query
     // baseline (GC/JIT bands smear single runs ±30%; the min is the
@@ -65,56 +63,30 @@ object Bench {
     // unset no listener is attached and the timed path is byte-identical
     // to the r15 contract.
     val countsPath = sys.env.get("SPARK_GRAFT_BENCH_COUNTS")
-    final class Acc {
-      var jobs = 0; var stages = 0; var tasks = 0
-      var shufW = 0L; var shufR = 0L; var input = 0L
+    val stats = countsPath.map { _ =>
+      val l = new JobStats; spark.sparkContext.addSparkListener(l); l
     }
-    val current = new java.util.concurrent.atomic.AtomicReference[Acc](null)
-    if (countsPath.isDefined) {
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = {
-          val a = current.get(); if (a != null) a.synchronized { a.jobs += 1 }
-        }
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-          val a = current.get()
-          if (a != null) a.synchronized {
-            a.stages += 1
-            a.tasks += e.stageInfo.numTasks
-            val m = e.stageInfo.taskMetrics
-            if (m != null) {
-              a.shufW += m.shuffleWriteMetrics.bytesWritten
-              a.shufR += m.shuffleReadMetrics.totalBytesRead
-              a.input += m.inputMetrics.bytesRead
-            }
-          }
-        }
-      })
-    }
-    val counts = scala.collection.mutable.LinkedHashMap.empty[String, Acc]
+    val counts = scala.collection.mutable.LinkedHashMap.empty[String, Seq[JobRow]]
     // A query that throws is a failure, never a timing: it goes to stderr
     // and the counts file's `failed` list, and out of the result line.
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
+    val results = selected.flatMap { case Query(name, run, _) =>
       val t = (0 until math.max(1, runs)).map { i =>
-        val profiled = countsPath.isDefined && i == 0
-        if (profiled) current.set(new Acc)
+        val profiled = stats.filter(_ => i == 0)
+        profiled.foreach(_.reset())
         val t0 = System.nanoTime()
         val ok =
-          try { fn(spark, sfDir).count(); true }
+          try { run(spark, sfDir).count(); true }
           catch { case e: Throwable =>
             System.err.println(s"FAILED $name: $e")
             false
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        if (profiled) {
-          // listener events are async: let the bus drain before detaching
-          // the accumulator (outside the timed region — dt is already
-          // measured; this mode is never the driver's timing run anyway)
+        profiled.foreach { l =>
+          // listener events are async: let the bus drain before reading
+          // the rows (outside the timed region — dt is already measured)
           Thread.sleep(250)
-          counts(name) = current.getAndSet(null)
+          counts(name) = l.rows
         }
         // queries are independent: sweep residual checkpoint/cache blocks
         // so no run is timed under another's storage-memory pressure;
@@ -127,9 +99,10 @@ object Bench {
       else { failed += name; None }
     }
     countsPath.foreach { p =>
-      val body = (counts.map { case (name, a) =>
-        s"""  "$name": {"jobs":${a.jobs},"stages":${a.stages},"tasks":${a.tasks},""" +
-          s""""shuffle_write":${a.shufW},"shuffle_read":${a.shufR},"input":${a.input}}"""
+      val body = (counts.map { case (name, rs) =>
+        s"""  "$name": {"jobs":${rs.size},"stages":${rs.map(_.stages).sum},""" +
+          s""""tasks":${rs.map(_.tasks).sum},"shuffle_write":${rs.map(_.shuffleWrite).sum},""" +
+          s""""shuffle_read":${rs.map(_.shuffleRead).sum},"input":${rs.map(_.input).sum}}"""
       } ++ Seq(failed.map("\"" + _ + "\"").mkString("  \"failed\": [", ",", "]")))
         .mkString("{\n", ",\n", "\n}")
       java.nio.file.Files.write(java.nio.file.Paths.get(p),

@@ -1,18 +1,18 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Measurement harness (guide §1): run named [[SparkEntry.queries]] with a
-  * listener that prints per-job wall time, stage counts, task counts and
-  * shuffle bytes — the local-mode substitute for the Spark UI's job table
-  * (the UI is disabled in the bench contract). Dev-only; the bench and
-  * verify surfaces are untouched.
+/** Measurement harness (guide §1): run named [[SparkEntry.registry]] queries
+  * under a [[JobStats]] listener and print per-job wall time, stage counts,
+  * task counts and shuffle bytes — the local-mode substitute for the Spark
+  * UI's job table (the UI is disabled in the bench contract). Dev-only; the
+  * bench and verify surfaces are untouched.
   *
   * {{{ runMain graft.ProfileQuery <sfDir> <q1,q2,…> }}} */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ProfileQuery <sfDir> <q1,q2,…>")
+    val selected = SparkEntry.registry.select(Some(args(1)))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -26,54 +26,23 @@ object ProfileQuery {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    final case class JobRow(id: Int, desc: String, start: Long,
-      var end: Long = -1L, var stages: Int = 0, var tasks: Int = 0,
-      var shufWrite: Long = 0L, var shufRead: Long = 0L, var input: Long = 0L)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
-    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val d = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobs.put(e.jobId, JobRow(e.jobId, d, e.time))
-        e.stageIds.foreach(sid => stageToJob.put(sid, e.jobId))
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val r = jobs.get(e.jobId); if (r != null) r.end = e.time
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val jid = stageToJob.getOrDefault(e.stageInfo.stageId, -1)
-        val r = jobs.get(jid)
-        if (r != null) {
-          r.stages += 1
-          r.tasks += e.stageInfo.numTasks
-          val m = e.stageInfo.taskMetrics
-          if (m != null) {
-            r.shufWrite += m.shuffleWriteMetrics.bytesWritten
-            r.shufRead += m.shuffleReadMetrics.totalBytesRead
-            r.input += m.inputMetrics.bytesRead
-          }
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val stats = new JobStats
+    spark.sparkContext.addSparkListener(stats)
 
-    args(1).split(",").foreach { name =>
-      jobs.clear(); stageToJob.clear()
+    selected.foreach { case Query(name, run, _) =>
+      stats.reset()
       val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, args(0)).count()
+      val n = run(spark, args(0)).count()
       val dt = (System.nanoTime() - t0) / 1e9
       Thread.sleep(300) // let the listener bus drain
       println(f"===== $name%s  total ${dt}%.3f s  rows $n%d =====")
-      val rows = jobs.values().toArray(Array.empty[JobRow]).sortBy(_.id)
+      val rows = stats.rows
       rows.foreach { r =>
-        val ms = if (r.end < 0) -1L else r.end - r.start
-        println(f"  job ${r.id}%3d ${ms}%6d ms  stages ${r.stages}%2d tasks ${r.tasks}%4d " +
-          f"in ${r.input / 1024}%8d KiB  sw ${r.shufWrite / 1024}%6d KiB  " +
-          f"sr ${r.shufRead / 1024}%6d KiB  ${r.desc.take(60)}%s")
+        println(f"  job ${r.id}%3d ${r.wallMs}%6d ms  stages ${r.stages}%2d tasks ${r.tasks}%4d " +
+          f"in ${r.input / 1024}%8d KiB  sw ${r.shuffleWrite / 1024}%6d KiB  " +
+          f"sr ${r.shuffleRead / 1024}%6d KiB  ${r.desc.take(60)}%s")
       }
-      val acc = rows.filter(_.end > 0).map(r => r.end - r.start).sum
+      val acc = rows.filter(_.end > 0).map(_.wallMs).sum
       println(f"  jobs ${rows.length}%d  sum-of-job-wall ${acc}%d ms  " +
         f"(gap = driver/planning ${(dt * 1000 - acc).toLong}%d ms)")
       Housekeeping.releaseAll(spark, blocking = true)

@@ -13,9 +13,11 @@ object ExplainAudit {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { q =>
-      val plan = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+    val selected =
+      if (args.nonEmpty) SparkEntry.registry.select(Some(args.mkString(",")))
+      else SparkEntry.registry.queries.sortBy(_.name)
+    selected.foreach { case Query(q, run, _) =>
+      val plan = run(spark, dir).queryExecution.executedPlan.toString
       val ex = plan.linesIterator.count(_.contains("Exchange"))
       val bc = plan.linesIterator.count(_.contains("BroadcastExchange"))
       println(s"== $q: exchanges=$ex (broadcast=$bc)")

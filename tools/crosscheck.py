@@ -57,7 +57,9 @@ def main(sfdir, outdir):
             print(f"PASS {name} ({len(gn)} rows)")
             n_pass += 1
     print(f"\n{n_pass} pass / {n_fail} fail")
-    return 1 if n_fail else 0
+    if n_pass + n_fail == 0:
+        print("FAIL: no queries compared (empty oracle_sql.json)")
+    return 1 if n_fail or n_pass + n_fail == 0 else 0
 
 if __name__ == "__main__":
     sys.exit(main(sys.argv[1], sys.argv[2]))
