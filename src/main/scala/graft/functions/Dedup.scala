@@ -139,16 +139,31 @@ object Dedup {
       shingleSize: Int = 3,
       numHashes: Int = 64,
       bands: Int = 16,
-      threshold: Double = 0.9): DataFrame = {
+      threshold: Double = 0.9): DataFrame =
+    hashedNearDupPairs(df, idCol, textCol, shingleSize, numHashes, bands, threshold)._2
+
+  /** [[nearDupPairs]] together with the hash checkpoint its plan reads, for
+    * callers that materialize the pairs themselves and can free the
+    * checkpoint right after (see [[clusterCanonicalDedup]]). */
+  private def hashedNearDupPairs(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      shingleSize: Int,
+      numHashes: Int,
+      bands: Int,
+      threshold: Double): (DataFrame, DataFrame) = {
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be divisible by bands ($bands): " +
         "a truncated rowsPerBand would silently leave signature slots unused")
     val rowsPerBand = numHashes / bands
-    val hashed = df.select(col(idCol).as("doc_id"),
-        ColumnBridge.column(MinHashSignature(
-          ColumnBridge.expression(col(textCol)), shingleSize, numHashes)).as("sig"),
-        shinglePairHashes(col(textCol), shingleSize).getField("a").as("__sh"))
-      .localCheckpoint(true)
+    val hashed = graft.JobLabel(df.sparkSession, "graft.dedup: hash") {
+      df.select(col(idCol).as("doc_id"),
+          ColumnBridge.column(MinHashSignature(
+            ColumnBridge.expression(col(textCol)), shingleSize, numHashes)).as("sig"),
+          shinglePairHashes(col(textCol), shingleSize).getField("a").as("__sh"))
+        .localCheckpoint(true)
+    }
     // Shingle-less documents (< shingleSize tokens) carry the sentinel
     // signature — drop them before banding or every such pair would
     // band-collide as a spurious candidate.
@@ -167,7 +182,7 @@ object Dedup {
     // payload instead of the string): set sizes — and hence Jaccard — are
     // collision-exact in practice, matching the string-set computation.
     val sh = hashed.select(col("doc_id"), col("__sh"))
-    cands
+    val pairs = cands
       .join(sh.select(col("doc_id").as("doc_a"), col("__sh").as("sh_a")), Seq("doc_a"))
       .join(sh.select(col("doc_id").as("doc_b"), col("__sh").as("sh_b")), Seq("doc_b"))
       .withColumn("jaccard", round(
@@ -175,6 +190,7 @@ object Dedup {
           size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
+    (hashed, pairs)
   }
 
   // Shared decontamination inputs. ShinglePairHashes dedupes per row, so
@@ -507,131 +523,167 @@ object Dedup {
     * Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC'14). Returns `(node, component)` for every node appearing in
     * `pairs`, where `component` is the MINIMUM node id in the component —
-    * the canonical cluster id a dedup pass keeps.
+    * the canonical cluster id a dedup pass keeps. A node seen only in
+    * self-loops is its own component.
+    *
+    * The rounds run in [[starForest]] until the canonical `(u < v)` edge
+    * set is a forest of stars: no node is both a centre `u` and a leaf
+    * `v`, and no leaf has two centres. That set is a fixpoint of both star
+    * steps, every round preserves connectivity, and `u < v` makes each
+    * centre its star's minimum — so at that point every leaf `v` is
+    * labeled `u`, and every other node is its own minimum. Testing the
+    * edge set for that shape directly ends the loop on the round that
+    * reaches it; a test for "this round changed nothing" would spend one
+    * more full round confirming it. An input that is already a forest of
+    * stars (the common dedup case: each original with a few near copies)
+    * runs no round at all.
     *
     * Scale shape: each round is two hash aggregations + joins keyed on node
     * ids (8 bytes); no adjacency list is ever collected, and the edge set
     * only shrinks toward one star per component. Convergence is O(log n)
     * rounds on any graph (per the paper), each round a constant number of
-    * shuffles. Lineage is truncated per round with an eager
-    * `localCheckpoint` so the plan does not grow with the round count.
+    * shuffles. Lineage is truncated per round with a `localCheckpoint` so
+    * the plan does not grow with the round count. The result is ONE
+    * persisted frame; release it via `Housekeeping.release` when done.
     *
-    * Dedup pipelines chain this after [[nearDupPairs]]: pairs → components
-    * → keep the member equal to its component id (see
-    * [[clusterCanonicalDedup]]).
+    * A cluster-canonical dedup pass does not need this table: the members
+    * it drops are exactly the star leaves (see [[clusterCanonicalDedup]]).
     */
   def connectedComponents(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
       maxRounds: Int = 30): DataFrame = {
+    val spark = pairs.sparkSession
     // materialize the (possibly expensive — LSH + exact verify) pair
-    // pipeline ONCE; the node derivation and the edge iteration derive from
+    // pipeline ONCE; the edge iteration and the node set both derive from
     // the checkpoint, never from the original lineage (exchange reuse does
     // not span the separate actions below)
     var base: DataFrame = null
-    var edges: DataFrame = null
+    var forest: DataFrame = null
     try {
-    base = pairs
-      .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
-      .localCheckpoint(true)
-
-    // canonical undirected edges (u < v), self-loops dropped. LAZY
-    // checkpoint (r15): the round-0 digest below is the first action and
-    // materializes the blocks as it folds — no separate checkpoint job.
-    // `base` stays alive until the final labeling (the node set derives
-    // from it there), so releasing happens at the end, not here.
-    edges = base
-      .filter(col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("u"), greatest(col("x"), col("y")).as("v"))
-      .distinct()
-      .localCheckpoint(false)
-
-    // order-independent edge-set digest: (count, xor of pair hashes). Equal
-    // digests across a round ⇒ the set is (up to a 2⁻⁶⁴ collision) stable —
-    // at the fixpoint every component is a star centered at its minimum.
-    def digest(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), coalesce(
-        // BIT_XOR via sum-free fold: xor is exposed as an aggregate through
-        // expr; xxhash64 over both endpoints keys the digest to the pair
-        expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
-    var prev = digest(edges)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      // LARGE-STAR: for each center u over the SYMMETRIC adjacency, link
-      // every strictly larger neighbor to m = min(u, Γ(u)).
-      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val lsMin = sym.groupBy("u").agg(least(col("u"), min(col("v"))).as("m"))
-      // no distinct here: duplicate (m, v) edges are absorbed by the
-      // small-star groupBy/join and the final distinct — dropping the
-      // extra shuffle stage per round is worth the bounded dup carry
-      val large = sym.join(lsMin, "u")
-        .filter(col("v") > col("u"))
-        .select(col("m").as("u"), col("v"))
-      // SMALL-STAR: center = the larger endpoint of each canonical edge;
-      // link all of its ≤ neighbors (and itself) to their minimum. ONE
-      // join (r15): each joined (v, u, m) row emits BOTH output edges —
-      // (m, u) for the neighbor and (m, v) for the center — via explode,
-      // where the former union of two identical joins shuffled twice.
-      // LAZY checkpoint: the digest below is the round's SINGLE driver
-      // action — it materializes the checkpoint blocks as it folds the
-      // convergence digest, so a round costs one job, not checkpoint+probe.
-      val ssMin = large.groupBy(col("v")).agg(min(col("u")).as("m"))
-      val small = large.join(ssMin, "v")
-        .select(explode(array(
-          struct(col("m").as("u"), col("u").as("v")),
-          struct(col("m").as("u"), col("v").as("v")))).as("__e"))
-        .select(col("__e.u").as("u"), col("__e.v").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint(false)
-      val cur = digest(small)
-      converged = cur == prev
-      prev = cur
-      // the new round is materialized (the digest ran): the previous
-      // round's edge blocks are dead — release them before they pile up
-      graft.Housekeeping.release(edges)
-      edges = small
-      rounds += 1
-    }
-    require(converged, s"connectedComponents did not converge in $maxRounds rounds")
-
-    // at the fixpoint, edges are (componentMin, member): map members
-    // directly, centers (and nodes that lost all edges to self-loop
-    // dropping) to themselves. The node set derives from the still-live
-    // `base` checkpoint right here — it is only ever read once, so the
-    // former upfront node materialization was a whole job for nothing.
-    // Materialize the labeling, then release the base and edge frames —
-    // the caller receives ONE persisted frame (and releases it via
-    // Housekeeping when done).
-    val nodes = base.select(col("x").as("n"))
-      .union(base.select(col("y").as("n"))).distinct()
-    val out = nodes
-      .join(edges.select(col("v").as("n"), col("u").as("c")), Seq("n"), "left")
-      .select(col("n").as("node"), coalesce(col("c"), col("n")).as("component"))
-      .localCheckpoint(true)
-    graft.Housekeeping.release(base)
-    graft.Housekeeping.release(edges)
-    out
+      base = graft.JobLabel(spark, "graft.dedup: components base") {
+        pairs
+          .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
+          .localCheckpoint(true)
+      }
+      forest = starForest(base, "x", "y", maxRounds)
+      // leaves map to their centre; centres and self-loop-only nodes (their
+      // edges were dropped) to themselves. Materialize the labeling, then
+      // release the base and forest frames — the caller receives ONE
+      // persisted frame.
+      val nodes = base.select(col("x").as("n"))
+        .union(base.select(col("y").as("n"))).distinct()
+      val out = graft.JobLabel(spark, "graft.dedup: components label") {
+        nodes
+          .join(forest.select(col("v").as("n"), col("u").as("c")), Seq("n"), "left")
+          .select(col("n").as("node"), coalesce(col("c"), col("n")).as("component"))
+          .localCheckpoint(true)
+      }
+      graft.Housekeeping.release(base)
+      graft.Housekeeping.release(forest)
+      out
     } catch {
       case t: Throwable =>
-        // a failed round (or non-convergence) must not strand the live
-        // checkpoints — the caller's retry would stack a fresh set on top.
-        // Double-release of already-freed frames is a no-op.
-        Seq(base, edges).filter(_ != null)
-          .foreach(graft.Housekeeping.release)
+        // a failure must not strand the live checkpoints — the caller's
+        // retry would stack a fresh set on top. Double-release of
+        // already-freed frames is a no-op.
+        Seq(base, forest).filter(_ != null).foreach(graft.Housekeeping.release)
+        throw t
+    }
+  }
+
+  /** The large-star/small-star fixpoint of the `(aCol, bCol)` pair graph:
+    * checkpointed canonical edges `(u, v)`, `u < v`, forming one star per
+    * connected component (of more than one node), centred at the
+    * component's minimum. Self-loops are dropped. The returned frame is the
+    * only checkpoint left persisted; the caller releases it. */
+  private[functions] def starForest(
+      pairs: DataFrame,
+      aCol: String,
+      bCol: String,
+      maxRounds: Int): DataFrame = {
+    val spark = pairs.sparkSession
+    // Forest of stars ⇔ no node is a leaf (v) AND appears in any other
+    // edge: as a centre, or as the leaf of a second centre (edges are
+    // distinct). One aggregation over both roles, then `isEmpty` — the
+    // single driver action of a round. AQE runs a checkpointed plan's
+    // shuffle map stages when the checkpoint is built; the check's own
+    // map stage then materializes the checkpoint blocks.
+    def isStarForest(e: DataFrame): Boolean =
+      e.select(explode(array(
+          struct(col("u").as("n"), lit(0).as("leaf")),
+          struct(col("v").as("n"), lit(1).as("leaf")))).as("__r"))
+        .groupBy(col("__r.n").as("n"))
+        .agg(max(col("__r.leaf")).as("leaf"), count(lit(1)).as("roles"))
+        .filter(col("leaf") === 1 && col("roles") > 1)
+        .isEmpty
+
+    var edges: DataFrame = null
+    try {
+      // canonical undirected edges (u < v), self-loops dropped; LAZY
+      // checkpoint, materialized by the check
+      var done = graft.JobLabel(spark, "graft.dedup: star check") {
+        edges = pairs
+          .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
+          .filter(col("x") =!= col("y"))
+          .select(least(col("x"), col("y")).as("u"), greatest(col("x"), col("y")).as("v"))
+          .distinct()
+          .localCheckpoint(false)
+        isStarForest(edges)
+      }
+      var rounds = 0
+      while (!done && rounds < maxRounds) graft.JobLabel(spark, "graft.dedup: star round") {
+        // LARGE-STAR: for each center u over the SYMMETRIC adjacency, link
+        // every strictly larger neighbor to m = min(u, Γ(u)).
+        val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+        val lsMin = sym.groupBy("u").agg(least(col("u"), min(col("v"))).as("m"))
+        // no distinct here: duplicate (m, v) edges are absorbed by the
+        // small-star groupBy/join and the final distinct — dropping the
+        // extra shuffle stage per round is worth the bounded dup carry
+        val large = sym.join(lsMin, "u")
+          .filter(col("v") > col("u"))
+          .select(col("m").as("u"), col("v"))
+        // SMALL-STAR: center = the larger endpoint of each canonical edge;
+        // link all of its ≤ neighbors (and itself) to their minimum. ONE
+        // join: each joined (v, u, m) row emits BOTH output edges — (m, u)
+        // for the neighbor and (m, v) for the center — via explode.
+        val ssMin = large.groupBy(col("v")).agg(min(col("u")).as("m"))
+        val small = large.join(ssMin, "v")
+          .select(explode(array(
+            struct(col("m").as("u"), col("u").as("v")),
+            struct(col("m").as("u"), col("v").as("v")))).as("__e"))
+          .select(col("__e.u").as("u"), col("__e.v").as("v"))
+          .filter(col("u") =!= col("v"))
+          .distinct()
+          .localCheckpoint(false)
+        done = isStarForest(small)
+        // the new round is materialized (the check ran): the previous
+        // round's edge blocks are dead — release them before they pile up
+        graft.Housekeeping.release(edges)
+        edges = small
+        rounds += 1
+      }
+      require(done, s"connectedComponents did not converge in $maxRounds rounds")
+      edges
+    } catch {
+      case t: Throwable =>
+        if (edges != null) graft.Housekeeping.release(edges)
         throw t
     }
   }
 
   /** Cluster-canonical near-dedup: the full pipeline a corpus-scale dedup
     * actually runs — LSH candidates → exact verify ([[nearDupPairs]]) →
-    * [[connectedComponents]] → keep ONE doc per component (the minimum id)
-    * plus every doc in no near-dup pair. Returns the kept `(idCol)` rows. */
+    * connected components → keep ONE doc per component (the minimum id)
+    * plus every doc in no near-dup pair. Returns the kept `(idCol)` rows.
+    *
+    * No node is labeled: at the [[starForest]] fixpoint the members to drop
+    * (node ≠ its component minimum) are exactly the star leaves `v`, so the
+    * result is `df` anti-joined with them. The hash checkpoint behind the
+    * pairs is released once the forest is materialized; the result reads
+    * only `df` and the forest, whose one checkpoint `Housekeeping.release`
+    * on the result frees. */
   def clusterCanonicalDedup(
       df: DataFrame,
       idCol: String,
@@ -639,13 +691,16 @@ object Dedup {
       shingleSize: Int = 3,
       numHashes: Int = 64,
       bands: Int = 16,
-      threshold: Double = 0.9): DataFrame = {
-    val pairs = nearDupPairs(df, idCol, textCol, shingleSize, numHashes, bands, threshold)
-    val cc = connectedComponents(pairs, "doc_a", "doc_b")
-    df.select(col(idCol))
-      .join(cc.filter(col("node") =!= col("component"))
-        .select(col("node").as(idCol)), Seq(idCol), "left_anti")
-  }
+      threshold: Double = 0.9): DataFrame =
+    graft.JobLabel(df.sparkSession, "graft.dedup: cluster canonical") {
+      val (hashed, pairs) = hashedNearDupPairs(
+        df, idCol, textCol, shingleSize, numHashes, bands, threshold)
+      val forest =
+        try starForest(pairs, "doc_a", "doc_b", maxRounds = 30)
+        finally graft.Housekeeping.release(hashed)
+      df.select(col(idCol))
+        .join(forest.select(col("v").as(idCol)), Seq(idCol), "left_anti")
+    }
 
   /** Exact-substring deduplication (Lee et al. 2022, "Deduplicating
     * Training Data Makes Language Models Better"): every K-token span that

@@ -3,6 +3,7 @@ package graft.functions
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.graftbridge.TestBridge
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -27,18 +28,33 @@ class CheckpointLifecycleSpec extends SparkSpec {
   }
 
   test("connectedComponents retains exactly its result; release restores baseline") {
-    Housekeeping.releaseAll(spark)
-    val base = resident
-    val cc = Dedup.connectedComponents(pairsDf, "a", "b")
-    val rows = cc.collect()
-    assert(rows.length == 9)
-    assert(rows.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
-      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 6L,
-        7L -> 7L, 8L -> 7L, 9L -> 7L))
-    assert(resident == base + 1,
-      s"expected only the result frame persisted, found ${resident - base}")
-    Housekeeping.release(cc)
-    assert(resident == base, "release(result) must restore the baseline")
+    val sp = spark; import sp.implicits._
+    // the 5-doc corpus of ConnectedComponentsSpec: {1, 2, 3} near copies
+    val docs = Seq(
+      (1L, "alpha beta gamma delta epsilon"),
+      (2L, "alpha beta gamma delta epsilon"),
+      (3L, "alpha beta gamma delta epsilon"),
+      (4L, "totally different text goes here now"),
+      (5L, "another unrelated document body entirely")).toDF("doc_id", "text")
+    for ((name, run, expected) <- Seq[(String, () => DataFrame, Set[Seq[Any]])](
+        ("connectedComponents", () => Dedup.connectedComponents(pairsDf, "a", "b"),
+          Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 6L,
+            7L -> 7L, 8L -> 7L, 9L -> 7L).map { case (n, c) => Seq(n, c) }),
+        // the hash checkpoint behind the pairs is freed inside the call;
+        // only the star forest the result reads stays
+        ("clusterCanonicalDedup", () => Dedup.clusterCanonicalDedup(docs, "doc_id", "text",
+            shingleSize = 2, numHashes = 16, bands = 4, threshold = 0.8),
+          Set(Seq(1L), Seq(4L), Seq(5L))))) {
+      Housekeeping.releaseAll(spark)
+      val base = resident
+      val out = run()
+      val rows = out.collect().map(_.toSeq).toSeq
+      assert(rows.size == expected.size && rows.toSet == expected, s"$name: $rows")
+      assert(resident == base + 1,
+        s"$name: expected only the result frame persisted, found ${resident - base}")
+      Housekeeping.release(out)
+      assert(resident == base, s"$name: release(result) must restore the baseline")
+    }
   }
 
   test("pageRank / personalizedPageRank / triangleCounts retain exactly one frame") {
@@ -59,21 +75,36 @@ class CheckpointLifecycleSpec extends SparkSpec {
     }
   }
 
-  test("connectedComponents runs ONE driver action per round (digest materializes the lazy checkpoint)") {
+  test("connectedComponents runs ONE driver action per round (the star-forest check materializes the lazy checkpoint)") {
     val sp = spark; import sp.implicits._
-    val heads = new AtomicInteger
+    val checks = new AtomicInteger
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (funcName == "head") heads.incrementAndGet()
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        actions.add(funcName)
+        if (funcName == "isEmpty") checks.incrementAndGet()
+      }
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    def checksFor(pairs: DataFrame): Int = {
+      checks.set(0)
+      Dedup.connectedComponents(pairs, "a", "b").collect()
+      TestBridge.waitListenerBusEmpty(spark.sparkContext)
+      checks.get()
     }
     spark.listenerManager.register(listener)
     try {
-      // a single edge converges in exactly one round: digests = initial + 1
-      Dedup.connectedComponents(Seq((1L, 2L)).toDF("a", "b"), "a", "b").collect()
-      TestBridge.waitListenerBusEmpty(spark.sparkContext)
-      assert(heads.get() == 2,
-        s"expected 2 digest actions (initial + 1 round), saw ${heads.get()}")
+      // a single edge is already a star: the initial check, zero rounds
+      val single = checksFor(Seq((1L, 2L)).toDF("a", "b"))
+      assert(single == 1, s"expected 1 check action (initial, 0 rounds), saw $single")
+      // the 100-node chain: the digest loop this check replaced took 9
+      // `head` actions (initial + 8 rounds, the last confirming the 7th);
+      // the check stops on the round that reaches the forest
+      val chain = checksFor((0L until 99L).map(i => (i, i + 1)).toDF("a", "b"))
+      assert(chain == 9 - 1, s"expected 8 check actions (initial + 7 rounds), saw $chain")
+      // no driver action besides the checks, the checkpoints and the caller's collect
+      assert(actions.toArray(Array.empty[String]).toSet.subsetOf(Set("isEmpty", "localCheckpoint", "collect")),
+        s"unexpected actions: $actions")
     } finally {
       spark.listenerManager.unregister(listener)
       Housekeeping.releaseAll(spark)

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{Housekeeping, SparkSpec}
 
 class ConnectedComponentsSpec extends SparkSpec {
   private val sp = spark
@@ -50,6 +50,12 @@ class ConnectedComponentsSpec extends SparkSpec {
       val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
         .as[(Long, Long)].collect().toMap
       assert(got == expected, s"mismatch on n=$n m=$m edges=$edges")
+      val forest = Dedup.starForest(edges.toDF("a", "b"), "a", "b", maxRounds = 30)
+      val leaves = forest.select("v").as[Long].collect()
+      Housekeeping.release(forest)
+      assert(leaves.length == leaves.distinct.length &&
+        leaves.toSet == expected.collect { case (node, root) if node != root => node }.toSet,
+        s"star leaves != non-root nodes on n=$n m=$m edges=$edges")
     }
   }
 
@@ -84,5 +90,25 @@ class ConnectedComponentsSpec extends SparkSpec {
         shingleSize = 2, numHashes = 16, bands = 4, threshold = 0.8)
       .as[Long].collect().sorted
     assert(kept.toSeq == Seq(1L, 4L, 5L))
+  }
+
+  test("every job inside connectedComponents and clusterCanonicalDedup carries a graft. label") {
+    val pairs = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L), (20L, 20L))
+      .toDF("doc_a", "doc_b")
+    val docs = Seq(
+      (1L, "alpha beta gamma delta epsilon"),
+      (2L, "alpha beta gamma delta epsilon"),
+      (3L, "totally different text goes here now")).toDF("doc_id", "text")
+    var cc, kept: org.apache.spark.sql.DataFrame = null
+    val jobs = jobDescriptions {
+      cc = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+      kept = Dedup.clusterCanonicalDedup(docs, "doc_id", "text",
+        shingleSize = 2, numHashes = 16, bands = 4, threshold = 0.8)
+    }
+    // the caller's own actions run outside the calls' scope
+    assert(kept.as[Long].collect().sorted.toSeq == Seq(1L, 3L))
+    Seq(cc, kept).foreach(Housekeeping.release)
+    assert(jobs.nonEmpty && jobs.forall(_.startsWith("graft.")),
+      s"unlabeled jobs in ${jobs.mkString(" | ")}")
   }
 }
