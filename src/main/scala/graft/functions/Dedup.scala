@@ -622,16 +622,18 @@ object Dedup {
     var edges: DataFrame = null
     try {
       // canonical undirected edges (u < v), self-loops dropped; LAZY
-      // checkpoint, materialized by the check
-      var done = graft.JobLabel(spark, "graft.dedup: star check") {
-        edges = pairs
+      // checkpoint, materialized by the check. Building it runs the pairs'
+      // own shuffle stages (a caller's LSH and verify joins), so it carries
+      // its own label.
+      edges = graft.JobLabel(spark, "graft.dedup: pairs") {
+        pairs
           .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
           .filter(col("x") =!= col("y"))
           .select(least(col("x"), col("y")).as("u"), greatest(col("x"), col("y")).as("v"))
           .distinct()
           .localCheckpoint(false)
-        isStarForest(edges)
       }
+      var done = graft.JobLabel(spark, "graft.dedup: star check")(isStarForest(edges))
       var rounds = 0
       while (!done && rounds < maxRounds) graft.JobLabel(spark, "graft.dedup: star round") {
         // LARGE-STAR: for each center u over the SYMMETRIC adjacency, link
@@ -676,14 +678,17 @@ object Dedup {
   /** Cluster-canonical near-dedup: the full pipeline a corpus-scale dedup
     * actually runs — LSH candidates → exact verify ([[nearDupPairs]]) →
     * connected components → keep ONE doc per component (the minimum id)
-    * plus every doc in no near-dup pair. Returns the kept `(idCol)` rows.
+    * plus every doc in no near-dup pair. Returns the kept `(idCol)` rows,
+    * one per id.
     *
     * No node is labeled: at the [[starForest]] fixpoint the members to drop
     * (node ≠ its component minimum) are exactly the star leaves `v`, so the
-    * result is `df` anti-joined with them. The hash checkpoint behind the
-    * pairs is released once the forest is materialized; the result reads
-    * only `df` and the forest, whose one checkpoint `Housekeeping.release`
-    * on the result frees. */
+    * result is every id that is not a leaf: one aggregation over the ids
+    * and the leaves together, a single shuffle where an anti-join takes
+    * two. The ids come from the hash checkpoint, which holds every doc, so
+    * `df` is evaluated once. The result is materialized, then the hash
+    * checkpoint and the forest are released: the result is the one
+    * persisted frame, and `Housekeeping.release` on it frees it. */
   def clusterCanonicalDedup(
       df: DataFrame,
       idCol: String,
@@ -695,11 +700,17 @@ object Dedup {
     graft.JobLabel(df.sparkSession, "graft.dedup: cluster canonical") {
       val (hashed, pairs) = hashedNearDupPairs(
         df, idCol, textCol, shingleSize, numHashes, bands, threshold)
-      val forest =
-        try starForest(pairs, "doc_a", "doc_b", maxRounds = 30)
-        finally graft.Housekeeping.release(hashed)
-      df.select(col(idCol))
-        .join(forest.select(col("v").as(idCol)), Seq(idCol), "left_anti")
+      var forest: DataFrame = null
+      try {
+        forest = starForest(pairs, "doc_a", "doc_b", maxRounds = 30)
+        hashed.select(col("doc_id"), lit(false).as("leaf"))
+          .union(forest.select(col("v").cast(hashed.schema("doc_id").dataType), lit(true)))
+          .groupBy(col("doc_id").as(idCol))
+          .agg(max(col("leaf")).as("leaf"))
+          .filter(!col("leaf"))
+          .select(idCol)
+          .localCheckpoint(true)
+      } finally Seq(hashed, forest).filter(_ != null).foreach(graft.Housekeeping.release)
     }
 
   /** Exact-substring deduplication (Lee et al. 2022, "Deduplicating

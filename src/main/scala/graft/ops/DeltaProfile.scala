@@ -12,8 +12,9 @@ import graft.model.{DatasetDescriptor, TimeSpan}
   * collected to the driver. Its size is bounded by the number of timesteps,
   * never by cells — the same bound the cadence window relies on
   * ([[UpdatePlan.cadenceViolations]]). Every pre-parse check
-  * ([[QcDrivers.preParseQualityCheckProfiled]]) and the store's publish
-  * stats (`GridStore`) are derived from it on the driver, so an update reads
+  * ([[QcDrivers.preParseQualityCheckProfiled]]), the store's publish
+  * stats and its update gate's insert/append split (`GridStore`) are
+  * derived from it on the driver, so an update reads
   * its delta once for all of them instead of once per check.
   *
   * `steps` are sorted in the time column's own order: by instant for a

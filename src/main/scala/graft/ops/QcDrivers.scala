@@ -118,7 +118,9 @@ object QcDrivers {
       // Each file's comparison EXECUTES inside the loop (collect of at most
       // checksPerFile mismatch rows) — with lazy accumulation the deadline
       // would only bound plan construction and the 20-minute cap would never
-      // take effect on the actual I/O.
+      // take effect on the actual I/O. Store keys are unique, so the
+      // broadcast sample already bounds each collect to its rows: no limit,
+      // whose incremental take would spend extra jobs on an empty result.
       val found = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
       var checksDone = 0
       val it = sourceFiles.iterator
@@ -143,7 +145,7 @@ object QcDrivers {
             java.util.Arrays.asList(sampleRows: _*), sampleSchema)
           val bounded = storeForRange(times.min, times.max).select(sampleCols: _*)
           found ++= Qc.mismatchedCells(broadcast(sample), bounded, keyCols, valueCol,
-            desc.missingValue).limit(checksPerFile).collect()
+            desc.missingValue).collect()
         }
         checksDone += checksPerFile
       }

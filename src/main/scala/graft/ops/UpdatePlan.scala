@@ -153,44 +153,29 @@ object UpdatePlan {
       .filter(!ok)
   }
 
-  /** Update gates (utils/publish.py:730-778): updates must not precede the
-    * dataset start; appends must be contiguous with the existing end;
-    * an empty update is an error. Throws IllegalStateException on violation.
-    */
-  /** O9 gate in its single-action form: one aggregate over a classified
-    * frame carrying kinds `insert` / `append` / `existing_end` (the last
-    * being the store's end time riding in the classification job — see
-    * GridStore.existingEndFrame) computes every scalar the gate needs.
-    * The publish protocol runs this once per update; folding the counts,
-    * the first-append probe, and the store end into one driver round-trip
-    * is what keeps per-publish job counts flat. */
-  def updateQualityCheckClassified(
-      classified: DataFrame,
-      timeCol: String,
+  /** O9 update gates (utils/publish.py:730-778), the one copy of the
+    * verdict: an update with neither an inserted nor an appended timestep
+    * is an error, and the first appended timestep must follow the store's
+    * end by an allowed gap ([[gapAllowed]]). Times are epoch millis. Runs
+    * on the driver over scalars the caller already holds: GridStore
+    * classifies its [[DeltaProfile]]'s times against the store's, and
+    * [[updateQualityCheck]] aggregates its frames. Throws
+    * IllegalStateException on violation. */
+  def updateVerdict(
+      inserts: Long,
+      firstAppendMs: Option[Long],
+      existingEndMs: Option[Long],
       resolution: TimeSpan,
       cadenceBounds: Option[(TimeSpan, TimeSpan)]): Unit = {
-    def ms(v: Any): Long = v match {
-      case l: java.lang.Long => l // already epoch millis (the compat shim)
-      case t: java.sql.Timestamp => t.getTime
-      case l: java.time.LocalDateTime => java.sql.Timestamp.valueOf(l).getTime
-      case other => throw new IllegalArgumentException(s"Unexpected time value: $other")
-    }
-    val r = classified.agg(
-      sum(when(col("kind") === "insert", 1L).otherwise(0L)).as("n_ins"),
-      sum(when(col("kind") === "append", 1L).otherwise(0L)).as("n_app"),
-      min(when(col("kind") === "append", col(timeCol))).as("first_app"),
-      max(when(col("kind") === "existing_end", col(timeCol))).as("existing_end"))
-      .head()
-    val nIns = Option(r.get(0)).fold(0L)(_.asInstanceOf[Long])
-    val nApp = Option(r.get(1)).fold(0L)(_.asInstanceOf[Long])
-    if (nIns == 0 && nApp == 0)
+    if (inserts == 0 && firstAppendMs.isEmpty)
       throw new IllegalStateException("Update contains no new or changed records")
-    if (nApp > 0) {
-      require(r.get(3) != null, "classified frame carries no existing_end row")
-      val gapMs = ms(r.get(2)) - ms(r.get(3))
+    firstAppendMs.foreach { first =>
+      val end = existingEndMs.getOrElse(
+        throw new IllegalArgumentException("an append needs the store's existing end"))
+      val gapMs = first - end
       if (!gapAllowed(gapMs, resolution, cadenceBounds))
         throw new IllegalStateException(
-          s"Append is not contiguous with existing end ${r.get(3)} " +
+          s"Append is not contiguous with existing end ${java.time.Instant.ofEpochMilli(end)} " +
             s"(gap ${gapMs / 60000L} min, expected ${resolution.toMinutes})")
     }
   }
@@ -199,7 +184,7 @@ object UpdatePlan {
     * dataset's cadence: inside `cadenceBounds` for irregular datasets,
     * else exactly one `resolution` step. The one driver-side copy of the
     * rule, shared by the pre-parse cadence check ([[DeltaProfile]]) and
-    * the append-contiguity gate above; [[cadenceViolations]] is its
+    * the append-contiguity verdict above; [[cadenceViolations]] is its
     * column form. */
   def gapAllowed(gapMs: Long, resolution: TimeSpan,
       cadenceBounds: Option[(TimeSpan, TimeSpan)]): Boolean = cadenceBounds match {
@@ -207,9 +192,10 @@ object UpdatePlan {
     case None => gapMs == resolution.toMillis
   }
 
-  /** Compatibility form over separate insert/append frames — delegates to
-    * [[updateQualityCheckClassified]] so there is exactly ONE copy of the
-    * gate logic. */
+  /** Compatibility form over separate insert/append frames: one aggregate
+    * gives the insert count, the first append and the end, then
+    * [[updateVerdict]] decides, so there is exactly ONE copy of the gate
+    * logic. */
   def updateQualityCheck(
       spark: SparkSession,
       insertTimes: DataFrame,
@@ -240,9 +226,15 @@ object UpdatePlan {
       else lit(existingEnd.getTime)
     val end = spark.range(1).select(
       endMs.as(msCol), lit("existing_end").as("kind"))
-    val classified = toMs(insertTimes, "insert")
+    val r = toMs(insertTimes, "insert")
       .unionByName(toMs(appendTimes, "append"))
       .unionByName(end)
-    updateQualityCheckClassified(classified, msCol, resolution, cadenceBounds)
+      .agg(
+        count(when(col("kind") === "insert", 1L)),
+        min(when(col("kind") === "append", col(msCol))),
+        max(when(col("kind") === "existing_end", col(msCol))))
+      .head()
+    def opt(i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    updateVerdict(r.getLong(0), opt(1), opt(2), resolution, cadenceBounds)
   }
 }

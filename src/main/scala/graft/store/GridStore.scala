@@ -386,7 +386,7 @@ final class GridStore(
     // abandons the (read-only) profile future.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = ZarrStore.axisEc
+    implicit val ec: scala.concurrent.ExecutionContext = publishEc
     val statsF = profiled match {
       case Some(p) => Future.successful(updateStats(p))
       case None => Future(updateStats(DeltaProfile(df, desc)))
@@ -489,29 +489,30 @@ final class GridStore(
 
   private def updateProfiled(updateDf: DataFrame, profile: DeltaProfile,
       dryRun: Boolean): Unit = {
-    // Classification only needs the store's times INSIDE the update window
-    // (a time can only be an insert if both sides contain it), so the
-    // existing side is a bucket-pruned range read — never a full-store
-    // scan, even of just the time column. The profile's stats also serve
-    // attrs assembly and bucket planning below.
+    // The profile's stats serve the gate, attrs assembly and bucket
+    // planning below.
     val stats = updateStats(profile)
-    // The gate's ONE aggregate action, scoped so `classified` — whose plan
-    // reads the CURRENT store files — cannot gain a post-write consumer
-    // (the write below replaces those files; a later read of this frame
-    // would be the read-after-replace bug the r15-dropped defensive
-    // checkpoint used to paper over). StoreGateOrderSpec pins the ordering
-    // at the job level. `classified` is one row per distinct update
-    // timestep plus ONE `existing_end` row — the store's last-bucket max
-    // time rides in the same job instead of its own scan action.
+    // The gate's ONE action: the store's distinct times inside the update
+    // window (a time is an insert iff the store holds it) plus those of its
+    // last bucket (whose max is the store's end), one bucket-pruned collect
+    // bounded by timesteps, never cells; the profile's times are classified
+    // on the driver. It reads the CURRENT store files, which the write below
+    // replaces, so it must end first (StoreGateOrderSpec pins the ordering
+    // at the job level).
     def runGate(): Unit = {
-      val existing = readRange(stats.uLo, stats.uHi)
-      val classified =
-        UpdatePlan.classifyUpdateTimes(existing, updateDf, timeCol)
-          .unionByName(existingEndFrame)
-      JobLabel(spark, "graft.store: update gate") {
-        UpdatePlan.updateQualityCheckClassified(classified, timeCol,
-          desc.timeResolution, desc.updateCadenceBounds)
+      val t = col(timeCol)
+      val inWindow = col("__bucket").between(bucketKey(stats.uLo), bucketKey(stats.uHi)) &&
+        t.cast(TimestampNTZType).between(lit(stats.uLo), lit(stats.uHi))
+      val inLast = existingBuckets.toSeq.sorted.lastOption.fold(lit(false))(col("__bucket") === _)
+      val stored = JobLabel(spark, "graft.store: update gate") {
+        storeFiles.filter(t.isNotNull && (inWindow || inLast))
+          .select(unix_millis(t.cast("timestamp")), t.cast(TimestampNTZType))
+          .distinct().collect()
       }
+      val storedLocal = stored.map(_.getAs[java.time.LocalDateTime](1)).toSet
+      val (inserts, appends) = profile.timed.partition(s => storedLocal(s.local))
+      UpdatePlan.updateVerdict(inserts.size, appends.map(_.epochMs).minOption,
+        stored.map(_.getLong(0)).maxOption, desc.timeResolution, desc.updateCadenceBounds)
     }
     if (dryRun) {
       runGate()
@@ -519,16 +520,16 @@ final class GridStore(
     }
     // Overlap the gate with the padding read (guide §2.6): both are
     // INDEPENDENT read-only jobs over pre-write store files — the gate's
-    // aggregate and the combine-first materialization — and both must
+    // collect and the combine-first materialization — and both must
     // finish before the data write. Running the padding job on the shared
     // store pool lets its tasks back-fill executors while the gate's
-    // (driver-latency-bound) aggregate round-trips; job descriptions are
+    // (driver-latency-bound) collect round-trips; job descriptions are
     // thread-local so the ordering spec can tell them apart. The gate
     // still completes BEFORE any write: writeJob runs only after both the
     // Await and a successful gate.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = ZarrStore.axisEc
+    implicit val ec: scala.concurrent.ExecutionContext = publishEc
     val padF = Future {
       JobLabel(spark, "graft.store: padding read")(paddedDelta(updateDf, stats.touched))
     }
@@ -557,21 +558,6 @@ final class GridStore(
   }
 
   // ------------------------------------------------------------- helpers
-
-  /** Max time of the existing store as a ONE-ROW PLAN (no action), read
-    * from the LAST bucket only — partition pruning makes this one
-    * directory's footers, not a full-store scan (the
-    * binary-search-the-manifest analog, publish.py:897-949). Shaped as a
-    * `(timeCol, kind="existing_end")` row so it unions into the classified
-    * frame and rides the classification job. */
-  private def existingEndFrame: DataFrame = {
-    val bounded = existingBuckets.toSeq.sorted.lastOption match {
-      case Some(last) => storeFiles.filter(col("__bucket") === last)
-      case None => storeFiles
-    }
-    bounded.agg(max(col(timeCol).cast(TimestampNTZType)).as(timeCol))
-      .select(col(timeCol), lit("existing_end").as("kind"))
-  }
 
   private def existingBuckets: Set[String] = {
     val fs = fileSystem(spark, path)
@@ -668,6 +654,17 @@ object GridStore {
     "parquet.crypto.factory.class" ->
       "org.apache.parquet.crypto.keytools.PropertiesDrivenCryptoFactory",
     "parquet.encryption.kms.client.class" -> "graft.store.GraftKmsClient")
+
+  /** Small shared daemon pool for a publish's overlapped read-only jobs
+    * (guide §2.6): the initial write's profile and an update's padding
+    * read run here beside the job the caller's thread runs. */
+  private[store] lazy val publishEc: scala.concurrent.ExecutionContext =
+    scala.concurrent.ExecutionContext.fromExecutorService(
+      java.util.concurrent.Executors.newFixedThreadPool(3, r => {
+        val t = new Thread(r, "graft-store-publish")
+        t.setDaemon(true)
+        t
+      }))
 
   def fileSystem(spark: SparkSession, path: String): FileSystem =
     new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)

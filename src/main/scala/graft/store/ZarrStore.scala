@@ -2,7 +2,7 @@ package graft.store
 
 import org.apache.hadoop.fs.{Path => HPath}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
 
@@ -325,11 +325,7 @@ final class ZarrStore(
       GridStore.fileSystem(spark, path)
         .delete(new HPath(s"$path/${desc.dataVar}"), true)
       writeAxesAndMeta(persisted, timeMicros, spatialVals)
-      ZarrIO.writeDataChunks(spark, path,
-        axes = axisKeys(timeMicros, spatialVals),
-        vars = Seq((desc.dataVar, desc.dataVar,
-          dataMeta(persisted, timeMicros.length, spatialVals))),
-        df = df, mergeExisting = false)
+      writeChunks(timeMicros, spatialVals, persisted, df, mergeExisting = false)
     }
   }
 
@@ -344,56 +340,68 @@ final class ZarrStore(
     val existingTime = readTimeAxisMicros()
     val existingSet = existingTime.toSet
     // Materialize the delta ONCE (r16, mirroring GridStore.runUpdate): the
-    // two axis-planning jobs and the chunk write all re-read it, and its
-    // lineage may be an arbitrary upstream pipeline — previously each
-    // consumer re-evaluated that pipeline (3 evaluations per update). An
-    // update is a bounded delta relative to the store, so this is an
-    // executor-local checkpoint of the small side, never the store. LAZY:
-    // the first axis job materializes the blocks as it folds. The initial
-    // write deliberately does NOT do this — its frame is the whole
-    // dataset, where column-pruned re-scans beat materializing every
-    // column (the axis jobs read one column each).
-    val df = df0.localCheckpoint(false)
-    val (updateTime, spatialVals) = collectAxes(df)
-    val appended = updateTime.filterNot(existingSet)
-    // appends must extend the axis monotonically; anything else is an insert
-    // into existing coordinates (publish.py:359-377's insert/append split)
-    appended.headOption.foreach { first =>
-      require(first > existingTime.last,
-        s"Update time ${micros2ldt(first)} is neither an existing coordinate " +
-          s"nor after the store end ${micros2ldt(existingTime.last)} — " +
-          "zarr axes cannot interleave new points (reference raises the same)")
-    }
-    val newTime = existingTime ++ appended
-    val spatialAxes = readSpatialAxes()
-    // update rows must land on the existing spatial grid
-    spatialVals.zip(spatialAxes.map(_._2)).zip(nonTimeDims).foreach {
-      case ((got, have), dim) =>
-        val haveSet = have.toSet
-        val missing = got.filterNot(haveSet)
-        require(missing.isEmpty,
-          s"Update has $dim values off the existing grid: ${missing.take(3).mkString(",")}")
-    }
-    try withCommitMarker(Map(
-      "update_date_range_start" -> micros2ldt(updateTime.head).toString,
-      "update_date_range_end" -> micros2ldt(updateTime.last).toString)) {
-      if (appended.nonEmpty)
-        writeAxesAndMeta(persisted, newTime, spatialAxes.map(_._2))
-      ZarrIO.writeDataChunks(spark, path,
-        axes = axisKeys(newTime, spatialAxes.map(_._2)),
-        vars = Seq((desc.dataVar, desc.dataVar,
-          dataMeta(persisted, newTime.length, spatialAxes.map(_._2)))),
-        df = df, mergeExisting = true)
+    // axis aggregate and the chunk write both read it, and its lineage may
+    // be an arbitrary upstream pipeline that each consumer would otherwise
+    // re-evaluate. An update is a bounded delta relative to the store, so
+    // this is an executor-local checkpoint of the small side, never the
+    // store. LAZY: the axis aggregate materializes the blocks as it folds.
+    // The initial write deliberately does NOT do this — its frame is the
+    // whole dataset, where column-pruned re-scans beat materializing every
+    // column (the axis aggregate reads only the dim columns). Under AQE
+    // building the checkpoint runs the delta's shuffle stages, so it is
+    // labeled with the aggregate.
+    val df = graft.JobLabel(spark, "graft.zarr: axes")(df0.localCheckpoint(false))
+    try {
+      val (updateTime, spatialVals) = collectAxes(df)
+      val appended = updateTime.filterNot(existingSet)
+      // appends must extend the axis monotonically; anything else is an
+      // insert into existing coordinates (publish.py:359-377's split)
+      appended.headOption.foreach { first =>
+        require(first > existingTime.last,
+          s"Update time ${micros2ldt(first)} is neither an existing coordinate " +
+            s"nor after the store end ${micros2ldt(existingTime.last)} — " +
+            "zarr axes cannot interleave new points (reference raises the same)")
+      }
+      val newTime = existingTime ++ appended
+      val spatialAxes = readSpatialAxes().map(_._2)
+      // update rows must land on the existing spatial grid
+      spatialVals.zip(spatialAxes).zip(nonTimeDims).foreach {
+        case ((got, have), dim) =>
+          val haveSet = have.toSet
+          val missing = got.filterNot(haveSet)
+          require(missing.isEmpty,
+            s"Update has $dim values off the existing grid: ${missing.take(3).mkString(",")}")
+      }
+      withCommitMarker(Map(
+        "update_date_range_start" -> micros2ldt(updateTime.head).toString,
+        "update_date_range_end" -> micros2ldt(updateTime.last).toString)) {
+        if (appended.nonEmpty) writeAxesAndMeta(persisted, newTime, spatialAxes)
+        writeChunks(newTime, spatialAxes, persisted, df, mergeExisting = true)
+      }
     } finally
-      // every consumer (axis jobs, chunk write) has run — or the publish
-      // failed: either way the delta's checkpoint blocks are dead
+      // every consumer (axis aggregate, chunk write) has run — or the
+      // publish failed: either way the delta's checkpoint blocks are dead
       graft.Housekeeping.release(df)
   }
+
+  /** The one distributed job of a publish: every row of `df` into its
+    * chunk of the grid the axes span. */
+  private def writeChunks(timeMicros: Array[Long], spatial: Seq[Array[Double]],
+      persisted: Option[ZArrayMeta], df: DataFrame, mergeExisting: Boolean): Unit =
+    graft.JobLabel(spark, "graft.zarr: chunk write") {
+      ZarrIO.writeDataChunks(spark, path,
+        axes = axisKeys(timeMicros, spatial),
+        vars = Seq((desc.dataVar, desc.dataVar,
+          dataMeta(persisted, timeMicros.length, spatial))),
+        df = df, mergeExisting = mergeExisting)
+    }
 
   // ------------------------------------------------------------- internals
 
   /** Distinct sorted axis values from the update frame: time as epoch
-    * micros, spatial dims as doubles.
+    * micros, spatial dims as doubles. ONE grouping-sets aggregate, one
+    * grouping set per dimension, reads the frame once for every axis;
+    * `grouping_id` tells the axes apart and the driver sorts them.
     *
     * BOUND (pinned): axes are DRIVER-HELD during planning — the same model
     * as xarray itself, which keeps every coordinate in memory. Real grids
@@ -404,37 +412,33 @@ final class ZarrStore(
     * mis-modeled frame (e.g. a high-cardinality ID column declared as a
     * spatial dim) OOM the driver mid-publish. */
   private def collectAxes(df: DataFrame): (Array[Long], Seq[Array[Double]]) = {
-    // the limit rides INSIDE the one planning job per axis (no extra
-    // count action), so the driver never materializes past the bound + 1
-    def bounded(dim: String, got: Int): Unit =
-      require(got <= MaxAxisLength,
-        s"$dim exceeds the $MaxAxisLength-distinct-value driver-held axis " +
+    val n = dims.length
+    // the limit rides INSIDE the planning job (no extra count action): the
+    // driver holds at most bound + 1 values per axis in all, and when the
+    // limit truncates, some axis holds more than the bound and is refused
+    val rows = graft.JobLabel(spark, "graft.zarr: axes") {
+      df.select(col(timeCol).cast(TimestampNTZType).as(timeCol) +:
+          nonTimeDims.map(d => col(d).cast("double").as(d)): _*)
+        .groupingSets(dims.map(d => Seq(col(d))), dims.map(col): _*)
+        .agg(grouping_id())
+        .limit(n * (MaxAxisLength + 1))
+        .collect()
+    }
+    // grouping_id sets the bit of every column a set leaves out, the first
+    // column's bit the highest: axis i's set clears only bit n - 1 - i
+    val byGid = rows.groupBy(_.getLong(n))
+    def axis(i: Int): Array[Row] = {
+      val vals = byGid.getOrElse(((1L << n) - 1) ^ (1L << (n - 1 - i)), Array.empty[Row])
+      require(vals.length <= MaxAxisLength,
+        s"${dims(i)} exceeds the $MaxAxisLength-distinct-value driver-held axis " +
           "bound. A zarr grid axis is a coordinate, not a key; for " +
           "high-cardinality dimensions use the parquet GridStore layout " +
           "(bucketed, no dense axis) or coarsen the dimension")
-    // the per-axis planning jobs are INDEPENDENT — submit them from a
-    // small pool so they overlap (guide §2.6) instead of paying one
-    // scheduler round-trip per dimension sequentially (r15); each job's
-    // semantics (distinct → orderBy → bounded collect) are unchanged
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = ZarrStore.axisEc
-    val tF = Future {
-      val rows = df.select(col(timeCol).cast(TimestampNTZType)).distinct()
-        .orderBy(timeCol).limit(MaxAxisLength + 1).collect()
-      bounded(timeCol, rows.length)
-      rows.map(r => ldt2micros(r.getAs[java.time.LocalDateTime](0)))
+      vals
     }
-    val spatialF = nonTimeDims.map { d =>
-      Future {
-        val rows = df.select(col(d).cast("double")).distinct()
-          .orderBy(d).limit(MaxAxisLength + 1).collect()
-        bounded(d, rows.length)
-        rows.map(_.getDouble(0))
-      }
-    }
-    (Await.result(tF, Duration.Inf),
-      spatialF.map(Await.result(_, Duration.Inf)))
+    (axis(0).map(r => ldt2micros(r.getAs[java.time.LocalDateTime](0))).sorted,
+      nonTimeDims.indices.map(j =>
+        axis(j + 1).map(_.getDouble(j + 1)).sorted(Ordering.Double.TotalOrdering)))
   }
 
   private def axisKeys(timeMicros: Array[Long],
@@ -642,17 +646,6 @@ final class ZarrStore(
 }
 
 object ZarrStore {
-
-  /** Small shared daemon pool for the independent per-axis planning jobs
-    * (guide §2.6); axes are few (≤ a handful of dims), so 3 threads is
-    * plenty to overlap them. */
-  private[store] lazy val axisEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(3, r => {
-        val t = new Thread(r, "graft-zarr-axes")
-        t.setDaemon(true)
-        t
-      }))
 
   /** CF time units for the store's time axis. MICROSECOND resolution — the
     * update path compares the frame's epoch-micros timestamps against the

@@ -100,11 +100,23 @@ class ConnectedComponentsSpec extends SparkSpec {
       (2L, "alpha beta gamma delta epsilon"),
       (3L, "totally different text goes here now")).toDF("doc_id", "text")
     var cc, kept: org.apache.spark.sql.DataFrame = null
-    val jobs = jobDescriptions {
+    val ccJobs = jobDescriptions {
       cc = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+    }
+    val keptJobs = jobDescriptions {
       kept = Dedup.clusterCanonicalDedup(docs, "doc_id", "text",
         shingleSize = 2, numHashes = 16, bands = 4, threshold = 0.8)
     }
+    val jobs = ccJobs ++ keptJobs
+    info(s"clusterCanonicalDedup: ${keptJobs.mkString(" | ")}")
+    // the docs' pairs are already a star forest: one check and no round.
+    // The candidate and verify joins run when the edge checkpoint is built,
+    // under their own label; the check keeps only its aggregation's map
+    // stage and its result
+    assert(keptJobs.contains("graft.dedup: pairs"))
+    assert(keptJobs.count(_ == "graft.dedup: star check") <= 2,
+      s"star check books other jobs: ${keptJobs.mkString(" | ")}")
+    assert(!keptJobs.contains("graft.dedup: star round"))
     // the caller's own actions run outside the calls' scope
     assert(kept.as[Long].collect().sorted.toSeq == Seq(1L, 3L))
     Seq(cc, kept).foreach(Housekeeping.release)

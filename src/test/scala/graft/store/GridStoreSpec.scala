@@ -1,6 +1,7 @@
 package graft.store
 
 import java.nio.file.Files
+import java.time.LocalDate
 
 import org.apache.spark.sql.functions._
 
@@ -108,6 +109,39 @@ class GridStoreSpec extends SparkSpec {
     store.publish(dailyGrid(1, 5))
     assertThrows[IllegalStateException](store.publish(dailyGrid(8, 2)))
     assert(store.dataset().count() == 20)
+  }
+
+  test("a gap fill before the store end is refused and the store is untouched") {
+    val store = newStore()
+    // days 1-3 and 5-10: day 4 lies inside the store's range but is absent
+    store.publish(dailyGrid(1, 3).union(dailyGrid(5, 6)))
+    val (attrs, rows) = (store.readAttrs(), collectSet(store.dataset()))
+    // day 4 is neither an existing time nor after the end (day 10)
+    val ex = intercept[IllegalStateException](store.publish(dailyGrid(4, 2, base = 100.0)))
+    assert(ex.getMessage.contains("not contiguous"), ex.getMessage)
+    assert(store.readAttrs() == attrs)
+    assert(rows.size == 9 * 4 && collectSet(store.dataset()) == rows)
+  }
+
+  test("an append opening a new bucket at a month boundary takes the end from the last bucket") {
+    val dir = Files.createTempDirectory("gridstore_spec").toString
+    val store = new GridStore(spark, s"$dir/store", desc) // monthly buckets
+    def days(from: LocalDate, n: Int) = (for {
+      d <- 0 until n
+      lat <- Seq(10.0, 10.25)
+      lon <- Seq(100.0, 100.25)
+    } yield (from.plusDays(d).atStartOfDay(), lat, lon, d + lat + lon))
+      .toDF("time", "latitude", "longitude", "value")
+    store.publish(days(LocalDate.of(2024, 1, 1), 31))
+    // append-only: Feb 1-2 touch only the new 2024-02 bucket, so the
+    // store's end (Jan 31) comes from the untouched 2024-01 bucket
+    store.publish(days(LocalDate.of(2024, 2, 1), 2))
+    val attrs = store.readAttrs()
+    assert(attrs("update_previous_end_date") == "2024013100")
+    assert(attrs("date_range_end") == "2024020200")
+    assert(attrs("update_date_range_start") == "2024020100")
+    assert(store.readBuckets(Set("2024-02")).count() == 2 * 4)
+    assert(store.dataset().count() == 33 * 4)
   }
 
   test("concurrent-writer guard refuses when marker is set (publish.py:358-375)") {
