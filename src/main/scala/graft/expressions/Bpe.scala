@@ -71,25 +71,18 @@ case class BpeEncode(child: Expression, table: BpeTable)
   * ([[graft.functions.Text.bpeTrain]]). Output strings are in the
   * SAME mapped alphabet [[BpeEncode]] consumes, so a learned table
   * feeds the encoder verbatim. */
-case class BpePretokenize(child: Expression) extends UnaryExpression {
+case class BpePretokenize(child: Expression) extends StringKernelExpression {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   override def prettyName: String = "bpe_pretokenize"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.catalogString}")
 
   override def nullable: Boolean = child.nullable
 
   override protected def nullSafeEval(input: Any): Any =
     BpeTable.pretokenize(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.BpeTable.pretokenize($c)")
+  protected def kernelCall(c: String): String = s"graft.expressions.BpeTable.pretokenize($c)"
 
   override protected def withNewChildInternal(newChild: Expression): BpePretokenize =
     copy(child = newChild)

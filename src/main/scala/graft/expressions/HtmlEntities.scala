@@ -1,8 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -34,12 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * literal — crawl bytes are dirty by definition and decode must never
   * throw. Supplementary-plane references emit surrogate pairs
   * (`Character.toChars`). */
-case class HtmlNumericEntityDecode(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.catalogString}")
+case class HtmlNumericEntityDecode(child: Expression) extends StringKernelExpression {
 
   override def dataType: DataType = StringType
 
@@ -48,9 +41,7 @@ case class HtmlNumericEntityDecode(child: Expression) extends UnaryExpression {
   override protected def nullSafeEval(input: Any): Any =
     HtmlNumericEntityDecode.compute(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.HtmlNumericEntityDecode.compute($c)")
+  protected def kernelCall(c: String): String = s"graft.expressions.HtmlNumericEntityDecode.compute($c)"
 
   override protected def withNewChildInternal(newChild: Expression): HtmlNumericEntityDecode =
     copy(child = newChild)

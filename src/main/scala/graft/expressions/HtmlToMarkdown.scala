@@ -1,8 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -39,12 +37,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Dirty input degrades to text, never throws. Per-row single pass,
   * whole-stage codegen via the static [[HtmlToMarkdown.compute]]. */
-case class HtmlToMarkdown(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.catalogString}")
+case class HtmlToMarkdown(child: Expression) extends StringKernelExpression {
 
   override def dataType: DataType = StringType
 
@@ -53,9 +46,7 @@ case class HtmlToMarkdown(child: Expression) extends UnaryExpression {
   override protected def nullSafeEval(input: Any): Any =
     HtmlToMarkdown.compute(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.HtmlToMarkdown.compute($c)")
+  protected def kernelCall(c: String): String = s"graft.expressions.HtmlToMarkdown.compute($c)"
 
   override protected def withNewChildInternal(newChild: Expression): HtmlToMarkdown =
     copy(child = newChild)

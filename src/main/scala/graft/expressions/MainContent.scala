@@ -1,8 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -50,12 +48,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * degrade to text — extraction never throws. Input with no markup is
   * a single block under the same thresholds. Per-row single pass,
   * whole-stage codegen via the static [[HtmlMainContent.compute]]. */
-case class HtmlMainContent(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.catalogString}")
+case class HtmlMainContent(child: Expression) extends StringKernelExpression {
 
   override def dataType: DataType = StringType
 
@@ -64,9 +57,7 @@ case class HtmlMainContent(child: Expression) extends UnaryExpression {
   override protected def nullSafeEval(input: Any): Any =
     HtmlMainContent.compute(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.HtmlMainContent.compute($c)")
+  protected def kernelCall(c: String): String = s"graft.expressions.HtmlMainContent.compute($c)"
 
   override protected def withNewChildInternal(newChild: Expression): HtmlMainContent =
     copy(child = newChild)

@@ -1,103 +1,41 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: the full MinHash signature of a document —
   * `array<long>` of length `numHashes`, where signature slot `i` is the
   * minimum over distinct word-`n`-gram shingles of
-  * `XXH64.hashLong(xxhash64(shingle), i)`.
+  * `XXH64.hashLong(xxhash64(shingle), i)`. Documents with fewer than `n`
+  * tokens get `numHashes` slots of Long.MaxValue, so they stay non-null.
+  * The loop is [[ShingleHashing]]'s.
   *
   * Each permutation is an independent full-width rehash of the shingle
   * hash, so the family is min-wise independent in practice. An arithmetic
   * double-hashing family (`h_i = a + i·b`) is NOT: for large `i` the
   * ordering is dominated by `b`, the permutations correlate, and LSH band
   * recall drops — measured as 4 of 249 true near-dup pairs missed at
-  * threshold 0.9 on the 5k-document corpus. The rehash costs ~1 hashLong
-  * per (shingle, permutation): ~16 µs per 50-shingle document for 64
-  * permutations.
+  * threshold 0.9 on the 5k-document corpus.
   *
   * Computing the whole signature per row also removes the explode +
   * hash-aggregate (and its shuffle) from signature generation entirely —
   * signatures are born shuffle-free; only band hashes ever shuffle.
   */
 case class MinHashSignature(child: Expression, n: Int, numHashes: Int)
-    extends UnaryExpression {
+    extends StringKernelExpression {
 
   require(n >= 1, s"shingle size must be >= 1, got $n")
   require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
   override def prettyName: String = "minhash_signature"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.catalogString}")
+  protected def kernelCall(c: String): String =
+    s"graft.expressions.ShingleHashing.signature($c, $n, $numHashes)"
 
   override protected def nullSafeEval(input: Any): Any =
-    MinHashSignature.compute(input.asInstanceOf[UTF8String], n, numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.MinHashSignature.compute($c, $n, $numHashes)")
+    ShingleHashing.signature(input.asInstanceOf[UTF8String], n, numHashes)
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
     copy(child = newChild)
-}
-
-object MinHashSignature {
-
-  private val Seed = 42L
-
-  /** Signature of a document; empty-shingle documents (fewer than n tokens)
-    * yield a signature of Long.MaxValue slots so they never band-collide
-    * meaningfully but stay non-null. */
-  def compute(text: UTF8String, n: Int, numHashes: Int): ArrayData = {
-    val s = text.toString
-    val raw = s.split("\\s+")
-    var nTok = 0
-    var i = 0
-    while (i < raw.length) { if (raw(i).nonEmpty) nTok += 1; i += 1 }
-    val toks = if (nTok == raw.length) raw else {
-      val out = new Array[String](nTok)
-      var j = 0; i = 0
-      while (i < raw.length) {
-        if (raw(i).nonEmpty) { out(j) = raw(i); j += 1 }
-        i += 1
-      }
-      out
-    }
-    val nShingles = math.max(0, toks.length - n + 1)
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    val seen = new java.util.HashSet[java.lang.Long](nShingles * 2)
-    val sb = new java.lang.StringBuilder
-    i = 0
-    while (i < nShingles) {
-      sb.setLength(0)
-      var k = 0
-      while (k < n) {
-        if (k > 0) sb.append(' ')
-        sb.append(toks(i + k))
-        k += 1
-      }
-      val u = UTF8String.fromString(sb.toString)
-      val base = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, Seed)
-      if (seen.add(base)) {
-        var p = 0
-        while (p < numHashes) {
-          val h = XXH64.hashLong(base, p.toLong)
-          if (h < mins(p)) mins(p) = h
-          p += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
 }

@@ -1,8 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,12 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Per-row single pass, whole-stage codegen via the static
   * [[SentenceSplit.compute]]. */
-case class SentenceSplit(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.catalogString}")
+case class SentenceSplit(child: Expression) extends StringKernelExpression {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
@@ -46,9 +39,7 @@ case class SentenceSplit(child: Expression) extends UnaryExpression {
   override protected def nullSafeEval(input: Any): Any =
     SentenceSplit.compute(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.SentenceSplit.compute($c)")
+  protected def kernelCall(c: String): String = s"graft.expressions.SentenceSplit.compute($c)"
 
   override protected def withNewChildInternal(newChild: Expression): SentenceSplit =
     copy(child = newChild)

@@ -1,10 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -16,11 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why an expression instead of `transform`/`aggregate` compositions:
   * Spark's higher-order array functions are CodegenFallback — every element
   * pays interpreted-closure dispatch and boxing, and column references
-  * inside their lambdas re-evaluate per element. This expression runs the
-  * whole tokenize → shingle → hash → dedup pipeline as one tight JVM loop
-  * per row, and `doGenCode` emits a direct static call so the surrounding
-  * projection stays inside whole-stage codegen. Measured ~5× over the
-  * composed-HOF formulation on the dedup path.
+  * inside their lambdas re-evaluate per element. The whole tokenize →
+  * shingle → hash → dedup pipeline is [[ShingleHashing]]'s one loop.
   *
   * Semantics parity: tokens are `split("\\s+")` with empties dropped
   * (exactly `Text.tokens`), shingles join `n` consecutive tokens with a
@@ -29,81 +22,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * modulo xxhash64 collisions).
   */
 case class ShinglePairHashes(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends StringKernelExpression {
 
   require(n >= 1, s"shingle size must be >= 1, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.catalogString}")
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("a", LongType, nullable = false),
       StructField("b", LongType, nullable = false))),
     containsNull = false)
-
   override def prettyName: String = "shingle_pair_hashes"
+  protected def kernelCall(c: String): String = s"graft.expressions.ShingleHashing.pairHashes($c, $n)"
 
   override protected def nullSafeEval(input: Any): Any =
-    ShinglePairHashes.compute(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.ShinglePairHashes.compute($c, $n)")
+    ShingleHashing.pairHashes(input.asInstanceOf[UTF8String], n)
 
   override protected def withNewChildInternal(newChild: Expression): ShinglePairHashes =
     copy(child = newChild)
-}
-
-object ShinglePairHashes {
-
-  /** xxhash64 fold seed used by the built-in function. */
-  private val Seed = 42L
-  /** Pre-folded seed of `xxhash64(lit(1), s)`: `lit(1)` is an IntegerType,
-    * so Spark folds it through the 4-byte hashInt path, then the string
-    * bytes. */
-  private val SeedB = XXH64.hashInt(1, Seed)
-
-  /** One row's work; called from both interpreted eval and generated code. */
-  def compute(text: UTF8String, n: Int): ArrayData = {
-    val s = text.toString
-    val toks = s.split("\\s+")
-    // count non-empty tokens (split keeps a leading "" for leading spaces)
-    var nTok = 0
-    var i = 0
-    while (i < toks.length) { if (toks(i).nonEmpty) nTok += 1; i += 1 }
-    val clean = if (nTok == toks.length) toks else {
-      val out = new Array[String](nTok)
-      var j = 0; i = 0
-      while (i < toks.length) {
-        if (toks(i).nonEmpty) { out(j) = toks(i); j += 1 }
-        i += 1
-      }
-      out
-    }
-    val nShingles = math.max(0, clean.length - n + 1)
-    val seen = new java.util.HashSet[java.lang.Long](nShingles * 2)
-    val rows = new java.util.ArrayList[InternalRow](nShingles)
-    val sb = new java.lang.StringBuilder
-    i = 0
-    while (i < nShingles) {
-      sb.setLength(0)
-      var k = 0
-      while (k < n) {
-        if (k > 0) sb.append(' ')
-        sb.append(clean(i + k))
-        k += 1
-      }
-      val u = UTF8String.fromString(sb.toString)
-      val a = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, Seed)
-      if (seen.add(a)) {
-        val b = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, SeedB)
-        rows.add(InternalRow(a, b))
-      }
-      i += 1
-    }
-    new GenericArrayData(rows.toArray)
-  }
 }

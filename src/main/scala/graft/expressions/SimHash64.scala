@@ -1,69 +1,29 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: 64-bit SimHash of a text column — for each
   * bit, tokens vote +1/−1 by the bit of their xxhash64 (seed 42, the
-  * built-in's seed); the bit is set when the vote is positive.
+  * built-in's seed); the bit is set when the vote is positive. An empty
+  * token set sets no bit.
   *
   * Bit-identical to the composed-HOF formulation in `Dedup.simhash64`
   * (64 interpreted `aggregate` passes per row — higher-order functions are
   * CodegenFallback), but one tokenize→hash→vote loop per row that stays
-  * inside whole-stage codegen. Tokens are `split("\\s+")` with empties
-  * dropped, exactly `Text.tokens`.
+  * inside whole-stage codegen. Tokens are [[ShingleHashing]]'s: exactly
+  * `Text.tokens`.
   */
-case class SimHash64Expr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.catalogString}")
+case class SimHash64Expr(child: Expression) extends StringKernelExpression {
 
   override def dataType: DataType = LongType
-
   override def prettyName: String = "simhash64"
+  protected def kernelCall(c: String): String = s"graft.expressions.ShingleHashing.simhash($c)"
 
   override protected def nullSafeEval(input: Any): Any =
-    SimHash64Expr.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expressions.SimHash64Expr.compute($c)")
+    ShingleHashing.simhash(input.asInstanceOf[UTF8String])
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
     copy(child = newChild)
-}
-
-object SimHash64Expr {
-  private val Seed = 42L
-
-  /** One row's work; called from both interpreted eval and generated code.
-    * Empty token set → all votes 0 → no bit set → 0L (HOF parity). */
-  def compute(text: UTF8String): Long = {
-    val toks = text.toString.split("\\s+")
-    val votes = new Array[Int](64)
-    var i = 0
-    while (i < toks.length) {
-      if (toks(i).nonEmpty) {
-        val u = UTF8String.fromString(toks(i))
-        val h = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, Seed)
-        var bit = 0
-        while (bit < 64) {
-          if (((h >>> bit) & 1L) == 1L) votes(bit) += 1 else votes(bit) -= 1
-          bit += 1
-        }
-      }
-      i += 1
-    }
-    var out = 0L
-    var bit = 0
-    while (bit < 64) {
-      if (votes(bit) > 0) out |= 1L << bit
-      bit += 1
-    }
-    out
-  }
 }

@@ -1,8 +1,6 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,8 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * own UAX #15 implementation — the q196 oracle cross-checks it
   * against DuckDB's independent one). Codegen'd via the static
   * [[UnicodeNormalize.compute]]. */
-case class UnicodeNormalize(child: Expression, form: String)
-    extends UnaryExpression {
+case class UnicodeNormalize(child: Expression, form: String) extends StringKernelExpression {
 
   require(form == "NFC" || form == "NFKC",
     s"normalization form '$form' — NFC or NFKC")
@@ -30,17 +27,10 @@ case class UnicodeNormalize(child: Expression, form: String)
 
   override def prettyName: String = "unicode_normalize"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.catalogString}")
-
   override protected def nullSafeEval(input: Any): Any =
     UnicodeNormalize.compute(input.asInstanceOf[UTF8String], form)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"""graft.expressions.UnicodeNormalize.compute($c, "$form")""")
+  protected def kernelCall(c: String): String = s"""graft.expressions.UnicodeNormalize.compute($c, "$form")"""
 
   override protected def withNewChildInternal(newChild: Expression): UnicodeNormalize =
     copy(child = newChild)

@@ -87,12 +87,7 @@ object RemoveDotSegments {
   * path structure, which §2.2 forbids. A `%` not followed by two hex
   * digits passes through literally (crawl URLs are dirty; never
   * throw). Per-row scalar, codegen via [[PercentNormalize.normalize]]. */
-case class PercentNormalize(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.catalogString}")
+case class PercentNormalize(child: Expression) extends StringKernelExpression {
 
   override def dataType: DataType = StringType
 
@@ -101,9 +96,7 @@ case class PercentNormalize(child: Expression) extends UnaryExpression {
   override protected def nullSafeEval(input: Any): Any =
     PercentNormalize.normalize(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.expressions.PercentNormalize.normalize($c)")
+  protected def kernelCall(c: String): String = s"graft.expressions.PercentNormalize.normalize($c)"
 
   override protected def withNewChildInternal(newChild: Expression): PercentNormalize =
     copy(child = newChild)

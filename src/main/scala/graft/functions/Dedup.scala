@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.expressions.{MinHashSignature, ShinglePairHashes, SimHash64Expr}
+import graft.expressions.{MinHashSignature, ShinglePairHashes, ShingleSketch, SimHash64Expr}
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard.
@@ -51,6 +51,11 @@ object Dedup {
   def shinglePairHashes(textCol: Column, n: Int): Column =
     ColumnBridge.column(ShinglePairHashes(ColumnBridge.expression(textCol), n))
 
+  /** [[ShingleSketch]]: `sig` (empty when `numHashes` is 0) and the shingle
+    * hashes `sh` of one text from one pass of the fused kernel. */
+  private def sketch(textCol: Column, n: Int, numHashes: Int): Column =
+    ColumnBridge.column(ShingleSketch(ColumnBridge.expression(textCol), n, numHashes))
+
   /** MinHash signatures for a corpus: one row per doc, `sig` =
     * ArrayType(Long) of length `numHashes`, computed SHUFFLE-FREE by the
     * native [[MinHashSignature]] expression (one codegen'd loop per row,
@@ -74,40 +79,96 @@ object Dedup {
         xxhash64(slice(signature, b * rowsPerBand + 1, rowsPerBand)).as("h"))
     }: _*)
 
-  /** MinHash-LSH candidate duplicate pairs.
-    *
-    * Pipeline: shingle → signature → band hashes → explode bands →
-    * self-join on (band, hash) → distinct (a < b) pairs → estimate Jaccard
-    * from signature agreement. The only shuffle keys are band hashes;
-    * bucket sizes stay small because a band hash is 64 bits.
-    */
+  /** The band hashes of `sig` as `array<long>`, null for a shingle-less
+    * document (fewer than `shingleSize` tokens): its sentinel signature
+    * would band-collide with every other such document. */
+  private def bandHashArray(sig: Column, numHashes: Int, bands: Int): Column = {
+    require(numHashes % bands == 0,
+      s"numHashes ($numHashes) must be divisible by bands ($bands): " +
+        "a truncated rowsPerBand would silently leave signature slots unused")
+    when(element_at(sig, 1) =!= lit(Long.MaxValue),
+      bandHashes(sig, bands, numHashes / bands).getField("h"))
+  }
+
+  /** One `(id, band, h)` row per band of every doc with band hashes `bh`.
+    * The outer explode plus a filter on its output: a plain explode makes
+    * Catalyst infer `size(bh) > 0` and push it below the projection that
+    * computes `bh`, evaluating the signature once more per band. */
+  private def bandRows(docs: DataFrame): DataFrame =
+    docs.select(col("id"), posexplode_outer(col("bh")).as(Seq("band", "h")))
+      .filter(col("h").isNotNull)
+
+  /** Exact Jaccard of the shingle-hash sets `__sh_a`/`__sh_b`, rounded to 6
+    * places; hashed sets have the string sets' sizes short of an xxhash64
+    * collision. */
+  private val jaccard: Column =
+    round(size(array_intersect(col("__sh_a"), col("__sh_b"))).cast("double") /
+      size(array_union(col("__sh_a"), col("__sh_b"))).cast("double"), 6)
+
+  /** Candidate pairs from ONE bucket join: rows of `left` and `right` (an
+    * `id` column plus the `keys`) that share every key, as `(a, b)` with
+    * `pair(a, b)`, next to the keys. A pair sharing several buckets appears
+    * once per bucket. The only join keys are bucket keys (64-bit band
+    * hashes, SRP buckets): no O(n²) product. */
+  private[functions] def bucketPairs(left: DataFrame, right: DataFrame, keys: Seq[String],
+      pair: (Column, Column) => Column): DataFrame =
+    left.withColumnRenamed("id", "a").join(right.withColumnRenamed("id", "b"), keys)
+      .filter(pair(col("a"), col("b")))
+
+  /** Verification sized by the candidates. Each side's payload (an `id`
+    * column plus payload columns) is semi-joined to the broadcast ids of
+    * `cands`' `a`/`b` side, and only those rows are broadcast into the join
+    * with the pairs: no exchange carries the payload of a document outside
+    * every candidate pair (one row per distinct candidate document; one
+    * broadcast when both sides read the same payload). The payload columns
+    * come back suffixed `_a`/`_b`; rows failing `keep` drop, `score` is
+    * named `scoreName`, and scores below `threshold` drop. */
+  private[functions] def verifyPairs(cands: DataFrame, payloadA: DataFrame, payloadB: DataFrame,
+      keep: Column, scoreName: String, score: Column, threshold: Option[Double]): DataFrame = {
+    def touched(p: DataFrame, sides: String*) = p.join(
+      broadcast(cands.select(explode(array(sides.map(col): _*)).as("id"))), Seq("id"), "left_semi")
+    val (pa, pb) =
+      if (payloadA eq payloadB) { val p = touched(payloadA, "a", "b"); (p, p) }
+      else (touched(payloadA, "a"), touched(payloadB, "b"))
+    def side(p: DataFrame, s: String) =
+      broadcast(p.select(p.columns.map(c => col(c).as(s"${c}_$s")): _*))
+    val scored = cands.join(side(pa, "a"), col("a") === col("id_a"))
+      .join(side(pb, "b"), col("b") === col("id_b"))
+      .filter(keep)
+      .withColumn(scoreName, score)
+    threshold.fold(scored)(t => scored.filter(col(scoreName) >= t))
+  }
+
+  /** LSH pairs `(doc_a < doc_b, scoreName)` of `docs` (`id`, band hashes
+    * `bh`, payload): ONE band self-join ([[bucketPairs]]), then
+    * [[verifyPairs]] over the candidate documents' payload, keeping each
+    * pair only in the FIRST band where its band hashes agree — exactly once,
+    * with no distinct exchange. The band join carries band/hash/id only. */
+  private def lshPairs(docs: DataFrame, scoreName: String, score: Column,
+      threshold: Option[Double]): DataFrame = {
+    val banded = bandRows(docs)
+    val firstBand = array_position(
+      zip_with(col("bh_a"), col("bh_b"), (x, y) => x === y), true) === col("band") + 1
+    verifyPairs(bucketPairs(banded, banded, Seq("band", "h"), _ < _), docs, docs, firstBand,
+        scoreName, score, threshold)
+      .select(col("a").as("doc_a"), col("b").as("doc_b"), col(scoreName))
+  }
+
+  /** MinHash-LSH candidate duplicate pairs ([[lshPairs]]):
+    * `(doc_a < doc_b, est_jaccard)`, one row per pair that collides in some
+    * band, `est_jaccard` the share of agreeing signature slots. */
   def minhashCandidatePairs(
       df: DataFrame,
       idCol: String,
       textCol: String,
       shingleSize: Int = 3,
       numHashes: Int = 16,
-      bands: Int = 4): DataFrame = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be divisible by bands ($bands): " +
-        "a truncated rowsPerBand would silently leave signature slots unused")
-    val rowsPerBand = numHashes / bands
-    // Shingle-less documents (< shingleSize tokens) carry the sentinel
-    // signature — drop them before banding or every such pair would
-    // band-collide as a spurious candidate.
-    val sigs = minhashSignatures(df, idCol, textCol, shingleSize, numHashes)
-      .filter(element_at(col("sig"), 1) =!= lit(Long.MaxValue))
-      .withColumn("band", explode(bandHashes(col("sig"), bands, rowsPerBand)))
-      .select(col("doc_id"), col("sig"), col("band.band").as("band"), col("band.h").as("h"))
-    val a = sigs.select(col("band"), col("h"), col("doc_id").as("doc_a"), col("sig").as("sig_a"))
-    val b = sigs.select(col("band"), col("h"), col("doc_id").as("doc_b"), col("sig").as("sig_b"))
-    a.join(b, Seq("band", "h"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), id => id))
-          .cast("double") / lit(numHashes.toDouble)).as("est_jaccard"))
-      .distinct()
-  }
+      bands: Int = 4): DataFrame =
+    lshPairs(minhashSignatures(df, idCol, textCol, shingleSize, numHashes)
+        .select(col("doc_id").as("id"), col("sig"),
+          bandHashArray(col("sig"), numHashes, bands).as("bh")),
+      "est_jaccard", size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
+        id => id)).cast("double") / lit(numHashes.toDouble), None)
 
   /** Near-duplicate pairs: MinHash-LSH candidate generation composed with
     * exact shingle-Jaccard verification — the scale-correct shape. The
@@ -115,18 +176,12 @@ object Dedup {
     * never the full corpus; recall for pairs at `threshold`≥0.9 with the
     * default 64 hashes / 16 bands is 1 − (1−j⁴)¹⁶ ≈ 1−1e-9.
     *
-    * ONE pass over the text (r15, guide §1.2/§2.3): signature (candidate
-    * side) and shingle-hash set (verify side) materialize together into an
-    * eager `localCheckpoint`, so tokenize+shingle+64-permutation hashing
-    * runs exactly once per document. The previous composition re-scanned
-    * the corpus for each side of the band self-join AND for each verify
-    * join (4 text scans), and Catalyst's filter pushdown additionally
-    * duplicated the signature expression below the sentinel filter —
-    * 8 signature evaluations per doc where one suffices. The candidate
-    * join also no longer carries the 64-long signatures through the
-    * exchange (they were only used for an `est_jaccard` this operator
-    * discards); band/hash/id is the whole payload. The checkpoint backs
-    * the returned plan — release it via `Housekeeping.release(result)`
+    * ONE pass over the text: the fused kernel ([[ShingleSketch]]) gives
+    * every doc's band hashes and shingle-hash set into an eager
+    * `localCheckpoint`. The pairs then take three jobs: the band join's
+    * broadcast, the candidate ids' broadcast, and the broadcast of the
+    * candidate documents' shingle sets ([[verifyPairs]]). The checkpoint
+    * backs the returned plan — release it via `Housekeeping.release(result)`
     * (or the session sweep) once the result is consumed.
     *
     * `jaccard` is rounded to 6 before the threshold filter, matching
@@ -142,6 +197,18 @@ object Dedup {
       threshold: Double = 0.9): DataFrame =
     hashedNearDupPairs(df, idCol, textCol, shingleSize, numHashes, bands, threshold)._2
 
+  /** Per doc (`id`) its band hashes `bh` ([[bandHashArray]]) and shingle
+    * hashes `__sh`, from one pass of the fused kernel, in an eager
+    * `localCheckpoint` the caller releases. Eager: several jobs read it (the
+    * band join, the candidate ids and the payload; lshIndexWrite's two
+    * concurrent writes), so it is complete before any of them starts. */
+  private def hashedDocs(df: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int, numHashes: Int, bands: Int): DataFrame =
+    df.select(col(idCol).as("id"), sketch(col(textCol), shingleSize, numHashes).as("__k"))
+      .select(col("id"), bandHashArray(col("__k.sig"), numHashes, bands).as("bh"),
+        col("__k.sh").as("__sh"))
+      .localCheckpoint(true)
+
   /** [[nearDupPairs]] together with the hash checkpoint its plan reads, for
     * callers that materialize the pairs themselves and can free the
     * checkpoint right after (see [[clusterCanonicalDedup]]). */
@@ -153,55 +220,21 @@ object Dedup {
       numHashes: Int,
       bands: Int,
       threshold: Double): (DataFrame, DataFrame) = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be divisible by bands ($bands): " +
-        "a truncated rowsPerBand would silently leave signature slots unused")
-    val rowsPerBand = numHashes / bands
     val hashed = graft.JobLabel(df.sparkSession, "graft.dedup: hash") {
-      df.select(col(idCol).as("doc_id"),
-          ColumnBridge.column(MinHashSignature(
-            ColumnBridge.expression(col(textCol)), shingleSize, numHashes)).as("sig"),
-          shinglePairHashes(col(textCol), shingleSize).getField("a").as("__sh"))
-        .localCheckpoint(true)
+      hashedDocs(df, idCol, textCol, shingleSize, numHashes, bands)
     }
-    // Shingle-less documents (< shingleSize tokens) carry the sentinel
-    // signature — drop them before banding or every such pair would
-    // band-collide as a spurious candidate.
-    val banded = hashed
-      .filter(element_at(col("sig"), 1) =!= lit(Long.MaxValue))
-      .select(col("doc_id"),
-        explode(bandHashes(col("sig"), bands, rowsPerBand)).as("__b"))
-      .select(col("doc_id"), col("__b.band").as("band"), col("__b.h").as("h"))
-    val cands = banded.select(col("band"), col("h"), col("doc_id").as("doc_a"))
-      .join(banded.select(col("band"), col("h"), col("doc_id").as("doc_b")),
-        Seq("band", "h"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .distinct()
-    // Verification compares hashed shingle sets (8 bytes/shingle in the join
-    // payload instead of the string): set sizes — and hence Jaccard — are
-    // collision-exact in practice, matching the string-set computation.
-    val sh = hashed.select(col("doc_id"), col("__sh"))
-    val pairs = cands
-      .join(sh.select(col("doc_id").as("doc_a"), col("__sh").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("__sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("jaccard", round(
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
-    (hashed, pairs)
+    (hashed, lshPairs(hashed, "jaccard", jaccard, Some(threshold)))
   }
 
-  // Shared decontamination inputs. ShinglePairHashes dedupes per row, so
+  // Shared decontamination inputs. The kernel dedupes shingles per row, so
   // the corpus stream is already per-doc distinct.
   private def shingleStream(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =
     df.select(col(idCol).as("doc_id"),
-      explode(shinglePairHashes(col(textCol), n).getField("a")).as("__sh"))
+      explode(sketch(col(textCol), n, 0).getField("sh")).as("__sh"))
   // benchmark side needs only the text column — no id required
   private def shingleSet(df: DataFrame, textCol: String, n: Int): DataFrame =
-    df.select(explode(shinglePairHashes(col(textCol), n).getField("a")).as("__sh"))
+    df.select(explode(sketch(col(textCol), n, 0).getField("sh")).as("__sh"))
       .distinct()
 
   /** The INCREMENTAL near-dedup scale path: hash and band the corpus ONCE
@@ -233,48 +266,29 @@ object Dedup {
       bands: Int = 16,
       nParts: Int = 64,
       mode: String = "overwrite"): Unit = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be divisible by bands ($bands)")
     require(nParts >= 1, s"nParts $nParts")
-    val rowsPerBand = numHashes / bands
-    // ONE pass over the text (r15): signatures and shingle-hash sets
-    // materialize together, then BOTH table writes read the checkpoint —
-    // previously each write re-scanned the corpus and re-ran the hash
-    // expressions. The two writes land in disjoint directories and are
-    // independent, so they run CONCURRENTLY (guide §2.6): the docs write
-    // back-fills executors freed by the bands write's tail.
-    val hashed = df.select(col(idCol).as("doc_id"),
-        ColumnBridge.column(MinHashSignature(
-          ColumnBridge.expression(col(textCol)), shingleSize, numHashes)).as("sig"),
-        shinglePairHashes(col(textCol), shingleSize).getField("a").as("__sh"))
-      .localCheckpoint(true)
+    // ONE pass over the text: both table writes read the hash checkpoint.
+    // They land in disjoint directories and are independent, so they run
+    // CONCURRENTLY (guide §2.6): the docs write back-fills executors freed
+    // by the bands write's tail.
+    val hashed = hashedDocs(df, idCol, textCol, shingleSize, numHashes, bands)
     try {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: scala.concurrent.ExecutionContext = writeEc
-      // Cluster each table by its partition column before the partitioned
-      // write (guide §6: "REBALANCE hint before the write"): without the
-      // exchange every write task opens a file in up to nParts directories,
-      // so the index accumulates O(tasks × nParts) small files — a
-      // million-task corpus with nParts=64 is 64M tiny files, and the probe
-      // pays per-file open cost inside every pruned partition it reads.
-      // REBALANCE (vs a plain keyed repartition) lets AQE size the layout
-      // from actual bytes BOTH ways: small partitions coalesce (few files
-      // locally) and a large partition splits into advisory-sized tasks
-      // (write parallelism is not capped at nParts, files stay right-sized
-      // at scale). The shuffle payload is the skinny band rows / per-doc
-      // shingle arrays that were about to be written anyway.
+      // REBALANCE each table by its partition column before the partitioned
+      // write: without it every write task opens a file in up to nParts
+      // directories (O(tasks × nParts) small files), and AQE sizes the
+      // layout from actual bytes both ways (small partitions coalesce, a
+      // large one splits into advisory-sized tasks).
       val bandsJob = Future {
-        hashed
-          .filter(element_at(col("sig"), 1) =!= lit(Long.MaxValue))
-          .withColumn("__b", explode(bandHashes(col("sig"), bands, rowsPerBand)))
-          .select(col("doc_id"), col("__b.band").as("band"), col("__b.h").as("h"))
+        bandRows(hashed).withColumnRenamed("id", "doc_id")
           .withColumn("__hb", pmod(col("h"), lit(nParts.toLong)))
           .hint("rebalance", col("__hb"))
           .write.partitionBy("__hb").mode(mode).parquet(s"$path/bands")
       }
       val docsJob = Future {
-        hashed.select(col("doc_id"), col("__sh"))
+        hashed.select(col("id").as("doc_id"), col("__sh"))
           .filter(size(col("__sh")) > 0)
           .withColumn("__db", pmod(xxhash64(col("doc_id")), lit(nParts.toLong)))
           .hint("rebalance", col("__db"))
@@ -335,21 +349,11 @@ object Dedup {
       textCol: String,
       threshold: Double = 0.9): DataFrame = {
     val (shingleSize, numHashes, bands, nParts) = lshParams(spark, path)
-    val rowsPerBand = numHashes / bands
-    // ONE pass over the batch text (r15): signature + shingle hashes
-    // materialize together; the probe's band stream, the bucket-set
-    // collect, and the verify side all read the checkpoint instead of
-    // re-scanning and re-hashing the batch. The checkpoint backs the
-    // returned plan — the caller releases it (Housekeeping) when done.
-    val hashed = batch.select(col(idCol).as("doc_b"),
-        ColumnBridge.column(MinHashSignature(
-          ColumnBridge.expression(col(textCol)), shingleSize, numHashes)).as("sig"),
-        shinglePairHashes(col(textCol), shingleSize).getField("a").as("sh_b"))
-      .localCheckpoint(true)
-    val probe = hashed
-      .filter(element_at(col("sig"), 1) =!= lit(Long.MaxValue))
-      .withColumn("__b", explode(bandHashes(col("sig"), bands, rowsPerBand)))
-      .select(col("doc_b"), col("__b.band").as("band"), col("__b.h").as("h"))
+    // ONE pass over the batch text: the probe's band stream, the
+    // bucket-set collect and the verify side all read the hash checkpoint,
+    // which backs the returned plan — the caller releases it (Housekeeping)
+    val hashed = hashedDocs(batch, idCol, textCol, shingleSize, numHashes, bands)
+    val probe = bandRows(hashed)
     val hbs = probe.select(pmod(col("h"), lit(nParts.toLong)).as("hb"))
       .distinct().collect().map(_.getLong(0)).toSeq
     val empty = spark.emptyDataFrame
@@ -359,26 +363,21 @@ object Dedup {
     // the candidate set is read twice (verify-partition discovery + the
     // verify join itself); both reads are the PRUNED bands scan joined to
     // the broadcast probe — recomputing it keeps the __hb partition
-    // pruning visible in the returned plan (pinned by TextDedupSpec), and
-    // the expensive per-doc hashing it consumes comes from the checkpoint
-    val cands = spark.read.parquet(s"$path/bands")
+    // pruning visible in the returned plan (pinned by TextDedupSpec)
+    val idxBands = spark.read.parquet(s"$path/bands")
       .filter(col("__hb").isin(hbs: _*))
-      .join(broadcast(probe), Seq("band", "h"))
-      .filter(col("doc_id") =!= col("doc_b"))
-      .select(col("doc_id").as("doc_a"), col("doc_b")).distinct()
-    val dbs = cands.select(pmod(xxhash64(col("doc_a")), lit(nParts.toLong)).as("db"))
+      .select(col("doc_id").as("id"), col("band"), col("h"))
+    val cands = bucketPairs(idxBands, broadcast(probe), Seq("band", "h"), _ =!= _)
+      .select("a", "b").distinct()
+    val dbs = cands.select(pmod(xxhash64(col("a")), lit(nParts.toLong)).as("db"))
       .distinct().collect().map(_.getLong(0)).toSeq
     if (dbs.isEmpty) { graft.Housekeeping.release(hashed); return empty }
     val idxSh = spark.read.parquet(s"$path/docs")
       .filter(col("__db").isin(dbs: _*))
-      .select(col("doc_id").as("doc_a"), col("__sh").as("sh_a"))
-    val batchSh = hashed.select(col("doc_b"), col("sh_b"))
-    cands.join(idxSh, Seq("doc_a")).join(broadcast(batchSh), Seq("doc_b"))
-      .withColumn("jaccard", round(
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+      .select(col("doc_id").as("id"), col("__sh"))
+    verifyPairs(cands, idxSh, hashed.select(col("id"), col("__sh")), lit(true),
+        "jaccard", jaccard, Some(threshold))
+      .select(col("a").as("doc_a"), col("b").as("doc_b"), col("jaccard"))
   }
 
   /** Benchmark decontamination: corpus documents sharing at least one
@@ -413,12 +412,9 @@ object Dedup {
       textCol: String,
       n: Int = 8,
       fpp: Double = 0.01): DataFrame = {
-    // materialize the (large) benchmark shingle set ONCE: the size count,
-    // the Bloom aggregation, and the exact verify join all read the
-    // checkpoint instead of re-running tokenize+shingle+distinct three times
-    // this checkpoint is referenced by the RETURNED plan (the exact-verify
-    // join), so it must outlive the call — the caller releases it with
-    // Housekeeping once the result is consumed
+    // the benchmark shingle set materializes ONCE for the size count, the
+    // Bloom aggregation and the exact verify; the returned plan reads it,
+    // so the caller releases it with Housekeeping
     val benchShingles = shingleSet(benchmark, textCol, n)
       .localCheckpoint(true)
     val expected = math.max(benchShingles.count(), 1L)
@@ -493,10 +489,8 @@ object Dedup {
       idCol: String,
       textCol: String,
       minDocs: Int): DataFrame = {
-    // split ONCE (r15, guide §5): the document-frequency count and the
-    // reconstruction join both read the materialized per-doc line arrays
-    // instead of re-scanning and re-splitting the corpus per reference;
-    // caller/sweep releases the checkpoint
+    // split ONCE: the document-frequency count and the reconstruction join
+    // both read the per-doc line arrays; caller/sweep releases them
     val lineArr = df.select(col(idCol).as("__id"),
         split(col(textCol), "\n").as("__ls"))
       .localCheckpoint(true)
@@ -524,19 +518,15 @@ object Dedup {
     * SoCC'14). Returns `(node, component)` for every node appearing in
     * `pairs`, where `component` is the MINIMUM node id in the component —
     * the canonical cluster id a dedup pass keeps. A node seen only in
-    * self-loops is its own component.
-    *
-    * The rounds run in [[starForest]] until the canonical `(u < v)` edge
-    * set is a forest of stars: no node is both a centre `u` and a leaf
-    * `v`, and no leaf has two centres. That set is a fixpoint of both star
-    * steps, every round preserves connectivity, and `u < v` makes each
-    * centre its star's minimum — so at that point every leaf `v` is
-    * labeled `u`, and every other node is its own minimum. Testing the
-    * edge set for that shape directly ends the loop on the round that
-    * reaches it; a test for "this round changed nothing" would spend one
-    * more full round confirming it. An input that is already a forest of
-    * stars (the common dedup case: each original with a few near copies)
-    * runs no round at all.
+    * self-loops is its own component. The canonical `(u < v)` edge set is done once it is a forest of stars:
+    * no node is both a centre `u` and a leaf `v`, and no leaf has two
+    * centres. That set is a fixpoint of both star steps, every round
+    * preserves connectivity and the node set, and `u < v` makes each centre
+    * its star's minimum — so every leaf `v` is labeled `u`, and every other
+    * node is its own minimum. [[forestRoles]] tests the shape and labels the
+    * nodes in ONE aggregation, so an input that is already a forest of stars
+    * (the common dedup case: each original with a few near copies) runs no
+    * round and no separate check.
     *
     * Scale shape: each round is two hash aggregations + joins keyed on node
     * ids (8 bytes); no adjacency list is ever collected, and the edge set
@@ -554,56 +544,77 @@ object Dedup {
       aCol: String,
       bCol: String,
       maxRounds: Int = 30): DataFrame = {
-    val spark = pairs.sparkSession
-    // materialize the (possibly expensive — LSH + exact verify) pair
-    // pipeline ONCE; the edge iteration and the node set both derive from
-    // the checkpoint, never from the original lineage (exchange reuse does
-    // not span the separate actions below)
     var base: DataFrame = null
-    var forest: DataFrame = null
     try {
-      base = graft.JobLabel(spark, "graft.dedup: components base") {
+      // canonical distinct edges (u ≤ v), self-loops kept for the node set.
+      // LAZY checkpoint: the roles aggregation materializes it, and the
+      // rounds (if any) read it instead of the pairs' lineage
+      base = graft.JobLabel(pairs.sparkSession, "graft.dedup: components base") {
         pairs
           .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
-          .localCheckpoint(true)
+          .select(least(col("x"), col("y")).as("u"), greatest(col("x"), col("y")).as("v"))
+          .distinct()
+          .localCheckpoint(false)
       }
-      forest = starForest(base, "x", "y", maxRounds)
-      // leaves map to their centre; centres and self-loop-only nodes (their
-      // edges were dropped) to themselves. Materialize the labeling, then
-      // release the base and forest frames — the caller receives ONE
-      // persisted frame.
-      val nodes = base.select(col("x").as("n"))
-        .union(base.select(col("y").as("n"))).distinct()
-      val out = graft.JobLabel(spark, "graft.dedup: components label") {
-        nodes
-          .join(forest.select(col("v").as("n"), col("u").as("c")), Seq("n"), "left")
-          .select(col("n").as("node"), coalesce(col("c"), col("n")).as("component"))
-          .localCheckpoint(true)
-      }
-      graft.Housekeeping.release(base)
-      graft.Housekeeping.release(forest)
-      out
-    } catch {
-      case t: Throwable =>
-        // a failure must not strand the live checkpoints — the caller's
-        // retry would stack a fresh set on top. Double-release of
-        // already-freed frames is a no-op.
-        Seq(base, forest).filter(_ != null).foreach(graft.Housekeeping.release)
-        throw t
+      forestRoles(base.filter(col("u") =!= col("v")),
+          base.filter(col("u") === col("v")).select(col("u").as("n")), maxRounds,
+          "graft.dedup: components label")
+        .select(col("n").as("node"), coalesce(col("c"), col("n")).as("component"))
+    } finally if (base != null) graft.Housekeeping.release(base)
+  }
+
+  /** [[starRoles]] over the forest of stars `edges` contract to: over
+    * `edges` themselves when they already form one (no round, no separate
+    * check), else over the output of [[starForest]]'s rounds. `edges` stays
+    * the caller's; the returned checkpoint is the only frame left persisted,
+    * on failure too. */
+  private def forestRoles(edges: DataFrame, nodes: DataFrame, maxRounds: Int,
+      label: String): DataFrame = {
+    val (roles, bad) = starRoles(edges, nodes, label)
+    if (bad == 0) roles
+    else {
+      graft.Housekeeping.release(roles)
+      val forest = starForest(edges, maxRounds)
+      try starRoles(forest, nodes, label)._1 finally graft.Housekeeping.release(forest)
     }
   }
 
-  /** The large-star/small-star fixpoint of the `(aCol, bCol)` pair graph:
-    * checkpointed canonical edges `(u, v)`, `u < v`, forming one star per
-    * connected component (of more than one node), centred at the
-    * component's minimum. Self-loops are dropped. The returned frame is the
-    * only checkpoint left persisted; the caller releases it. */
-  private[functions] def starForest(
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxRounds: Int): DataFrame = {
-    val spark = pairs.sparkSession
+  /** ONE aggregation over every node and its roles in `edges` (canonical,
+    * distinct `(u, v)`, `u < v`): per node `n` its `leaf` flag (1 when it is
+    * some edge's `v`), its edge-endpoint count `roles`, and for a leaf its
+    * smallest centre `c`. `nodes` (column `n`) adds nodes outside every
+    * edge. The frame is materialized by an eager `localCheckpoint`, and the
+    * same job counts, through `Dataset.observe`, the nodes that break the
+    * forest-of-stars shape: a leaf that is in a second edge. Returns the
+    * checkpoint (the caller releases it) and that count. */
+  private def starRoles(edges: DataFrame, nodes: DataFrame,
+      label: String): (DataFrame, Long) = {
+    val obs = new org.apache.spark.sql.Observation()
+    val noCentre = lit(null).cast(edges.schema("u").dataType)
+    val roles = graft.JobLabel(edges.sparkSession, label) {
+      nodes.select(col("n"), lit(0).as("leaf"), lit(0).as("r"), noCentre.as("c"))
+        .union(edges.select(explode(array(
+            struct(col("u").as("n"), lit(0).as("leaf"), lit(1).as("r"), noCentre.as("c")),
+            struct(col("v").as("n"), lit(1).as("leaf"), lit(1).as("r"), col("u").as("c"))))
+          .as("__e")).select("__e.*"))
+        .groupBy(col("n"))
+        .agg(max(col("leaf")).as("leaf"), sum(col("r")).as("roles"), min(col("c")).as("c"))
+        .observe(obs, count(when(col("leaf") === 1 && col("roles") > 1, 1)).as("bad"))
+        .localCheckpoint(true)
+    }
+    (roles, obs.get("bad").asInstanceOf[Long])
+  }
+
+  /** The large-star/small-star rounds over canonical, distinct edges
+    * `(u, v)`, `u < v`, until they form one star per connected component
+    * (of more than one node), centred at the component's minimum. The shape
+    * is checked after each round, so call it on edges known not to be a
+    * forest of stars (a round leaves such a forest unchanged). `edges` stays
+    * the caller's; superseded rounds are released, and the returned
+    * checkpoint is the only round left persisted — the caller releases
+    * it. */
+  private[functions] def starForest(edges: DataFrame, maxRounds: Int): DataFrame = {
+    val spark = edges.sparkSession
     // Forest of stars ⇔ no node is a leaf (v) AND appears in any other
     // edge: as a centre, or as the leaf of a second centre (edges are
     // distinct). One aggregation over both roles, then `isEmpty` — the
@@ -619,26 +630,14 @@ object Dedup {
         .filter(col("leaf") === 1 && col("roles") > 1)
         .isEmpty
 
-    var edges: DataFrame = null
+    var cur = edges
     try {
-      // canonical undirected edges (u < v), self-loops dropped; LAZY
-      // checkpoint, materialized by the check. Building it runs the pairs'
-      // own shuffle stages (a caller's LSH and verify joins), so it carries
-      // its own label.
-      edges = graft.JobLabel(spark, "graft.dedup: pairs") {
-        pairs
-          .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
-          .filter(col("x") =!= col("y"))
-          .select(least(col("x"), col("y")).as("u"), greatest(col("x"), col("y")).as("v"))
-          .distinct()
-          .localCheckpoint(false)
-      }
-      var done = graft.JobLabel(spark, "graft.dedup: star check")(isStarForest(edges))
+      var done = false
       var rounds = 0
       while (!done && rounds < maxRounds) graft.JobLabel(spark, "graft.dedup: star round") {
         // LARGE-STAR: for each center u over the SYMMETRIC adjacency, link
         // every strictly larger neighbor to m = min(u, Γ(u)).
-        val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+        val sym = cur.union(cur.select(col("v").as("u"), col("u").as("v")))
         val lsMin = sym.groupBy("u").agg(least(col("u"), min(col("v"))).as("m"))
         // no distinct here: duplicate (m, v) edges are absorbed by the
         // small-star groupBy/join and the final distinct — dropping the
@@ -662,15 +661,15 @@ object Dedup {
         done = isStarForest(small)
         // the new round is materialized (the check ran): the previous
         // round's edge blocks are dead — release them before they pile up
-        graft.Housekeeping.release(edges)
-        edges = small
+        if (cur ne edges) graft.Housekeeping.release(cur)
+        cur = small
         rounds += 1
       }
       require(done, s"connectedComponents did not converge in $maxRounds rounds")
-      edges
+      cur
     } catch {
       case t: Throwable =>
-        if (edges != null) graft.Housekeeping.release(edges)
+        if (cur ne edges) graft.Housekeeping.release(cur)
         throw t
     }
   }
@@ -681,14 +680,13 @@ object Dedup {
     * plus every doc in no near-dup pair. Returns the kept `(idCol)` rows,
     * one per id.
     *
-    * No node is labeled: at the [[starForest]] fixpoint the members to drop
-    * (node ≠ its component minimum) are exactly the star leaves `v`, so the
-    * result is every id that is not a leaf: one aggregation over the ids
-    * and the leaves together, a single shuffle where an anti-join takes
-    * two. The ids come from the hash checkpoint, which holds every doc, so
-    * `df` is evaluated once. The result is materialized, then the hash
-    * checkpoint and the forest are released: the result is the one
-    * persisted frame, and `Housekeeping.release` on it frees it. */
+    * No node is labeled: once the pair edges are a forest of stars, the
+    * members to drop (node ≠ its component minimum) are exactly the star
+    * leaves `v`. The verified pairs are canonical and distinct already, so
+    * they are the edges as they are; [[starRoles]] aggregates the ids (from
+    * the hash checkpoint, which holds every doc, so `df` is evaluated once)
+    * with the edges' roles ([[forestRoles]]): the result is its non-leaves,
+    * reading one persisted frame that `Housekeeping.release` on it frees. */
   def clusterCanonicalDedup(
       df: DataFrame,
       idCol: String,
@@ -696,22 +694,24 @@ object Dedup {
       shingleSize: Int = 3,
       numHashes: Int = 64,
       bands: Int = 16,
-      threshold: Double = 0.9): DataFrame =
-    graft.JobLabel(df.sparkSession, "graft.dedup: cluster canonical") {
+      threshold: Double = 0.9): DataFrame = {
+    val spark = df.sparkSession
+    graft.JobLabel(spark, "graft.dedup: cluster canonical") {
       val (hashed, pairs) = hashedNearDupPairs(
         df, idCol, textCol, shingleSize, numHashes, bands, threshold)
-      var forest: DataFrame = null
+      var edges: DataFrame = null
       try {
-        forest = starForest(pairs, "doc_a", "doc_b", maxRounds = 30)
-        hashed.select(col("doc_id"), lit(false).as("leaf"))
-          .union(forest.select(col("v").cast(hashed.schema("doc_id").dataType), lit(true)))
-          .groupBy(col("doc_id").as(idCol))
-          .agg(max(col("leaf")).as("leaf"))
-          .filter(!col("leaf"))
-          .select(idCol)
-          .localCheckpoint(true)
-      } finally Seq(hashed, forest).filter(_ != null).foreach(graft.Housekeeping.release)
+        // LAZY checkpoint: building it runs the pairs' own stages (the band
+        // join and verify broadcasts) under their own label; the roles
+        // aggregation materializes it
+        edges = graft.JobLabel(spark, "graft.dedup: pairs") {
+          pairs.select(col("doc_a").as("u"), col("doc_b").as("v")).localCheckpoint(false)
+        }
+        forestRoles(edges, hashed.select(col("id").as("n")), 30, "graft.dedup: keep")
+          .filter(col("leaf") === 0).select(col("n").as(idCol))
+      } finally Seq(hashed, edges).filter(_ != null).foreach(graft.Housekeeping.release)
     }
+  }
 
   /** Exact-substring deduplication (Lee et al. 2022, "Deduplicating
     * Training Data Makes Language Models Better"): every K-token span that
@@ -737,10 +737,8 @@ object Dedup {
       textCol: String,
       k: Int): DataFrame = {
     require(k >= 2, s"span length $k: a 1-token span would delete every repeated word")
-    // tokenize ONCE (r15, guide §5): the gram stream (referenced by both
-    // the duplicate count and the flagged-position join) and the final
-    // reconstruction all read the materialized per-doc token arrays —
-    // previously each reference re-scanned and re-tokenized the corpus;
+    // tokenize ONCE: the gram stream (duplicate count and flagged-position
+    // join) and the reconstruction read the per-doc token arrays;
     // caller/sweep releases the checkpoint
     val toks = df.select(col(idCol), graft.functions.Text.tokens(col(textCol)).as("toks"))
       .localCheckpoint(true)
@@ -797,23 +795,17 @@ object Dedup {
       n: Int,
       threshold: Double,
       maxShingleDocFreq: Option[Long] = None): DataFrame = {
-    // Shuffle 8-byte shingle hashes, not shingle strings: the join key and
-    // every exchange shrink ~4×, and Jaccard counts are unchanged short of
-    // an xxhash64 collision (~n²/2⁶⁵ — negligible at any realistic corpus).
-    // ONE pass over the text (r15): the per-doc shingle-hash arrays
-    // materialize once into an eager checkpoint; the exploded stream, the
-    // per-doc stats, and the exact verify all read it instead of
-    // re-tokenizing the corpus per plan reference (the capped branch held
-    // five such references). The checkpoint backs the returned plan —
+    // Shuffle 8-byte shingle hashes, not shingle strings: every exchange
+    // shrinks ~4×, and Jaccard counts are unchanged short of an xxhash64
+    // collision. The per-doc arrays materialize once into an eager
+    // checkpoint that every reference reads and the returned plan keeps —
     // released by `Housekeeping.release(result)` / the session sweep.
     val shArr = df.select(col(idCol).as("doc_id"),
-        shinglePairHashes(col(textCol), n).getField("a").as("__sh"))
+        sketch(col(textCol), n, 0).getField("sh").as("__sh"))
       .localCheckpoint(true)
     val sh = shArr.select(col("doc_id"), explode(col("__sh")).as("shingle"))
     // per-doc shingle counts are size(__sh) on the materialized arrays
-    // (ShinglePairHashes already dedupes per row) — the former
-    // explode+groupBy recounted them through a full corpus-shingle
-    // exchange (r16, guide §2.4: remove shuffles outright)
+    // (the kernel already dedupes per row): no corpus-shingle exchange
     val docCounts = shArr.select(col("doc_id"),
       size(col("__sh")).cast("long").as("__n"))
     maxShingleDocFreq match {
@@ -879,17 +871,12 @@ object Dedup {
               (col("__na") + col("__nb") - col("__maxc")).cast("double")
               - lit(1e-9))
           .select("doc_a", "doc_b")
-        // exact verify over the full sets — the nearDupPairs shape, with
-        // stop-shingle candidates instead of LSH candidates; the sets come
-        // from the same checkpoint (no re-tokenize)
-        pruned
-          .join(shArr.select(col("doc_id").as("doc_a"), col("__sh").as("sh_a")), Seq("doc_a"))
-          .join(shArr.select(col("doc_id").as("doc_b"), col("__sh").as("sh_b")), Seq("doc_b"))
-          .withColumn("jaccard", round(
-            size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-              size(array_union(col("sh_a"), col("sh_b"))).cast("double"), 6))
-          .filter(col("jaccard") >= threshold)
-          .select("doc_a", "doc_b", "jaccard")
+        // exact verify over the full sets, with stop-shingle candidates
+        // instead of LSH candidates; the sets come from the same checkpoint
+        val sets = shArr.select(col("doc_id").as("id"), col("__sh"))
+        verifyPairs(pruned.select(col("doc_a").as("a"), col("doc_b").as("b")), sets, sets,
+            lit(true), "jaccard", jaccard, Some(threshold))
+          .select(col("a").as("doc_a"), col("b").as("doc_b"), col("jaccard"))
     }
   }
 }

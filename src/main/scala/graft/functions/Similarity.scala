@@ -316,15 +316,11 @@ object Similarity {
       threshold: Double,
       nBits: Int = 0): DataFrame = {
     val bits = if (nBits > 0) nBits else srpBitsFor(df.count())
-    val withBucket = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .withColumn("bucket", srpBucket(col("vec"), dim, bits))
-    val a = withBucket.select(col("bucket"), col("id").as("id_a"), col("vec").as("vec_a"))
-    val b = withBucket.select(col("bucket"), col("id").as("id_b"), col("vec").as("vec_b"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos_sim", round(cosine(col("vec_a"), col("vec_b")), 6))
-      .filter(col("cos_sim") >= threshold)
-      .select("id_a", "id_b", "cos_sim")
+    val vecs = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
+    val keyed = vecs.select(col("id"), srpBucket(col("vec"), dim, bits).as("bucket"))
+    Dedup.verifyPairs(Dedup.bucketPairs(keyed, keyed, Seq("bucket"), _ < _), vecs, vecs,
+        lit(true), "cos_sim", round(cosine(col("vec_a"), col("vec_b")), 6), Some(threshold))
+      .select(col("a").as("id_a"), col("b").as("id_b"), col("cos_sim"))
   }
 
   /** Product-quantization codebook (Jégou et al. 2011): the vector space

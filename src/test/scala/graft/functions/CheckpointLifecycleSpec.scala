@@ -40,11 +40,20 @@ class CheckpointLifecycleSpec extends SparkSpec {
         ("connectedComponents", () => Dedup.connectedComponents(pairsDf, "a", "b"),
           Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 6L,
             7L -> 7L, 8L -> 7L, 9L -> 7L).map { case (n, c) => Seq(n, c) }),
-        // the hash checkpoint behind the pairs is freed inside the call;
-        // only the star forest the result reads stays
+        // already a forest of stars: no round, the roles aggregation labels
+        ("connectedComponents (no round)",
+          () => Dedup.connectedComponents(Seq((1L, 2L), (1L, 3L), (4L, 5L)).toDF("a", "b"), "a", "b"),
+          Set(Seq(1L, 1L), Seq(2L, 1L), Seq(3L, 1L), Seq(4L, 4L), Seq(5L, 4L))),
+        // the hash checkpoint and the pairs are freed inside the call; only
+        // the roles aggregation the result reads stays — with no star round
+        // and, for the chain, after the rounds
         ("clusterCanonicalDedup", () => Dedup.clusterCanonicalDedup(docs, "doc_id", "text",
             shingleSize = 2, numHashes = 16, bands = 4, threshold = 0.8),
-          Set(Seq(1L), Seq(4L), Seq(5L))))) {
+          Set(Seq(1L), Seq(4L), Seq(5L))),
+        ("clusterCanonicalDedup (rounds)", () => Dedup.clusterCanonicalDedup(
+            ConnectedComponentsSpec.chainDocs(spark), "doc_id", "text",
+            shingleSize = 1, numHashes = 64, bands = 16, threshold = 0.8),
+          Set(Seq(0L), Seq(50L), Seq(51L))))) {
       Housekeeping.releaseAll(spark)
       val base = resident
       val out = run()
@@ -94,14 +103,16 @@ class CheckpointLifecycleSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      // a single edge is already a star: the initial check, zero rounds
+      // a single edge is already a star: the roles aggregation sees it on
+      // its own job, so no check action and zero rounds
       val single = checksFor(Seq((1L, 2L)).toDF("a", "b"))
-      assert(single == 1, s"expected 1 check action (initial, 0 rounds), saw $single")
+      assert(single == 0, s"expected no check action (0 rounds), saw $single")
       // the 100-node chain: the digest loop this check replaced took 9
       // `head` actions (initial + 8 rounds, the last confirming the 7th);
-      // the check stops on the round that reaches the forest
+      // the check stops on the round that reaches the forest, and the
+      // initial check rides on the roles aggregation
       val chain = checksFor((0L until 99L).map(i => (i, i + 1)).toDF("a", "b"))
-      assert(chain == 9 - 1, s"expected 8 check actions (initial + 7 rounds), saw $chain")
+      assert(chain == 7, s"expected 7 check actions (7 rounds), saw $chain")
       // no driver action besides the checks, the checkpoints and the caller's collect
       assert(actions.toArray(Array.empty[String]).toSet.subsetOf(Set("isEmpty", "localCheckpoint", "collect")),
         s"unexpected actions: $actions")

@@ -50,7 +50,10 @@ class ConnectedComponentsSpec extends SparkSpec {
       val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b")
         .as[(Long, Long)].collect().toMap
       assert(got == expected, s"mismatch on n=$n m=$m edges=$edges")
-      val forest = Dedup.starForest(edges.toDF("a", "b"), "a", "b", maxRounds = 30)
+      val canonical = edges.toDF("a", "b")
+        .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
+        .filter(col("u") =!= col("v")).distinct()
+      val forest = Dedup.starForest(canonical, maxRounds = 30)
       val leaves = forest.select("v").as[Long].collect()
       Housekeeping.release(forest)
       assert(leaves.length == leaves.distinct.length &&
@@ -92,6 +95,43 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(kept.toSeq == Seq(1L, 4L, 5L))
   }
 
+  test("clusterCanonicalDedup on pair graphs that need star rounds keeps the union-find minima") {
+    for ((name, docs) <- Seq("chain" -> ConnectedComponentsSpec.chainDocs(spark),
+        "two centres" -> ConnectedComponentsSpec.twoCentreDocs(spark))) {
+      val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", 1, 64, 16, 0.8)
+        .select("doc_a", "doc_b").as[(Long, Long)].collect().toSeq
+      val roots = ufComponents(pairs)
+      val ids = docs.select("doc_id").as[Long].collect().toSet
+      val expected = ids -- roots.collect { case (n, r) if n != r => n }
+      var kept: org.apache.spark.sql.DataFrame = null
+      val jobs = jobDescriptions {
+        kept = Dedup.clusterCanonicalDedup(docs, "doc_id", "text",
+          shingleSize = 1, numHashes = 64, bands = 16, threshold = 0.8)
+      }
+      assert(jobs.contains("graft.dedup: star round"), s"$name took no round: $jobs")
+      assert(jobs.forall(_.startsWith("graft.")), s"$name: unlabeled jobs in $jobs")
+      assert(kept.as[Long].collect().toSet == expected, s"$name: pairs $pairs")
+      Housekeeping.release(kept)
+    }
+  }
+
+  test("connectedComponents on a star-forest input: one aggregation, 3 jobs, all labeled") {
+    // two stars and a self-loop: already a forest of stars, so no round
+    val pairs = Seq((1L, 2L), (3L, 1L), (1L, 4L), (7L, 8L), (9L, 9L)).toDF("a", "b")
+    var cc: org.apache.spark.sql.DataFrame = null
+    val jobs = jobDescriptions { cc = Dedup.connectedComponents(pairs, "a", "b") }
+    assert(cc.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 7L -> 7L, 8L -> 7L, 9L -> 9L))
+    Housekeeping.release(cc)
+    // the canonical distinct edges' exchange, then the roles aggregation's
+    // exchange and its checkpoint (measured 3; the separate star-forest
+    // check and node labeling took 7)
+    info(s"${jobs.length} jobs: ${jobs.mkString(" | ")}")
+    assert(jobs.length <= 3, s"${jobs.length} jobs: ${jobs.mkString(" | ")}")
+    assert(jobs.forall(_.startsWith("graft.")), s"unlabeled jobs in ${jobs.mkString(" | ")}")
+    assert(!jobs.contains("graft.dedup: star round") && !jobs.contains("graft.dedup: star check"))
+  }
+
   test("every job inside connectedComponents and clusterCanonicalDedup carries a graft. label") {
     val pairs = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L), (20L, 20L))
       .toDF("doc_a", "doc_b")
@@ -122,5 +162,28 @@ class ConnectedComponentsSpec extends SparkSpec {
     Seq(cc, kept).foreach(Housekeeping.release)
     assert(jobs.nonEmpty && jobs.forall(_.startsWith("graft.")),
       s"unlabeled jobs in ${jobs.mkString(" | ")}")
+  }
+}
+
+object ConnectedComponentsSpec {
+  /** Unigram sets sliding by one token: consecutive docs are at Jaccard
+    * 9/11, docs two apart at 8/12, so at threshold 0.8 the pairs form the
+    * chain 0-1-2-3-4-5 (no forest of stars), plus two unrelated docs. */
+  def chainDocs(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    ((0 until 6).map(i => (i.toLong, (i until i + 10).map(t => s"t$t").mkString(" "))) ++
+      Seq((50L, "zz1 zz2 zz3 zz4 zz5 zz6"), (51L, "yy1 yy2 yy3 yy4 yy5 yy6")))
+      .toDF("doc_id", "text")
+  }
+
+  /** Doc 202 is a near copy (9/11) of both 200 and 201, which are not near
+    * copies of each other (8/12): canonical edges (200, 202) and (201, 202)
+    * make 202 a leaf of two centres. */
+  def twoCentreDocs(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    def c(r: Range) = r.map(t => s"c$t")
+    Seq((200L, (c(0 to 8) :+ "x1").mkString(" ")), (201L, (c(1 to 9) :+ "x2").mkString(" ")),
+      (202L, c(0 to 9).mkString(" ")), (50L, "zz1 zz2 zz3 zz4 zz5 zz6"))
+      .toDF("doc_id", "text")
   }
 }
