@@ -105,51 +105,72 @@ object Dedup {
     round(size(array_intersect(col("__sh_a"), col("__sh_b"))).cast("double") /
       size(array_union(col("__sh_a"), col("__sh_b"))).cast("double"), 6)
 
-  /** Candidate pairs from ONE bucket join: rows of `left` and `right` (an
-    * `id` column plus the `keys`) that share every key, as `(a, b)` with
-    * `pair(a, b)`, next to the keys. A pair sharing several buckets appears
-    * once per bucket. The only join keys are bucket keys (64-bit band
-    * hashes, SRP buckets): no O(n²) product. */
-  private[functions] def bucketPairs(left: DataFrame, right: DataFrame, keys: Seq[String],
-      pair: (Column, Column) => Column): DataFrame =
-    left.withColumnRenamed("id", "a").join(right.withColumnRenamed("id", "b"), keys)
-      .filter(pair(col("a"), col("b")))
+  /** Candidate pairs from ONE bucket aggregation: the `rows` (an `id`
+    * column, the bucket `keys`, any other columns) grouped by their keys,
+    * and every two rows `x`, `y` of one bucket with `pair(x.id, y.id)`
+    * emitted as `(a, b)` next to the keys, the other columns suffixed
+    * `_a`/`_b`. A pair sharing several buckets appears once per bucket. The
+    * only exchange is the aggregation on the bucket keys (64-bit band
+    * hashes, SRP buckets), carrying each row once; singleton buckets drop
+    * after it. No O(n²) product beyond a bucket's own pairs. */
+  private[functions] def bucketPairs(rows: DataFrame, keys: Seq[String],
+      pair: (Column, Column) => Column): DataFrame = {
+    val carried = rows.columns.filterNot(keys.contains)
+    def side(s: String) = carried.map(c =>
+      col(s"__$s.`$c`").as(if (c == "id") s else s"${c}_$s"))
+    rows.groupBy(keys.map(col): _*)
+      .agg(collect_list(struct(carried.map(col): _*)).as("__m"))
+      .filter(size(col("__m")) > 1)
+      .select(keys.map(col) :+ col("__m") :+ explode(col("__m")).as("__a"): _*)
+      .select(keys.map(col) :+ col("__a") :+ explode(col("__m")).as("__b"): _*)
+      .filter(pair(col("__a.id"), col("__b.id")))
+      .select(side("a") ++ side("b") ++ keys.map(col): _*)
+  }
 
-  /** Verification sized by the candidates. Each side's payload (an `id`
-    * column plus payload columns) is semi-joined to the broadcast ids of
-    * `cands`' `a`/`b` side, and only those rows are broadcast into the join
-    * with the pairs: no exchange carries the payload of a document outside
-    * every candidate pair (one row per distinct candidate document; one
-    * broadcast when both sides read the same payload). The payload columns
-    * come back suffixed `_a`/`_b`; rows failing `keep` drop, `score` is
-    * named `scoreName`, and scores below `threshold` drop. */
+  /** Verification of the candidate pairs `cands` (`a`, `b`, repeats
+    * allowed) sized by the candidates: each pair becomes one probe row per
+    * side, the payload (an `id` column plus payload columns) is joined to
+    * the probe rows by id — emitting `(pair, side, payload)` only for
+    * documents in some pair — and ONE aggregation gathers each pair's two
+    * sides. A document's rows for one pair meet in its own task, so the
+    * partial aggregation dedups repeats (a pair of several buckets) before
+    * the exchange, which carries at most 2 payload rows per distinct pair.
+    * The planner sizes the probe join: while the probe rows are small they
+    * are broadcast and the payload streams. The payload columns come back
+    * suffixed `_a`/`_b`; `score` is named `scoreName`, and scores below
+    * `threshold` drop. */
   private[functions] def verifyPairs(cands: DataFrame, payloadA: DataFrame, payloadB: DataFrame,
-      keep: Column, scoreName: String, score: Column, threshold: Option[Double]): DataFrame = {
-    def touched(p: DataFrame, sides: String*) = p.join(
-      broadcast(cands.select(explode(array(sides.map(col): _*)).as("id"))), Seq("id"), "left_semi")
-    val (pa, pb) =
-      if (payloadA eq payloadB) { val p = touched(payloadA, "a", "b"); (p, p) }
-      else (touched(payloadA, "a"), touched(payloadB, "b"))
-    def side(p: DataFrame, s: String) =
-      broadcast(p.select(p.columns.map(c => col(c).as(s"${c}_$s")): _*))
-    val scored = cands.join(side(pa, "a"), col("a") === col("id_a"))
-      .join(side(pb, "b"), col("b") === col("id_b"))
-      .filter(keep)
+      scoreName: String, score: Column, threshold: Option[Double]): DataFrame = {
+    val payload = payloadA.columns.filterNot(_ == "id")
+    val sides = cands.select(col("a"), col("b"), explode(array(
+        struct(lit(true).as("__isA"), col("a").as("id")),
+        struct(lit(false).as("__isA"), col("b").as("id")))).as("__s"))
+      .select(col("a"), col("b"), col("__s.__isA").as("__isA"), col("__s.id").as("id"))
+    def probe(p: DataFrame) = p.join(sides, Seq("id"))
+      .select(Seq(col("a"), col("b"), col("__isA")) ++ payload.map(col): _*)
+    val probed =
+      if (payloadA eq payloadB) probe(payloadA)
+      else probe(payloadA).filter(col("__isA")).union(probe(payloadB).filter(!col("__isA")))
+    def side(s: String, isS: Column) =
+      payload.map(c => first(when(isS, col(c)), ignoreNulls = true).as(s"${c}_$s"))
+    val scored = probed.groupBy("a", "b")
+      .agg(max(col("__isA")).as("__hasA"),
+        (Seq(min(col("__isA")).as("__onlyA")) ++ side("a", col("__isA")) ++
+          side("b", !col("__isA"))): _*)
+      .filter(col("__hasA") && !col("__onlyA"))
+      .drop("__hasA", "__onlyA")
       .withColumn(scoreName, score)
     threshold.fold(scored)(t => scored.filter(col(scoreName) >= t))
   }
 
   /** LSH pairs `(doc_a < doc_b, scoreName)` of `docs` (`id`, band hashes
-    * `bh`, payload): ONE band self-join ([[bucketPairs]]), then
-    * [[verifyPairs]] over the candidate documents' payload, keeping each
-    * pair only in the FIRST band where its band hashes agree — exactly once,
-    * with no distinct exchange. The band join carries band/hash/id only. */
+    * `bh`, payload): [[bucketPairs]] over the band rows (the aggregation
+    * carries band/hash/id only), then [[verifyPairs]] over the payload,
+    * whose gather dedups the pairs colliding in several bands. */
   private def lshPairs(docs: DataFrame, scoreName: String, score: Column,
       threshold: Option[Double]): DataFrame = {
-    val banded = bandRows(docs)
-    val firstBand = array_position(
-      zip_with(col("bh_a"), col("bh_b"), (x, y) => x === y), true) === col("band") + 1
-    verifyPairs(bucketPairs(banded, banded, Seq("band", "h"), _ < _), docs, docs, firstBand,
+    val payload = docs.drop("bh")
+    verifyPairs(bucketPairs(bandRows(docs), Seq("band", "h"), _ < _), payload, payload,
         scoreName, score, threshold)
       .select(col("a").as("doc_a"), col("b").as("doc_b"), col(scoreName))
   }
@@ -178,10 +199,10 @@ object Dedup {
     *
     * ONE pass over the text: the fused kernel ([[ShingleSketch]]) gives
     * every doc's band hashes and shingle-hash set into an eager
-    * `localCheckpoint`. The pairs then take three jobs: the band join's
-    * broadcast, the candidate ids' broadcast, and the broadcast of the
-    * candidate documents' shingle sets ([[verifyPairs]]). The checkpoint
-    * backs the returned plan — release it via `Housekeeping.release(result)`
+    * `localCheckpoint`. The pairs then take three jobs at small scale: the
+    * band aggregation's exchange, the broadcast of the candidate pairs'
+    * probe rows, and the exchange gathering each pair's two shingle sets
+    * ([[lshPairs]]). The checkpoint backs the returned plan — release it via `Housekeeping.release(result)`
     * (or the session sweep) once the result is consumed.
     *
     * `jaccard` is rounded to 6 before the threshold filter, matching
@@ -200,7 +221,7 @@ object Dedup {
   /** Per doc (`id`) its band hashes `bh` ([[bandHashArray]]) and shingle
     * hashes `__sh`, from one pass of the fused kernel, in an eager
     * `localCheckpoint` the caller releases. Eager: several jobs read it (the
-    * band join, the candidate ids and the payload; lshIndexWrite's two
+    * band aggregation and the candidate payload; lshIndexWrite's two
     * concurrent writes), so it is complete before any of them starts. */
   private def hashedDocs(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int): DataFrame =
@@ -276,11 +297,18 @@ object Dedup {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: scala.concurrent.ExecutionContext = writeEc
-      // REBALANCE each table by its partition column before the partitioned
-      // write: without it every write task opens a file in up to nParts
-      // directories (O(tasks × nParts) small files), and AQE sizes the
-      // layout from actual bytes both ways (small partitions coalesce, a
-      // large one splits into advisory-sized tasks).
+      // Cluster each table by its partition column before the partitioned
+      // write (guide §6: "REBALANCE hint before the write"): without the
+      // exchange every write task opens a file in up to nParts directories,
+      // so the index accumulates O(tasks × nParts) small files — a
+      // million-task corpus with nParts=64 is 64M tiny files, and the probe
+      // pays per-file open cost inside every pruned partition it reads.
+      // REBALANCE (vs a plain keyed repartition) lets AQE size the layout
+      // from actual bytes BOTH ways: small partitions coalesce (few files
+      // locally) and a large partition splits into advisory-sized tasks
+      // (write parallelism is not capped at nParts, files stay right-sized
+      // at scale). The shuffle payload is the skinny band rows / per-doc
+      // shingle arrays that were about to be written anyway.
       val bandsJob = Future {
         bandRows(hashed).withColumnRenamed("id", "doc_id")
           .withColumn("__hb", pmod(col("h"), lit(nParts.toLong)))
@@ -366,16 +394,17 @@ object Dedup {
     // pruning visible in the returned plan (pinned by TextDedupSpec)
     val idxBands = spark.read.parquet(s"$path/bands")
       .filter(col("__hb").isin(hbs: _*))
-      .select(col("doc_id").as("id"), col("band"), col("h"))
-    val cands = bucketPairs(idxBands, broadcast(probe), Seq("band", "h"), _ =!= _)
-      .select("a", "b").distinct()
+      .select(col("doc_id").as("a"), col("band"), col("h"))
+    val cands = idxBands.join(broadcast(probe.withColumnRenamed("id", "b")), Seq("band", "h"))
+      .filter(col("a") =!= col("b"))
+      .select("a", "b")
     val dbs = cands.select(pmod(xxhash64(col("a")), lit(nParts.toLong)).as("db"))
       .distinct().collect().map(_.getLong(0)).toSeq
     if (dbs.isEmpty) { graft.Housekeeping.release(hashed); return empty }
     val idxSh = spark.read.parquet(s"$path/docs")
       .filter(col("__db").isin(dbs: _*))
       .select(col("doc_id").as("id"), col("__sh"))
-    verifyPairs(cands, idxSh, hashed.select(col("id"), col("__sh")), lit(true),
+    verifyPairs(cands, idxSh, hashed.select(col("id"), col("__sh")),
         "jaccard", jaccard, Some(threshold))
       .select(col("a").as("doc_a"), col("b").as("doc_b"), col("jaccard"))
   }
@@ -412,9 +441,12 @@ object Dedup {
       textCol: String,
       n: Int = 8,
       fpp: Double = 0.01): DataFrame = {
-    // the benchmark shingle set materializes ONCE for the size count, the
-    // Bloom aggregation and the exact verify; the returned plan reads it,
-    // so the caller releases it with Housekeeping
+    // materialize the (large) benchmark shingle set ONCE: the size count,
+    // the Bloom aggregation, and the exact verify join all read the
+    // checkpoint instead of re-running tokenize+shingle+distinct three times
+    // this checkpoint is referenced by the RETURNED plan (the exact-verify
+    // join), so it must outlive the call — the caller releases it with
+    // Housekeeping once the result is consumed
     val benchShingles = shingleSet(benchmark, textCol, n)
       .localCheckpoint(true)
     val expected = math.max(benchShingles.count(), 1L)
@@ -489,8 +521,10 @@ object Dedup {
       idCol: String,
       textCol: String,
       minDocs: Int): DataFrame = {
-    // split ONCE: the document-frequency count and the reconstruction join
-    // both read the per-doc line arrays; caller/sweep releases them
+    // split ONCE (r15, guide §5): the document-frequency count and the
+    // reconstruction join both read the materialized per-doc line arrays
+    // instead of re-scanning and re-splitting the corpus per reference;
+    // caller/sweep releases the checkpoint
     val lineArr = df.select(col(idCol).as("__id"),
         split(col(textCol), "\n").as("__ls"))
       .localCheckpoint(true)
@@ -518,7 +552,9 @@ object Dedup {
     * SoCC'14). Returns `(node, component)` for every node appearing in
     * `pairs`, where `component` is the MINIMUM node id in the component —
     * the canonical cluster id a dedup pass keeps. A node seen only in
-    * self-loops is its own component. The canonical `(u < v)` edge set is done once it is a forest of stars:
+    * self-loops is its own component.
+    *
+    * The canonical `(u < v)` edge set is done once it is a forest of stars:
     * no node is both a centre `u` and a leaf `v`, and no leaf has two
     * centres. That set is a fixpoint of both star steps, every round
     * preserves connectivity and the node set, and `u < v` makes each centre
@@ -737,8 +773,10 @@ object Dedup {
       textCol: String,
       k: Int): DataFrame = {
     require(k >= 2, s"span length $k: a 1-token span would delete every repeated word")
-    // tokenize ONCE: the gram stream (duplicate count and flagged-position
-    // join) and the reconstruction read the per-doc token arrays;
+    // tokenize ONCE (r15, guide §5): the gram stream (referenced by both
+    // the duplicate count and the flagged-position join) and the final
+    // reconstruction all read the materialized per-doc token arrays —
+    // previously each reference re-scanned and re-tokenized the corpus;
     // caller/sweep releases the checkpoint
     val toks = df.select(col(idCol), graft.functions.Text.tokens(col(textCol)).as("toks"))
       .localCheckpoint(true)
@@ -795,17 +833,23 @@ object Dedup {
       n: Int,
       threshold: Double,
       maxShingleDocFreq: Option[Long] = None): DataFrame = {
-    // Shuffle 8-byte shingle hashes, not shingle strings: every exchange
-    // shrinks ~4×, and Jaccard counts are unchanged short of an xxhash64
-    // collision. The per-doc arrays materialize once into an eager
-    // checkpoint that every reference reads and the returned plan keeps —
+    // Shuffle 8-byte shingle hashes, not shingle strings: the join key and
+    // every exchange shrink ~4×, and Jaccard counts are unchanged short of
+    // an xxhash64 collision (~n²/2⁶⁵ — negligible at any realistic corpus).
+    // ONE pass over the text (r15): the per-doc shingle-hash arrays
+    // materialize once into an eager checkpoint; the exploded stream, the
+    // per-doc stats, and the exact verify all read it instead of
+    // re-tokenizing the corpus per plan reference (the capped branch held
+    // five such references). The checkpoint backs the returned plan —
     // released by `Housekeeping.release(result)` / the session sweep.
     val shArr = df.select(col(idCol).as("doc_id"),
         sketch(col(textCol), n, 0).getField("sh").as("__sh"))
       .localCheckpoint(true)
     val sh = shArr.select(col("doc_id"), explode(col("__sh")).as("shingle"))
     // per-doc shingle counts are size(__sh) on the materialized arrays
-    // (the kernel already dedupes per row): no corpus-shingle exchange
+    // (the kernel already dedupes per row) — the former
+    // explode+groupBy recounted them through a full corpus-shingle
+    // exchange (r16, guide §2.4: remove shuffles outright)
     val docCounts = shArr.select(col("doc_id"),
       size(col("__sh")).cast("long").as("__n"))
     maxShingleDocFreq match {
@@ -871,11 +915,12 @@ object Dedup {
               (col("__na") + col("__nb") - col("__maxc")).cast("double")
               - lit(1e-9))
           .select("doc_a", "doc_b")
-        // exact verify over the full sets, with stop-shingle candidates
-        // instead of LSH candidates; the sets come from the same checkpoint
+        // exact verify over the full sets — the nearDupPairs shape, with
+        // stop-shingle candidates instead of LSH candidates; the sets come
+        // from the same checkpoint (no re-tokenize)
         val sets = shArr.select(col("doc_id").as("id"), col("__sh"))
         verifyPairs(pruned.select(col("doc_a").as("a"), col("doc_b").as("b")), sets, sets,
-            lit(true), "jaccard", jaccard, Some(threshold))
+            "jaccard", jaccard, Some(threshold))
           .select(col("a").as("doc_a"), col("b").as("doc_b"), col("jaccard"))
     }
   }

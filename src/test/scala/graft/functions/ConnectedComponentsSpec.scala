@@ -129,7 +129,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     info(s"${jobs.length} jobs: ${jobs.mkString(" | ")}")
     assert(jobs.length <= 3, s"${jobs.length} jobs: ${jobs.mkString(" | ")}")
     assert(jobs.forall(_.startsWith("graft.")), s"unlabeled jobs in ${jobs.mkString(" | ")}")
-    assert(!jobs.contains("graft.dedup: star round") && !jobs.contains("graft.dedup: star check"))
+    assert(!jobs.contains("graft.dedup: star round"))
   }
 
   test("every job inside connectedComponents and clusterCanonicalDedup carries a graft. label") {
@@ -149,13 +149,18 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
     val jobs = ccJobs ++ keptJobs
     info(s"clusterCanonicalDedup: ${keptJobs.mkString(" | ")}")
-    // the docs' pairs are already a star forest: one check and no round.
-    // The candidate and verify joins run when the edge checkpoint is built,
-    // under their own label; the check keeps only its aggregation's map
-    // stage and its result
-    assert(keptJobs.contains("graft.dedup: pairs"))
-    assert(keptJobs.count(_ == "graft.dedup: star check") <= 2,
-      s"star check books other jobs: ${keptJobs.mkString(" | ")}")
+    // the docs' pairs are already a star forest: no round. The band
+    // aggregation, the probe broadcast and the gather run when the edge
+    // checkpoint is built, under `pairs` (3 jobs measured); `keep` books
+    // only the roles aggregation's map stage and its checkpoint (2 measured)
+    val pairsJobs = keptJobs.dropWhile(_ == "graft.dedup: hash")
+      .takeWhile(_ != "graft.dedup: keep")
+    assert(pairsJobs.nonEmpty && pairsJobs.length <= 3 &&
+      pairsJobs.forall(_ == "graft.dedup: pairs"), keptJobs.mkString(" | "))
+    assert(keptJobs.count(_ == "graft.dedup: pairs") == pairsJobs.length,
+      s"pairs jobs outside the pairs phase: ${keptJobs.mkString(" | ")}")
+    assert(keptJobs.count(_ == "graft.dedup: keep") <= 2,
+      s"keep books other jobs: ${keptJobs.mkString(" | ")}")
     assert(!keptJobs.contains("graft.dedup: star round"))
     // the caller's own actions run outside the calls' scope
     assert(kept.as[Long].collect().sorted.toSeq == Seq(1L, 3L))
