@@ -105,73 +105,65 @@ object Dedup {
     round(size(array_intersect(col("__sh_a"), col("__sh_b"))).cast("double") /
       size(array_union(col("__sh_a"), col("__sh_b"))).cast("double"), 6)
 
-  /** Candidate pairs from ONE bucket aggregation: the `rows` (an `id`
-    * column, the bucket `keys`, any other columns) grouped by their keys,
-    * and every two rows `x`, `y` of one bucket with `pair(x.id, y.id)`
-    * emitted as `(a, b)` next to the keys, the other columns suffixed
-    * `_a`/`_b`. A pair sharing several buckets appears once per bucket. The
-    * only exchange is the aggregation on the bucket keys (64-bit band
-    * hashes, SRP buckets), carrying each row once; singleton buckets drop
-    * after it. No O(n²) product beyond a bucket's own pairs. */
-  private[functions] def bucketPairs(rows: DataFrame, keys: Seq[String],
-      pair: (Column, Column) => Column): DataFrame = {
-    val carried = rows.columns.filterNot(keys.contains)
-    def side(s: String) = carried.map(c =>
-      col(s"__$s.`$c`").as(if (c == "id") s else s"${c}_$s"))
-    rows.groupBy(keys.map(col): _*)
-      .agg(collect_list(struct(carried.map(col): _*)).as("__m"))
-      .filter(size(col("__m")) > 1)
-      .select(keys.map(col) :+ col("__m") :+ explode(col("__m")).as("__a"): _*)
-      .select(keys.map(col) :+ col("__a") :+ explode(col("__m")).as("__b"): _*)
-      .filter(pair(col("__a.id"), col("__b.id")))
-      .select(side("a") ++ side("b") ++ keys.map(col): _*)
-  }
+  /** Candidate pairs from ONE bucket join: rows of `left` and `right` (an
+    * `id` column, the bucket `keys`, any other columns) that share every
+    * key, as `(a, b)` with `pair(a, b)` next to the keys, the other columns
+    * suffixed `_a`/`_b`. A pair sharing several buckets appears once per
+    * bucket. The only join keys are bucket keys (64-bit band hashes, SRP
+    * buckets): no O(n²) product beyond a bucket's own pairs. */
+  private[functions] def bucketPairs(left: DataFrame, right: DataFrame, keys: Seq[String],
+      pair: (Column, Column) => Column): DataFrame =
+    bucketSide(left, keys, "a").join(bucketSide(right, keys, "b"), keys)
+      .filter(pair(col("a"), col("b")))
 
-  /** Verification of the candidate pairs `cands` (`a`, `b`, repeats
-    * allowed) sized by the candidates: each pair becomes one probe row per
-    * side, the payload (an `id` column plus payload columns) is joined to
-    * the probe rows by id — emitting `(pair, side, payload)` only for
-    * documents in some pair — and ONE aggregation gathers each pair's two
-    * sides. A document's rows for one pair meet in its own task, so the
-    * partial aggregation dedups repeats (a pair of several buckets) before
-    * the exchange, which carries at most 2 payload rows per distinct pair.
-    * The planner sizes the probe join: while the probe rows are small they
-    * are broadcast and the payload streams. The payload columns come back
-    * suffixed `_a`/`_b`; `score` is named `scoreName`, and scores below
-    * `threshold` drop. */
+  /** One side `s` of [[bucketPairs]]: `id` renamed `s`, the keys kept, the
+    * other columns suffixed `_s`. */
+  private def bucketSide(df: DataFrame, keys: Seq[String], s: String): DataFrame =
+    df.select(df.columns.map(c => col(c).as(
+      if (keys.contains(c)) c else if (c == "id") s else s"${c}_$s")): _*)
+
+  /** Verification of the candidate pairs `cands` (`a`, `b`): each side's
+    * payload (an `id` column plus payload columns) is looked up by id in
+    * joins the planner sizes, with no hint: a payload smaller than the
+    * broadcast threshold is broadcast and `cands` streams, a larger one is
+    * shuffle-joined. One payload read on both sides is one plan, so its two
+    * lookups share one exchange. The payload columns come back suffixed
+    * `_a`/`_b`; rows failing `keep` drop, `score` is named `scoreName`, and
+    * scores below `threshold` drop. */
   private[functions] def verifyPairs(cands: DataFrame, payloadA: DataFrame, payloadB: DataFrame,
-      scoreName: String, score: Column, threshold: Option[Double]): DataFrame = {
-    val payload = payloadA.columns.filterNot(_ == "id")
-    val sides = cands.select(col("a"), col("b"), explode(array(
-        struct(lit(true).as("__isA"), col("a").as("id")),
-        struct(lit(false).as("__isA"), col("b").as("id")))).as("__s"))
-      .select(col("a"), col("b"), col("__s.__isA").as("__isA"), col("__s.id").as("id"))
-    def probe(p: DataFrame) = p.join(sides, Seq("id"))
-      .select(Seq(col("a"), col("b"), col("__isA")) ++ payload.map(col): _*)
-    val probed =
-      if (payloadA eq payloadB) probe(payloadA)
-      else probe(payloadA).filter(col("__isA")).union(probe(payloadB).filter(!col("__isA")))
-    def side(s: String, isS: Column) =
-      payload.map(c => first(when(isS, col(c)), ignoreNulls = true).as(s"${c}_$s"))
-    val scored = probed.groupBy("a", "b")
-      .agg(max(col("__isA")).as("__hasA"),
-        (Seq(min(col("__isA")).as("__onlyA")) ++ side("a", col("__isA")) ++
-          side("b", !col("__isA"))): _*)
-      .filter(col("__hasA") && !col("__onlyA"))
-      .drop("__hasA", "__onlyA")
+      keep: Column, scoreName: String, score: Column, threshold: Option[Double]): DataFrame = {
+    def side(p: DataFrame, s: String) = p.columns.map(c => col(s"__p$s.`$c`").as(s"${c}_$s"))
+    val scored = cands.join(payloadA.as("__pa"), col("a") === col("__pa.id"))
+      .join(payloadB.as("__pb"), col("b") === col("__pb.id"))
+      .select(cands.columns.map(col) ++ side(payloadA, "a") ++ side(payloadB, "b"): _*)
+      .filter(keep)
       .withColumn(scoreName, score)
     threshold.fold(scored)(t => scored.filter(col(scoreName) >= t))
   }
 
   /** LSH pairs `(doc_a < doc_b, scoreName)` of `docs` (`id`, band hashes
-    * `bh`, payload): [[bucketPairs]] over the band rows (the aggregation
-    * carries band/hash/id only), then [[verifyPairs]] over the payload,
-    * whose gather dedups the pairs colliding in several bands. */
+    * `bh`, payload): ONE band self-join ([[bucketPairs]]), verified
+    * ([[verifyPairs]]) against the CANDIDATE documents only — `docs`
+    * semi-joined to the band rows that share a bucket with another
+    * document. Semi-joins keep their left side's size estimate, so the
+    * planner broadcasts those ids and then the candidate documents'
+    * payload while they are small, and the corpus payload moves in no
+    * exchange. A pair is kept only in the FIRST band where its band hashes
+    * agree: exactly once, with no distinct exchange. The band joins carry
+    * band/hash/id only and share one exchange. */
   private def lshPairs(docs: DataFrame, scoreName: String, score: Column,
       threshold: Option[Double]): DataFrame = {
-    val payload = docs.drop("bh")
-    verifyPairs(bucketPairs(bandRows(docs), Seq("band", "h"), _ < _), payload, payload,
-        scoreName, score, threshold)
+    val keys = Seq("band", "h")
+    val banded = bandRows(docs)
+    val other = bucketSide(banded, keys, "b")
+    val colliding = banded.join(other,
+      keys.map(k => banded(k) === other(k)).reduce(_ && _) && banded("id") =!= other("b"),
+      "left_semi")
+    val touched = docs.join(colliding.select(col("id")), Seq("id"), "left_semi")
+    val firstBand = array_position(
+      zip_with(col("bh_a"), col("bh_b"), (x, y) => x === y), true) === col("band") + 1
+    verifyPairs(bucketPairs(banded, banded, keys, _ < _), touched, touched,
+        firstBand, scoreName, score, threshold)
       .select(col("a").as("doc_a"), col("b").as("doc_b"), col(scoreName))
   }
 
@@ -200,9 +192,8 @@ object Dedup {
     * ONE pass over the text: the fused kernel ([[ShingleSketch]]) gives
     * every doc's band hashes and shingle-hash set into an eager
     * `localCheckpoint`. The pairs then take three jobs at small scale: the
-    * band aggregation's exchange, the broadcast of the candidate pairs'
-    * probe rows, and the exchange gathering each pair's two shingle sets
-    * ([[lshPairs]]). The checkpoint backs the returned plan — release it via `Housekeeping.release(result)`
+    * band rows' broadcast, the broadcast of the colliding documents' ids,
+    * and the broadcast of those documents' shingle sets ([[lshPairs]]). The checkpoint backs the returned plan — release it via `Housekeeping.release(result)`
     * (or the session sweep) once the result is consumed.
     *
     * `jaccard` is rounded to 6 before the threshold filter, matching
@@ -221,8 +212,8 @@ object Dedup {
   /** Per doc (`id`) its band hashes `bh` ([[bandHashArray]]) and shingle
     * hashes `__sh`, from one pass of the fused kernel, in an eager
     * `localCheckpoint` the caller releases. Eager: several jobs read it (the
-    * band aggregation and the candidate payload; lshIndexWrite's two
-    * concurrent writes), so it is complete before any of them starts. */
+    * band joins and the candidate payload; lshIndexWrite's two concurrent
+    * writes), so it is complete before any of them starts. */
   private def hashedDocs(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, bands: Int): DataFrame =
     df.select(col(idCol).as("id"), sketch(col(textCol), shingleSize, numHashes).as("__k"))
@@ -394,17 +385,16 @@ object Dedup {
     // pruning visible in the returned plan (pinned by TextDedupSpec)
     val idxBands = spark.read.parquet(s"$path/bands")
       .filter(col("__hb").isin(hbs: _*))
-      .select(col("doc_id").as("a"), col("band"), col("h"))
-    val cands = idxBands.join(broadcast(probe.withColumnRenamed("id", "b")), Seq("band", "h"))
-      .filter(col("a") =!= col("b"))
-      .select("a", "b")
+      .select(col("doc_id").as("id"), col("band"), col("h"))
+    val cands = bucketPairs(idxBands, broadcast(probe), Seq("band", "h"), _ =!= _)
+      .select("a", "b").distinct()
     val dbs = cands.select(pmod(xxhash64(col("a")), lit(nParts.toLong)).as("db"))
       .distinct().collect().map(_.getLong(0)).toSeq
     if (dbs.isEmpty) { graft.Housekeeping.release(hashed); return empty }
     val idxSh = spark.read.parquet(s"$path/docs")
       .filter(col("__db").isin(dbs: _*))
       .select(col("doc_id").as("id"), col("__sh"))
-    verifyPairs(cands, idxSh, hashed.select(col("id"), col("__sh")),
+    verifyPairs(cands, idxSh, hashed.select(col("id"), col("__sh")), lit(true),
         "jaccard", jaccard, Some(threshold))
       .select(col("a").as("doc_a"), col("b").as("doc_b"), col("jaccard"))
   }
@@ -920,7 +910,7 @@ object Dedup {
         // from the same checkpoint (no re-tokenize)
         val sets = shArr.select(col("doc_id").as("id"), col("__sh"))
         verifyPairs(pruned.select(col("doc_a").as("a"), col("doc_b").as("b")), sets, sets,
-            "jaccard", jaccard, Some(threshold))
+            lit(true), "jaccard", jaccard, Some(threshold))
           .select(col("a").as("doc_a"), col("b").as("doc_b"), col("jaccard"))
     }
   }

@@ -299,15 +299,15 @@ object Similarity {
   }
 
   /** All-pairs cosine above a threshold among rows sharing an SRP bucket —
-    * embedding near-duplicate detection at scale (one bucket aggregation, not O(n²)).
+    * embedding near-duplicate detection at scale (bucket join, not O(n²)).
     *
     * `nBits = 0` (the default) derives the bucket width from the corpus
     * size via [[srpBitsFor]] — one count() pass, negligible next to the
     * pairs join it right-sizes. NOTE an adversarially skewed corpus (a
     * billion copies of ONE vector) still pairs quadratically inside its
     * bucket — that blowup is semantic (those pairs all exceed any
-    * threshold), and [[Dedup.bucketPairs]] holds a bucket's members as one
-    * row; run exact dedup first when heavy exact duplication is expected. */
+    * threshold); run exact dedup first when heavy exact duplication is
+    * expected. */
   def embeddingNearDupPairs(
       df: DataFrame,
       idCol: String,
@@ -318,7 +318,7 @@ object Similarity {
     val bits = if (nBits > 0) nBits else srpBitsFor(df.count())
     val keyed = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("bucket", srpBucket(col("vec"), dim, bits))
-    Dedup.bucketPairs(keyed, Seq("bucket"), _ < _)
+    Dedup.bucketPairs(keyed, keyed, Seq("bucket"), _ < _)
       .withColumn("cos_sim", round(cosine(col("vec_a"), col("vec_b")), 6))
       .filter(col("cos_sim") >= threshold)
       .select(col("a").as("id_a"), col("b").as("id_b"), col("cos_sim"))

@@ -149,10 +149,11 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
     val jobs = ccJobs ++ keptJobs
     info(s"clusterCanonicalDedup: ${keptJobs.mkString(" | ")}")
-    // the docs' pairs are already a star forest: no round. The band
-    // aggregation, the probe broadcast and the gather run when the edge
-    // checkpoint is built, under `pairs` (3 jobs measured); `keep` books
-    // only the roles aggregation's map stage and its checkpoint (2 measured)
+    // the docs' pairs are already a star forest: no round. The broadcasts
+    // of the band rows, the colliding ids and the candidate payload run
+    // when the edge checkpoint is built, under `pairs` (3 jobs measured);
+    // `keep` books only the roles aggregation's map stage and its
+    // checkpoint (2 measured)
     val pairsJobs = keptJobs.dropWhile(_ == "graft.dedup: hash")
       .takeWhile(_ != "graft.dedup: keep")
     assert(pairsJobs.nonEmpty && pairsJobs.length <= 3 &&
