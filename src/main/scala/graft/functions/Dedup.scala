@@ -145,12 +145,13 @@ object Dedup {
     * `bh`, payload): ONE band self-join ([[bucketPairs]]), verified
     * ([[verifyPairs]]) against the CANDIDATE documents only — `docs`
     * semi-joined to the band rows that share a bucket with another
-    * document. Semi-joins keep their left side's size estimate, so the
-    * planner broadcasts those ids and then the candidate documents'
-    * payload while they are small, and the corpus payload moves in no
-    * exchange. A pair is kept only in the FIRST band where its band hashes
-    * agree: exactly once, with no distinct exchange. The band joins carry
-    * band/hash/id only and share one exchange. */
+    * document. Semi-joins keep their left side's size estimate, so while
+    * those ids are small the planner broadcasts them and then the candidate
+    * documents' payload, and no exchange carries another document's
+    * payload; past the broadcast threshold the semi-join shuffles the
+    * payload once. A pair is kept only in the FIRST band where its band
+    * hashes agree: exactly once, with no distinct exchange. The band joins
+    * carry band/hash/id only and share one exchange. */
   private def lshPairs(docs: DataFrame, scoreName: String, score: Column,
       threshold: Option[Double]): DataFrame = {
     val keys = Seq("band", "h")
@@ -193,8 +194,10 @@ object Dedup {
     * every doc's band hashes and shingle-hash set into an eager
     * `localCheckpoint`. The pairs then take three jobs at small scale: the
     * band rows' broadcast, the broadcast of the colliding documents' ids,
-    * and the broadcast of those documents' shingle sets ([[lshPairs]]). The checkpoint backs the returned plan — release it via `Housekeeping.release(result)`
-    * (or the session sweep) once the result is consumed.
+    * and the broadcast of those documents' shingle sets ([[lshPairs]]).
+    * The checkpoint backs the returned plan — release it via
+    * `Housekeeping.release(result)` (or the session sweep) once the result
+    * is consumed.
     *
     * `jaccard` is rounded to 6 before the threshold filter, matching
     * [[ngramJaccardPairs]].
