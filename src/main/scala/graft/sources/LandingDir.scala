@@ -59,6 +59,19 @@ object LandingDir {
         "(0 would stall the stream silently)")
       n
     }
+
+  /** A byte-size option (`splitBytes`, `maxSplitBytes`,
+    * `maxMemberBytes`): `default` when unset; a value that is not a
+    * positive integer refuses by name — 0 or less would otherwise plan
+    * one unit per split, or fail later without naming the option. */
+  def bytesOption(options: CaseInsensitiveStringMap, name: String,
+      default: Long): Long =
+    Option(options.get(name)).map { s =>
+      val n = s.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$name must be a positive integer, got '$s'"))
+      require(n > 0, s"$name must be positive, got $n")
+      n
+    }.getOrElse(default)
 }
 
 /** Per-JVM memo of parsed file headers (GRIB message index, TIFF IFDs,

@@ -16,7 +16,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Warc
-import graft.sources.{LandingDir, LandingDirStream}
+import graft.sources.{LandingDir, LandingDirStream, Pushdown}
 import graft.sources.nc.SerializableHadoopConf
 
 /** DataSource V2 batch reader for WARC archives —
@@ -112,10 +112,8 @@ object WarcTable {
     val conf = spark.sparkContext.hadoopConfiguration
     val paths = Option(options.get("path")).toSeq
     require(paths.nonEmpty, "warc scan needs a path")
-    val maxSplit = Option(options.get("maxSplitBytes"))
-      .map(_.toLong).getOrElse(128L << 20)
-    val maxMember = Option(options.get("maxMemberBytes"))
-      .map(_.toLong).getOrElse(256L << 20)
+    val maxSplit = LandingDir.bytesOption(options, "maxSplitBytes", 128L << 20)
+    val maxMember = LandingDir.bytesOption(options, "maxMemberBytes", 256L << 20)
     val maxFiles = LandingDir.maxFilesPerTrigger(options)
     val files = LandingDir.list(conf, paths, isWarcName)
       .map(st => (st.getPath.toString, st.getLen))
@@ -135,15 +133,8 @@ final class WarcTable(
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new WarcScanBuilder(this)
-}
-
-final class WarcScanBuilder(table: WarcTable) extends ScanBuilder
-    with SupportsPushDownRequiredColumns {
-  private var required: StructType = WarcTable.Schema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = new WarcScan(table, required)
+    new Pushdown.Builder(WarcTable.Schema, Pushdown.NoClaim)(
+      (required, _) => new WarcScan(this, required))
 }
 
 final class WarcScan(table: WarcTable, required: StructType)

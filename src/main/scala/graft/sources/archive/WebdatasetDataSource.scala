@@ -16,7 +16,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Tar
-import graft.sources.{LandingDir, LandingDirStream}
+import graft.sources.{LandingDir, LandingDirStream, Pushdown}
 import graft.sources.nc.SerializableHadoopConf
 
 /** DataSource V2 batch reader for WebDataset shards —
@@ -100,10 +100,8 @@ object WebdatasetTable {
     val conf = spark.sparkContext.hadoopConfiguration
     val paths = Option(options.get("path")).toSeq
     require(paths.nonEmpty, "webdataset scan needs a path")
-    val maxSplit = Option(options.get("maxSplitBytes"))
-      .map(_.toLong).getOrElse(128L << 20)
-    val maxMember = Option(options.get("maxMemberBytes"))
-      .map(_.toLong).getOrElse(256L << 20)
+    val maxSplit = LandingDir.bytesOption(options, "maxSplitBytes", 128L << 20)
+    val maxMember = LandingDir.bytesOption(options, "maxMemberBytes", 256L << 20)
     val maxFiles = LandingDir.maxFilesPerTrigger(options)
     val files = LandingDir.list(conf, paths, isTarName)
       .map(st => (st.getPath.toString, st.getLen))
@@ -133,15 +131,8 @@ final class WebdatasetTable(
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new WebdatasetScanBuilder(this)
-}
-
-final class WebdatasetScanBuilder(table: WebdatasetTable) extends ScanBuilder
-    with SupportsPushDownRequiredColumns {
-  private var required: StructType = WebdatasetTable.Schema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = new WebdatasetScan(table, required)
+    new Pushdown.Builder(WebdatasetTable.Schema, Pushdown.NoClaim)(
+      (required, _) => new WebdatasetScan(this, required))
 }
 
 final class WebdatasetScan(table: WebdatasetTable, required: StructType)

@@ -11,14 +11,13 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Zip
-import graft.sources.{HeaderCache, LandingDir, LandingDirStream}
+import graft.sources.{HeaderCache, LandingDir, LandingDirStream, Pushdown, SplitBudget}
 import graft.sources.nc.SerializableHadoopConf
 
 /** DataSource V2 batch reader for ZIP archives —
@@ -72,6 +71,11 @@ object ZipTable {
   private[archive] def isZipName(n: String): Boolean =
     n.toLowerCase.endsWith(".zip") || n.toLowerCase.endsWith(".epub")
 
+  /** Member-name predicates (`=`, `IN`, `STARTS WITH`) prune whole
+    * members EXACTLY at planning: the directory is the index. */
+  private[archive] val MemberColumns =
+    new Pushdown.Columns[Zip.Central](("name", _.name))
+
   /** Parsed central directories per (path, mtime, length). */
   private val directories = new HeaderCache[Seq[Zip.Central]](4096)
 
@@ -111,8 +115,7 @@ object ZipTable {
     val conf = spark.sparkContext.hadoopConfiguration
     val paths = Option(options.get("path")).toSeq
     require(paths.nonEmpty, "zip scan needs a path")
-    val maxSplit = Option(options.get("maxSplitBytes"))
-      .map(_.toLong).getOrElse(128L << 20)
+    val maxSplit = LandingDir.bytesOption(options, "maxSplitBytes", 128L << 20)
     val maxFiles = LandingDir.maxFilesPerTrigger(options)
     val files = LandingDir.list(conf, paths, isZipName)
     new ZipTable(files, conf, maxSplit, paths, maxFiles)
@@ -130,33 +133,8 @@ final class ZipTable(
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZipScanBuilder(this)
-}
-
-final class ZipScanBuilder(table: ZipTable) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-  private var required: StructType = ZipTable.Schema
-  private var pushed: Array[Filter] = Array.empty
-
-  /** Member-name predicates prune whole members EXACTLY at planning
-    * (the directory is the index); everything else stays residual. */
-  private def handled(f: Filter): Boolean = f match {
-    case sources.EqualTo("name", _: String) => true
-    case sources.In("name", vs) => vs.forall(_.isInstanceOf[String])
-    case sources.StringStartsWith("name", _) => true
-    case sources.IsNotNull(a) => ZipTable.Schema.fieldNames.contains(a)
-    case _ => false
-  }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (h, residual) = filters.partition(handled)
-    pushed = h
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = new ZipScan(table, required, pushed)
+    new Pushdown.Builder(ZipTable.Schema, ZipTable.MemberColumns.claims)(
+      new ZipScan(this, _, _))
 }
 
 final class ZipScan(table: ZipTable, required: StructType, pushed: Array[Filter])
@@ -165,34 +143,19 @@ final class ZipScan(table: ZipTable, required: StructType, pushed: Array[Filter]
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  private def keep(c: Zip.Central): Boolean = pushed.forall {
-    case sources.EqualTo("name", v: String) => c.name == v
-    case sources.In("name", vs) => vs.exists(v => c.name == v)
-    case sources.StringStartsWith("name", p) => c.name.startsWith(p)
-    case _ => true
-  }
+  /** One archive's members that carry a row (directories do not) and
+    * pass the pushed name predicates. */
+  private def members(st: FileStatus): Seq[Zip.Central] =
+    ZipTable.directoryOf(table.conf, st).filter(c => !c.name.endsWith("/"))
+      .filter(ZipTable.MemberColumns.keep(pushed.toSeq))
 
-  /** One archive's partitions: members pruned by the pushed name
-    * predicates, then CONSECUTIVE survivors binned by compressed size. */
-  private def partitionsOfFile(st: FileStatus): Seq[InputPartition] = {
-    val members = ZipTable.directoryOf(table.conf, st)
-      .filter(c => !c.name.endsWith("/")) // directories carry no row
-      .filter(keep)
-    if (members.isEmpty) return Seq.empty
-    val groups = scala.collection.mutable.ArrayBuffer.empty[Seq[Zip.Central]]
-    var cur = scala.collection.mutable.ArrayBuffer.empty[Zip.Central]
-    var size = 0L
-    members.foreach { c =>
-      if (cur.nonEmpty && size + c.csize > table.maxSplitBytes) {
-        groups += cur.toSeq; cur = scala.collection.mutable.ArrayBuffer.empty
-        size = 0L
-      }
-      cur += c; size += c.csize
+  /** One archive's partitions: CONSECUTIVE survivors binned by compressed
+    * size. */
+  private def partitionsOfFile(st: FileStatus): Seq[InputPartition] =
+    SplitBudget.packWithin(members(st).map(st.getPath.toString -> _),
+      table.maxSplitBytes, openCost = 0L)(_.csize).map { case (p, g) =>
+      ZipInputPartition(p, st.getLen, g, required.fieldNames)
     }
-    if (cur.nonEmpty) groups += cur.toSeq
-    groups.map(g => ZipInputPartition(st.getPath.toString, st.getLen, g,
-      required.fieldNames)).toSeq
-  }
 
   override def description(): String =
     s"graft-zip archives=${table.files.length}, " +
@@ -214,10 +177,7 @@ final class ZipScan(table: ZipTable, required: StructType, pushed: Array[Filter]
 
   /** EXACT stats — the directory is an index. */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val survivors = table.files.flatMap { st =>
-      ZipTable.directoryOf(table.conf, st)
-        .filter(c => !c.name.endsWith("/")).filter(keep)
-    }
+    private val survivors = table.files.flatMap(members)
     override def sizeInBytes(): OptionalLong =
       OptionalLong.of(survivors.map(_.usize).sum)
     override def numRows(): OptionalLong = OptionalLong.of(survivors.length)

@@ -1,7 +1,5 @@
 package graft.sources.grib
 
-import java.util.OptionalLong
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
@@ -11,13 +9,12 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.{HeaderCache, LandingDir, LandingDirStream, Manifest}
-import graft.sources.nc.{NcScan, SerializableHadoopConf}
+import graft.sources.{HeaderCache, LandingDir, LandingDirStream, Manifest, Pushdown}
+import graft.sources.nc.SerializableHadoopConf
 import GribFormat.GribMessage
 
 /** DataSource V2 batch reader for GRIB editions 1 AND 2 (regular lat/lon
@@ -105,6 +102,43 @@ object GribTable {
   private[grib] def baseOf(m: GribMessage): java.time.LocalDateTime =
     if (m.baseTime == null) m.validTime else m.baseTime
 
+  /** The columns every cell of a message shares — the pushdown table of
+    * both GRIB scans: a claimed predicate on them prunes whole messages
+    * EXACTLY at planning. Sentinels (negative codes, NaN, level type 255,
+    * no interval start) are the NULLs the readers emit. */
+  private[grib] val MessageColumns: Pushdown.Columns[GribMessage] = {
+    def code(v: Int): Any = if (v < 0) null else v
+    def num(v: Double): Any = if (v.isNaN) null else v
+    new Pushdown.Columns[GribMessage](
+      ("time", _.validTime),
+      ("ref_time", baseOf(_)),
+      ("param", _.paramId),
+      ("member", m => code(m.member)),
+      ("derived", m => code(m.derived)),
+      ("level_type", m => if (m.levelType == 255) null else m.levelType),
+      ("level", m => num(m.level)),
+      ("level_to", m => num(m.levelTo)),
+      ("step", _.stepMinutes),
+      ("step_start", m =>
+        if (m.stepStartMinutes == Long.MinValue) null else m.stepStartMinutes),
+      ("prob_type", m => code(m.probType)),
+      ("prob_lo", m => num(m.probLo)),
+      ("prob_hi", m => num(m.probHi)),
+      ("percentile", m => code(m.percentile)))
+  }
+
+  /** The scan builder of both GRIB sources: message-column predicates
+    * are claimed (a scan's filters name only its own schema's columns);
+    * lat/lon, wavenumber and value predicates stay residual. */
+  private[grib] def builder(format: String, schema: StructType,
+      byFile: Seq[(String, Seq[GribMessage])], conf: Configuration,
+      factory: SerializableHadoopConf => PartitionReaderFactory,
+      paths: Seq[String] = Seq.empty,
+      maxFilesPerTrigger: Option[Int] = None): ScanBuilder =
+    new Pushdown.Builder(schema, MessageColumns.claims)(
+      new GribScan(format, byFile, _, _, conf, factory, paths,
+        maxFilesPerTrigger))
+
   /** Parsed message headers per (path, mtime, length). */
   private[grib] val headers = new HeaderCache[Seq[GribMessage]](4096)
 
@@ -174,76 +208,19 @@ final class GribTable(
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GribScanBuilder(this)
+    GribTable.builder("grib1", GribTable.Schema, byFile, conf,
+      new GribReaderFactory(_), paths, maxFilesPerTrigger)
 }
 
-final class GribScanBuilder(table: GribTable) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private var required: StructType = GribTable.Schema
-  private var pushed: Array[Filter] = Array.empty
-
-  /** time/ref_time/param/member/level/step predicates prune whole messages
-    * EXACTLY (all cells of a message share them) → fully handled; lat/lon
-    * stay residual. */
-  private def handled(f: Filter): Boolean = f match {
-    // `value` CAN be null (bitmap holes), `member` null for deterministic
-    // products, level/level_type null for surface-less products — their
-    // IsNotNull must stay residual
-    case sources.IsNotNull(a) => a != "value" && a != "member" &&
-      a != "derived" && a != "level" && a != "level_type" &&
-      a != "level_to" && a != "step_start" && a != "prob_type" &&
-      a != "prob_lo" && a != "prob_hi" && a != "percentile" &&
-      GribTable.Schema.fieldNames.contains(a)
-    case sources.EqualTo("param", _: Integer) => true
-    case sources.In("param", vs) => vs.forall(_.isInstanceOf[Integer])
-    case sources.EqualTo("member", _: Integer) => true
-    case sources.IsNull("member") => true
-    case sources.EqualTo("derived", _: Integer) => true
-    case sources.IsNull("derived") => true
-    case sources.EqualTo("level_type", _: Integer) => true
-    case sources.IsNull("level_type") => true
-    case sources.EqualTo("level", _: java.lang.Double) => true
-    case sources.IsNull("level") => true
-    case sources.EqualTo("level_to", _: java.lang.Double) => true
-    case sources.IsNull("level_to") => true
-    case sources.EqualTo("step", _: java.lang.Long) => true
-    case sources.EqualTo("step_start", _: java.lang.Long) => true
-    case sources.IsNull("step_start") => true
-    case sources.EqualTo("prob_type", _: Integer) => true
-    case sources.IsNull("prob_type") => true
-    case sources.EqualTo("prob_lo", _: java.lang.Double) => true
-    case sources.IsNull("prob_lo") => true
-    case sources.EqualTo("prob_hi", _: java.lang.Double) => true
-    case sources.IsNull("prob_hi") => true
-    case sources.EqualTo("percentile", _: Integer) => true
-    case sources.IsNull("percentile") => true
-    case sources.EqualTo("time" | "ref_time", v) => NcScan.toKey(v).isDefined
-    case sources.GreaterThan("time" | "ref_time", v) => NcScan.toKey(v).isDefined
-    case sources.GreaterThanOrEqual("time" | "ref_time", v) => NcScan.toKey(v).isDefined
-    case sources.LessThan("time" | "ref_time", v) => NcScan.toKey(v).isDefined
-    case sources.LessThanOrEqual("time" | "ref_time", v) => NcScan.toKey(v).isDefined
-    case _ => false
-  }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (h, residual) = filters.partition(handled)
-    pushed = h
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan = new GribScan(table.byFile, required, pushed,
-    table.conf, table.paths, table.maxFilesPerTrigger)
-}
-
+/** Message-granular scan of both GRIB sources (`format` names it in the
+  * plan; `factory` decodes its partitions). */
 final class GribScan(
+    format: String,
     byFile: Seq[(String, Seq[GribMessage])],
     required: StructType,
     pushed: Array[Filter],
     @transient conf: Configuration,
+    factory: SerializableHadoopConf => PartitionReaderFactory,
     paths: Seq[String],
     maxFilesPerTrigger: Option[Int])
     extends Scan with Batch with SupportsReportStatistics {
@@ -255,95 +232,40 @@ final class GribScan(
     new LandingDirStream(paths, conf, Manifest.isGrib,
       maxFilesPerTrigger, planFile, createReaderFactory())
 
+  /** Message survives every pushed predicate? */
+  private val keep: GribMessage => Boolean =
+    GribTable.MessageColumns.keep(pushed.toSeq)
+
+  private def partitionsOf(survivors: Seq[(String, GribMessage)]): Seq[InputPartition] =
+    GribSplit.pack(survivors).map { case (p, ms) =>
+      GribInputPartition(p, ms, required.fieldNames)
+    }
+
   /** Streaming batches reuse the batch pruning + partitioning verbatim. */
   private def planFile(st: FileStatus): Seq[InputPartition] = {
     val path = st.getPath.toString
-    val ms = GribTable.messagesOf(conf, Seq(st)).head
-    GribSplit.pack(ms.filter(keep).map(path -> _)).map { case (p, packed) =>
-      GribInputPartition(p, packed, required.fieldNames)
-    }
-  }
-
-  /** SAME conversion as the filter-literal side (NcScan.toKey) so the
-    * Double equality in keep() is exact by construction. */
-  private def timeMicros(m: GribMessage): Double = NcScan.toKey(m.validTime).get
-  private def refMicros(m: GribMessage): Double =
-    NcScan.toKey(GribTable.baseOf(m)).get
-
-  /** Message survives every pushed predicate? */
-  private def keep(m: GribMessage): Boolean = pushed.forall {
-    case sources.IsNotNull(_) => true
-    case sources.EqualTo("param", v: Integer) => m.paramId == v.intValue()
-    case sources.In("param", vs) =>
-      vs.exists(v => m.paramId == v.asInstanceOf[Integer].intValue())
-    case sources.EqualTo("member", v: Integer) => m.member == v.intValue()
-    case sources.IsNull("member") => m.member < 0
-    case sources.EqualTo("derived", v: Integer) => m.derived == v.intValue()
-    case sources.IsNull("derived") => m.derived < 0
-    case sources.EqualTo("level_type", v: Integer) =>
-      m.levelType != 255 && m.levelType == v.intValue()
-    case sources.IsNull("level_type") => m.levelType == 255
-    case sources.EqualTo("level", v: java.lang.Double) =>
-      m.level == v.doubleValue() // NaN (no surface) never equals
-    case sources.IsNull("level") => m.level.isNaN
-    case sources.EqualTo("level_to", v: java.lang.Double) =>
-      m.levelTo == v.doubleValue()
-    case sources.IsNull("level_to") => m.levelTo.isNaN
-    case sources.EqualTo("step", v: java.lang.Long) =>
-      m.stepMinutes == v.longValue()
-    case sources.EqualTo("step_start", v: java.lang.Long) =>
-      m.stepStartMinutes == v.longValue()
-    case sources.IsNull("step_start") =>
-      m.stepStartMinutes == Long.MinValue
-    case sources.EqualTo("prob_type", v: Integer) => m.probType == v.intValue()
-    case sources.IsNull("prob_type") => m.probType < 0
-    case sources.EqualTo("prob_lo", v: java.lang.Double) =>
-      m.probLo == v.doubleValue() // NaN (absent) never equals
-    case sources.IsNull("prob_lo") => m.probLo.isNaN
-    case sources.EqualTo("prob_hi", v: java.lang.Double) =>
-      m.probHi == v.doubleValue()
-    case sources.IsNull("prob_hi") => m.probHi.isNaN
-    case sources.EqualTo("percentile", v: Integer) =>
-      m.percentile == v.intValue()
-    case sources.IsNull("percentile") => m.percentile < 0
-    case sources.EqualTo("time", v) => NcScan.toKey(v).contains(timeMicros(m))
-    case sources.GreaterThan("time", v) => NcScan.toKey(v).exists(timeMicros(m) > _)
-    case sources.GreaterThanOrEqual("time", v) => NcScan.toKey(v).exists(timeMicros(m) >= _)
-    case sources.LessThan("time", v) => NcScan.toKey(v).exists(timeMicros(m) < _)
-    case sources.LessThanOrEqual("time", v) => NcScan.toKey(v).exists(timeMicros(m) <= _)
-    case sources.EqualTo("ref_time", v) => NcScan.toKey(v).contains(refMicros(m))
-    case sources.GreaterThan("ref_time", v) => NcScan.toKey(v).exists(refMicros(m) > _)
-    case sources.GreaterThanOrEqual("ref_time", v) => NcScan.toKey(v).exists(refMicros(m) >= _)
-    case sources.LessThan("ref_time", v) => NcScan.toKey(v).exists(refMicros(m) < _)
-    case sources.LessThanOrEqual("ref_time", v) => NcScan.toKey(v).exists(refMicros(m) <= _)
-    case _ => true
+    partitionsOf(GribTable.messagesOf(conf, Seq(st)).head.filter(keep).map(path -> _))
   }
 
   // lazy: description(), planInputPartitions(), and estimateStatistics()
-  // all consult it — filter the message set once per scan, not per call
+  // all consult them — filter and pack the message set once per scan
   private lazy val survivors: Seq[(String, GribMessage)] =
     byFile.flatMap { case (p, ms) => ms.filter(keep).map(p -> _) }
+  private lazy val partitions = partitionsOf(survivors)
 
   override def description(): String =
-    s"graft-grib1 messages=${survivors.length}/${byFile.map(_._2.length).sum}, " +
-      s"splits=${GribSplit.pack(survivors).length}, " +
+    s"graft-$format messages=${survivors.length}/${byFile.map(_._2.length).sum}, " +
+      s"splits=${partitions.length}, " +
       s"PushedFilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${required.simpleString}"
 
-  override def planInputPartitions(): Array[InputPartition] =
-    GribSplit.pack(survivors).map { case (p, ms) =>
-      GribInputPartition(p, ms, required.fieldNames)
-    }.toArray
+  override def planInputPartitions(): Array[InputPartition] = partitions.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GribReaderFactory(new SerializableHadoopConf(conf))
+    factory(new SerializableHadoopConf(conf))
 
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val rows = survivors.map(_._2.nValues.toLong).sum
-    private val rowBytes = required.fields.map(_.dataType.defaultSize.toLong).sum
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(rows * math.max(1L, rowBytes))
-    override def numRows(): OptionalLong = OptionalLong.of(rows)
-  }
+  override def estimateStatistics(): Statistics =
+    Pushdown.stats(survivors.map(_._2.nValues.toLong).sum, required)
 }
 
 final case class GribInputPartition(
@@ -360,35 +282,9 @@ final case class GribInputPartition(
   * tiny scans to a handful of tasks locally. The budget derives from the
   * session's `spark.sql.files.*` confs — scale-adaptive, no constants. */
 private[grib] object GribSplit {
-  private def msgBytes(m: GribMessage): Long =
-    m.dataBytes.toLong + (if (m.hasBitmap) m.bitmapBytes.toLong else 0L)
-
-  def pack(survivors: Seq[(String, GribMessage)]): Seq[(String, Seq[GribMessage])] = {
-    if (survivors.isEmpty) return Seq.empty
-    val openCost = graft.sources.SplitBudget.openCostInBytes
-    // open cost charges once per FILE (messages of one file share the
-    // stream), exactly like Spark's file-granular charging
-    val totalBytes = survivors.map { case (_, m) => msgBytes(m) }.sum +
-      survivors.iterator.map(_._1).distinct.size * openCost
-    val maxSplit = graft.sources.SplitBudget.maxSplitBytes(totalBytes)
-    val out = Seq.newBuilder[(String, Seq[GribMessage])]
-    var curPath: String = null
-    var cur = List.newBuilder[GribMessage]
-    var curBytes = 0L
-    var curEmpty = true
-    def flush(): Unit = if (!curEmpty) {
-      out += ((curPath, cur.result()))
-      cur = List.newBuilder[GribMessage]; curBytes = 0L; curEmpty = true
-    }
-    survivors.foreach { case (p, m) =>
-      val cost = msgBytes(m) + (if (p != curPath) openCost else 0L)
-      if (p != curPath || (!curEmpty && curBytes + cost > maxSplit)) flush()
-      curPath = p
-      cur += m; curBytes += cost; curEmpty = false
-    }
-    flush()
-    out.result()
-  }
+  def pack(survivors: Seq[(String, GribMessage)]): Seq[(String, Seq[GribMessage])] =
+    graft.sources.SplitBudget.pack(survivors)(m =>
+      m.dataBytes.toLong + (if (m.hasBitmap) m.bitmapBytes.toLong else 0L))
 }
 
 final class GribReaderFactory(conf: SerializableHadoopConf)

@@ -1,7 +1,5 @@
 package graft.sources.grib
 
-import java.util.OptionalLong
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 
@@ -11,13 +9,12 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.nc.{NcScan, SerializableHadoopConf}
+import graft.sources.nc.SerializableHadoopConf
 import GribFormat.GribMessage
 
 /** DataSource V2 batch reader for SPECTRAL GRIB2 fields (grid template
@@ -140,117 +137,8 @@ final class GribSpectralTable(
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GribSpectralScanBuilder(this)
-}
-
-final class GribSpectralScanBuilder(table: GribSpectralTable) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private var required: StructType = GribSpectralTable.Schema
-  private var pushed: Array[Filter] = Array.empty
-
-  /** time/param/member/level/step predicates prune whole messages EXACTLY
-    * (all rows of a message share them); m/n/part predicates stay
-    * residual. */
-  private def handled(f: Filter): Boolean = f match {
-    case sources.IsNotNull(a) => a != "member" &&
-      a != "level" && a != "level_type" &&
-      GribSpectralTable.Schema.fieldNames.contains(a)
-    case sources.EqualTo("param", _: Integer) => true
-    case sources.In("param", vs) => vs.forall(_.isInstanceOf[Integer])
-    case sources.EqualTo("member", _: Integer) => true
-    case sources.IsNull("member") => true
-    case sources.EqualTo("level_type", _: Integer) => true
-    case sources.IsNull("level_type") => true
-    case sources.EqualTo("level", _: java.lang.Double) => true
-    case sources.IsNull("level") => true
-    case sources.EqualTo("step", _: java.lang.Long) => true
-    case sources.EqualTo("time" | "ref_time", v) => NcScan.toKey(v).isDefined
-    case sources.GreaterThan("time" | "ref_time", v) => NcScan.toKey(v).isDefined
-    case sources.GreaterThanOrEqual("time" | "ref_time", v) => NcScan.toKey(v).isDefined
-    case sources.LessThan("time" | "ref_time", v) => NcScan.toKey(v).isDefined
-    case sources.LessThanOrEqual("time" | "ref_time", v) => NcScan.toKey(v).isDefined
-    case _ => false
-  }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (h, residual) = filters.partition(handled)
-    pushed = h
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan = new GribSpectralScan(table.byFile, required,
-    pushed, table.conf)
-}
-
-final class GribSpectralScan(
-    byFile: Seq[(String, Seq[GribMessage])],
-    required: StructType,
-    pushed: Array[Filter],
-    @transient conf: Configuration)
-    extends Scan with Batch with SupportsReportStatistics {
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  private def timeMicros(m: GribMessage): Double = NcScan.toKey(m.validTime).get
-  private def refMicros(m: GribMessage): Double =
-    NcScan.toKey(GribTable.baseOf(m)).get
-
-  private def keep(m: GribMessage): Boolean = pushed.forall {
-    case sources.IsNotNull(_) => true
-    case sources.EqualTo("param", v: Integer) => m.paramId == v.intValue()
-    case sources.In("param", vs) =>
-      vs.exists(v => m.paramId == v.asInstanceOf[Integer].intValue())
-    case sources.EqualTo("member", v: Integer) => m.member == v.intValue()
-    case sources.IsNull("member") => m.member < 0
-    case sources.EqualTo("level_type", v: Integer) =>
-      m.levelType != 255 && m.levelType == v.intValue()
-    case sources.IsNull("level_type") => m.levelType == 255
-    case sources.EqualTo("level", v: java.lang.Double) =>
-      m.level == v.doubleValue()
-    case sources.IsNull("level") => m.level.isNaN
-    case sources.EqualTo("step", v: java.lang.Long) =>
-      m.stepMinutes == v.longValue()
-    case sources.EqualTo("time", v) => NcScan.toKey(v).contains(timeMicros(m))
-    case sources.GreaterThan("time", v) => NcScan.toKey(v).exists(timeMicros(m) > _)
-    case sources.GreaterThanOrEqual("time", v) => NcScan.toKey(v).exists(timeMicros(m) >= _)
-    case sources.LessThan("time", v) => NcScan.toKey(v).exists(timeMicros(m) < _)
-    case sources.LessThanOrEqual("time", v) => NcScan.toKey(v).exists(timeMicros(m) <= _)
-    case sources.EqualTo("ref_time", v) => NcScan.toKey(v).contains(refMicros(m))
-    case sources.GreaterThan("ref_time", v) => NcScan.toKey(v).exists(refMicros(m) > _)
-    case sources.GreaterThanOrEqual("ref_time", v) => NcScan.toKey(v).exists(refMicros(m) >= _)
-    case sources.LessThan("ref_time", v) => NcScan.toKey(v).exists(refMicros(m) < _)
-    case sources.LessThanOrEqual("ref_time", v) => NcScan.toKey(v).exists(refMicros(m) <= _)
-    case _ => true
-  }
-
-  private lazy val survivors: Seq[(String, GribMessage)] =
-    byFile.flatMap { case (p, ms) => ms.filter(keep).map(p -> _) }
-
-  override def description(): String =
-    s"graft-grib-spectral messages=${survivors.length}/${byFile.map(_._2.length).sum}, " +
-      s"splits=${GribSplit.pack(survivors).length}, " +
-      s"PushedFilters: [${pushed.mkString(", ")}], " +
-      s"ReadSchema: ${required.simpleString}"
-
-  override def planInputPartitions(): Array[InputPartition] =
-    GribSplit.pack(survivors).map { case (p, ms) =>
-      GribInputPartition(p, ms, required.fieldNames)
-    }.toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GribSpectralReaderFactory(new SerializableHadoopConf(conf))
-
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val rows = survivors.map(_._2.nValues.toLong).sum
-    private val rowBytes = required.fields.map(_.dataType.defaultSize.toLong).sum
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(rows * math.max(1L, rowBytes))
-    override def numRows(): OptionalLong = OptionalLong.of(rows)
-  }
+    GribTable.builder("grib-spectral", GribSpectralTable.Schema, byFile, conf,
+      new GribSpectralReaderFactory(_))
 }
 
 final class GribSpectralReaderFactory(conf: SerializableHadoopConf)

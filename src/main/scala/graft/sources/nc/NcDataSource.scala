@@ -1,7 +1,5 @@
 package graft.sources.nc
 
-import java.util.OptionalLong
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -13,12 +11,11 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.{HeaderCache, LandingDir, LandingDirStream, Manifest}
+import graft.sources.{HeaderCache, LandingDir, LandingDirStream, Manifest, Pushdown}
 import NcFormat._
 
 /** DataSource V2 batch reader for classic NetCDF grids — S9's real form
@@ -62,20 +59,10 @@ class NcDataSource extends TableProvider with DataSourceRegister {
 
 /** One grid axis of the scan, with its materialized (small, driver-read)
   * coordinate values shipped to executors inside each partition. */
-sealed trait Axis extends Serializable {
-  def name: String
-  def n: Int
+sealed trait Axis extends Pushdown.KeyedAxis with Serializable {
   def sparkType: DataType
   /** Catalyst-internal value at index i. */
   def emit(i: Int): Any
-  /** Comparable value at index i (micros for time), for index pruning. */
-  def key(i: Int): Double
-  final def monotonic: Boolean = {
-    val inc = (1 until n).forall(i => key(i - 1) < key(i))
-    lazy val dec = (1 until n).forall(i => key(i - 1) > key(i))
-    inc || dec
-  }
-  final def increasing: Boolean = n < 2 || key(0) < key(n - 1)
 }
 
 final case class TimeAxis(name: String, micros: Array[Long]) extends Axis {
@@ -160,8 +147,7 @@ object NcTable {
       case None => Option(options.get("path")).toSeq
     }
     val maxFilesPerTrigger = LandingDir.maxFilesPerTrigger(options)
-    val splitBytes = Option(options.get("splitBytes")).map(_.toLong)
-      .getOrElse(128L * 1024 * 1024)
+    val splitBytes = LandingDir.bytesOption(options, "splitBytes", 128L << 20)
     val files = LandingDir.list(conf, paths, Manifest.isNetcdf)
     val hdf5 = files.headOption.exists { st =>
       val in = st.getPath.getFileSystem(conf).open(st.getPath)
@@ -294,114 +280,17 @@ final class NcTable(
   override def schema(): StructType = schema0
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new NcScanBuilder(this)
-}
-
-final class NcScanBuilder(table: NcTable) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private var required: StructType = table.schema0
-  private var pushed: Array[Filter] = Array.empty
-
   /** Axis monotonic in every file → an index range is an EXACT rewrite of
-    * the predicate, so the filter is fully handled (no residual). An
-    * empty-layout table (a bare streaming landing dir) claims nothing. */
-  private val prunable: Set[String] =
-    table.layouts.headOption.map(_.axes.map(_.name)
-      .filter(n => table.layouts.forall(_.axes.find(_.name == n).exists(_.monotonic)))
-      .toSet).getOrElse(Set.empty)
-
-  /** Axis columns are never null; data columns CAN be (decoded _FillValue),
-    * so IsNotNull is only claimed for axes. */
-  private val axisCols: Set[String] =
-    table.layouts.headOption.map(_.axes.map(_.name).toSet).getOrElse(Set.empty)
-
-  private def handled(f: Filter): Boolean = f match {
-    case sources.IsNotNull(a) => axisCols(a)
-    case sources.EqualTo(a, v) => prunable(a) && comparable(v)
-    case sources.GreaterThan(a, v) => prunable(a) && comparable(v)
-    case sources.GreaterThanOrEqual(a, v) => prunable(a) && comparable(v)
-    case sources.LessThan(a, v) => prunable(a) && comparable(v)
-    case sources.LessThanOrEqual(a, v) => prunable(a) && comparable(v)
-    case _ => false
-  }
-
-  private def comparable(v: Any): Boolean = NcScan.toKey(v).isDefined
-
-  // NOTE a stream STARTED on an empty landing dir has no layouts, so
-  // prunable stays empty and every filter remains residual for the
-  // query's lifetime — correct (Spark re-filters) but unpruned; start
-  // streams against a seeded dir when pushdown matters.
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (h, residual) = filters.partition(handled)
-    pushed = h
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan =
-    new NcScan(table.layouts, required, pushed, table.splitBytes, table.conf,
-      table.paths, table.schema0, table.maxFilesPerTrigger)
-}
-
-object NcScan {
-  /** Filter literal → the axis key domain (micros for timestamps). */
-  def toKey(v: Any): Option[Double] = v match {
-    case n: Number => Some(n.doubleValue())
-    case t: java.time.LocalDateTime =>
-      Some(t.toEpochSecond(java.time.ZoneOffset.UTC) * 1e6 + t.getNano / 1000)
-    case t: java.time.Instant =>
-      Some(t.getEpochSecond * 1e6 + t.getNano / 1000)
-    case t: java.sql.Timestamp => toKey(t.toLocalDateTime)
-    case d: java.time.LocalDate => toKey(d.atStartOfDay())
-    case d: java.sql.Date => toKey(d.toLocalDate)
-    case _ => None
-  }
-
-  /** Exact index range [lo, hi] of `op v` on a monotonic axis; empty ranges
-    * come back as lo > hi. */
-  def axisRange(axis: Axis, f: Filter): (Int, Int) = {
-    val inc = axis.increasing
-    val n = axis.n
-    def firstGe(v: Double) =
-      if (inc) (0 until n).indexWhere(axis.key(_) >= v) match { case -1 => n; case i => i }
-      else 0
-    def firstGt(v: Double) =
-      if (inc) (0 until n).indexWhere(axis.key(_) > v) match { case -1 => n; case i => i }
-      else 0
-    def lastLe(v: Double) =
-      if (inc) (0 until n).lastIndexWhere(axis.key(_) <= v)
-      else n - 1
-    def lastLt(v: Double) =
-      if (inc) (0 until n).lastIndexWhere(axis.key(_) < v)
-      else n - 1
-    // decreasing axes: the same predicate bounds the other end
-    def decFirstLe(v: Double) = (0 until n).indexWhere(axis.key(_) <= v) match { case -1 => n; case i => i }
-    def decFirstLt(v: Double) = (0 until n).indexWhere(axis.key(_) < v) match { case -1 => n; case i => i }
-    def decLastGe(v: Double) = (0 until n).lastIndexWhere(axis.key(_) >= v)
-    def decLastGt(v: Double) = (0 until n).lastIndexWhere(axis.key(_) > v)
-    f match {
-      case sources.EqualTo(_, v0) =>
-        val v = toKey(v0).get
-        if (inc) (firstGe(v), lastLe(v))
-        else (decFirstLe(v), decLastGe(v))
-      case sources.GreaterThan(_, v0) =>
-        val v = toKey(v0).get
-        if (inc) (firstGt(v), n - 1) else (0, decLastGt(v))
-      case sources.GreaterThanOrEqual(_, v0) =>
-        val v = toKey(v0).get
-        if (inc) (firstGe(v), n - 1) else (0, decLastGe(v))
-      case sources.LessThan(_, v0) =>
-        val v = toKey(v0).get
-        if (inc) (0, lastLt(v)) else (decFirstLt(v), n - 1)
-      case sources.LessThanOrEqual(_, v0) =>
-        val v = toKey(v0).get
-        if (inc) (0, lastLe(v)) else (decFirstLe(v), n - 1)
-      case _ => (0, n - 1)
-    }
+    * a comparison on it. An empty-layout table (a bare streaming landing
+    * dir) claims nothing, so every filter stays residual for the
+    * stream's lifetime — correct but unpruned; start streams against a
+    * seeded dir when pushdown matters. */
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val monotone = layouts.headOption.toSeq.flatMap(_.axes.map(_.name))
+      .filter(n => layouts.forall(_.axes.find(_.name == n).exists(_.monotonic)))
+    new Pushdown.Builder(schema0, Pushdown.axisClaim(monotone.toSet))(
+      new NcScan(layouts, _, _, splitBytes, conf, paths, schema0,
+        maxFilesPerTrigger))
   }
 }
 
@@ -466,21 +355,8 @@ final class NcScan(
 
   /** Pruned [lo, hi] per data dim, or None when any axis range is empty —
     * the whole file is skipped (file-level pruning, the F6 analog). */
-  private def prunedRanges(l: FileLayout): Option[Seq[(Int, Int)]] = {
-    val init = l.axes.map(a => (0, a.n - 1)).toArray
-    pushed.foreach {
-      case f: sources.IsNotNull => ()
-      case f =>
-        f.references.headOption.foreach { ref =>
-          val i = l.axes.indexWhere(_.name == ref)
-          if (i >= 0) {
-            val (lo, hi) = NcScan.axisRange(l.axes(i), f)
-            init(i) = (math.max(init(i)._1, lo), math.min(init(i)._2, hi))
-          }
-        }
-    }
-    if (init.exists(r => r._1 > r._2)) None else Some(init.toSeq)
-  }
+  private def prunedRanges(l: FileLayout): Option[Seq[(Int, Int)]] =
+    Pushdown.box(l.axes, pushed).map(_.toSeq)
 
   private def requiredVars(l: FileLayout): Seq[NcVar] =
     l.dataVars.filter(v => required.fieldNames.contains(v.name))
@@ -517,14 +393,10 @@ final class NcScan(
   override def createReaderFactory(): PartitionReaderFactory =
     new NcReaderFactory(new SerializableHadoopConf(conf))
 
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val rows: Long = layouts.flatMap(prunedRanges).map {
+  override def estimateStatistics(): Statistics =
+    Pushdown.stats(layouts.flatMap(prunedRanges).map {
       _.map { case (lo, hi) => (hi - lo + 1).toLong }.product
-    }.sum
-    private val rowBytes: Long = required.fields.map(_.dataType.defaultSize.toLong).sum
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(rows * math.max(1L, rowBytes))
-    override def numRows(): OptionalLong = OptionalLong.of(rows)
-  }
+    }.sum, required)
 }
 
 sealed trait NcColSpec extends Serializable

@@ -1,7 +1,5 @@
 package graft.sources.tiff
 
-import java.util.OptionalLong
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
@@ -11,13 +9,12 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.{HeaderCache, LandingDir, LandingDirStream}
+import graft.sources.{HeaderCache, LandingDir, LandingDirStream, Pushdown, SplitBudget}
 import graft.sources.nc.SerializableHadoopConf
 import TiffFormat.TiffRaster
 
@@ -103,6 +100,16 @@ object TiffTable {
     StructField("band", IntegerType, nullable = false),
     StructField("value", DoubleType, nullable = true)))
 
+  /** Model-space (y, x) axis names: latitude/longitude for geographic
+    * scans, northing/easting for projected ones — the pruning math is the
+    * same monotone affine either way. */
+  private[tiff] def axisNames(projected: Boolean): (String, String) =
+    if (projected) ("northing", "easting") else ("latitude", "longitude")
+
+  /** The columns constant over one band of one file, unit (path, band). */
+  private[tiff] val BandColumns = new Pushdown.Columns[(String, Int)](
+    ("path", _._1), ("band", _._2))
+
   /** Parsed IFDs per (path, mtime, length, overview level). */
   private[tiff] val headers = new HeaderCache[TiffRaster](4096)
 
@@ -180,51 +187,18 @@ final class TiffTable(
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new TiffScanBuilder(this)
-}
-
-final class TiffScanBuilder(table: TiffTable) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private var required: StructType = table.schema()
-  private var pushed: Array[Filter] = Array.empty
-  // model-space axis names: (y, x) — latitude/longitude for geographic
-  // scans, northing/easting for projected ones; the pruning math is the
-  // same monotone affine either way
-  private val yName = if (table.projected) "northing" else "latitude"
-  private val xName = if (table.projected) "easting" else "longitude"
-
-  /** Coordinate range predicates (lat/lon, or northing/easting on a
-    * projected scan) prune TILES at planning and are re-applied per cell
-    * with the planner's own arithmetic → fully handled; band equality is
-    * enforced in the reader; `path` supports equality (one file per date
-    * is the archive shape). Everything on `value` stays residual. */
-  private def handled(f: Filter): Boolean = f match {
-    case sources.IsNotNull(a) => a != "value" &&
-      table.schema().fieldNames.contains(a)
-    case sources.EqualTo("band", _: Integer) => true
-    case sources.In("band", vs) => vs.forall(_.isInstanceOf[Integer])
-    case sources.EqualTo("path", _: String) => true
-    case sources.EqualTo(a, _: java.lang.Double) => a == yName || a == xName
-    case sources.GreaterThan(a, _: java.lang.Double) => a == yName || a == xName
-    case sources.GreaterThanOrEqual(a, _: java.lang.Double) => a == yName || a == xName
-    case sources.LessThan(a, _: java.lang.Double) => a == yName || a == xName
-    case sources.LessThanOrEqual(a, _: java.lang.Double) => a == yName || a == xName
-    case _ => false
+  /** Coordinate comparisons (lat/lon, or northing/easting on a projected
+    * scan) prune TILES at planning and bound the cells each partition
+    * emits with the planner's own arithmetic; `path` and `band` are
+    * constant over a band of one file. All are exact; everything on
+    * `value` stays residual. */
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val (y, x) = TiffTable.axisNames(projected)
+    val axes = Pushdown.axisClaim(Set(y, x))
+    new Pushdown.Builder(schema(),
+      f => TiffTable.BandColumns.claims(f) || axes(f))(
+      new TiffScan(byFile, _, _, conf, paths, maxFilesPerTrigger, overview))
   }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (h, residual) = filters.partition(handled)
-    pushed = h
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan = new TiffScan(table.byFile, required, pushed,
-    table.conf, table.paths, table.maxFilesPerTrigger, table.overview)
 }
 
 final class TiffScan(
@@ -247,159 +221,65 @@ final class TiffScan(
   /** Streaming batches reuse the batch pruning + packing verbatim (one
     * file per call, so the budget sees that file's surviving tiles). */
   private def planFile(st: FileStatus): Seq[InputPartition] =
-    fileTiles(st.getPath.toString,
-      TiffTable.rastersOf(conf, Seq(st), overview).head).toSeq.flatMap { f =>
-      val openCost = graft.sources.SplitBudget.openCostInBytes
-      val maxSplit = graft.sources.SplitBudget.maxSplitBytes(
-        f._3.map(_.count).sum + openCost)
-      packTiles(f, maxSplit, openCost)
-    }
+    packed(fileTiles(st.getPath.toString,
+      TiffTable.rastersOf(conf, Seq(st), overview).head).toSeq)
 
   // all rasters in one scan share a CRS class (resolve() refused a mix)
-  private val projectedCrs = byFile.headOption.exists(_._2.projected)
-  private val yName = if (projectedCrs) "northing" else "latitude"
-  private val xName = if (projectedCrs) "easting" else "longitude"
+  private val (yName, xName) =
+    TiffTable.axisNames(byFile.headOption.exists(_._2.projected))
 
   /** Pixel-space keep-bounds for one raster from the pushed coordinate
-    * range predicates (lat/lon or northing/easting): [x0, x1] x [y0, y1]
-    * inclusive, or None = nothing survives. Pixel centers are monotone
-    * in x (lon/easting increasing) and y (lat/northing decreasing for
-    * north-up rasters), so each bound maps to one end. */
-  private def pixelBounds(r: TiffRaster): Option[(Int, Int, Int, Int)] = {
-    var x0 = 0; var x1 = r.width - 1; var y0 = 0; var y1 = r.height - 1
-    def firstX(pred: Int => Boolean): Int = { // smallest x satisfying
-      var lo = 0; var hi = r.width
-      while (lo < hi) { val m = (lo + hi) >>> 1; if (pred(m)) hi = m else lo = m + 1 }
-      lo
+    * comparisons: [x0, x1] x [y0, y1] inclusive, or None = nothing
+    * survives. Pixel centers are monotone in x (lon/easting increasing)
+    * and y (lat/northing decreasing for north-up rasters, increasing for
+    * a bare TIFF's pixel-space transform). */
+  private def pixelBounds(r: TiffRaster): Option[(Int, Int, Int, Int)] =
+    Pushdown.box(Seq(Pushdown.axis(yName, r.height)(r.latOf),
+      Pushdown.axis(xName, r.width)(r.lonOf)), pushed).map { b =>
+      (b(1)._1, b(1)._2, b(0)._1, b(0)._2)
     }
-    def firstY(pred: Int => Boolean): Int = {
-      var lo = 0; var hi = r.height
-      while (lo < hi) { val m = (lo + hi) >>> 1; if (pred(m)) hi = m else lo = m + 1 }
-      lo
-    }
-    pushed.foreach {
-      // lon/easting increases with x
-      case sources.GreaterThan(`xName`, v: java.lang.Double) =>
-        x0 = math.max(x0, firstX(x => r.lonOf(x) > v.doubleValue()))
-      case sources.GreaterThanOrEqual(`xName`, v: java.lang.Double) =>
-        x0 = math.max(x0, firstX(x => r.lonOf(x) >= v.doubleValue()))
-      case sources.LessThan(`xName`, v: java.lang.Double) =>
-        x1 = math.min(x1, firstX(x => r.lonOf(x) >= v.doubleValue()) - 1)
-      case sources.LessThanOrEqual(`xName`, v: java.lang.Double) =>
-        x1 = math.min(x1, firstX(x => r.lonOf(x) > v.doubleValue()) - 1)
-      case sources.EqualTo(`xName`, v: java.lang.Double) =>
-        val x = firstX(x => r.lonOf(x) >= v.doubleValue())
-        if (x < r.width && r.lonOf(x) == v.doubleValue()) {
-          x0 = math.max(x0, x); x1 = math.min(x1, x)
-        } else { x0 = 1; x1 = 0 }
-      // lat/northing DECREASES with y for north-up rasters (scaleY > 0); a bare
-      // TIFF's pixel-space transform (scaleY = -1) INCREASES — branch so
-      // the claimed-exact pushdown is right either way
-      case sources.LessThan(`yName`, v: java.lang.Double) =>
-        if (r.scaleY > 0) y0 = math.max(y0, firstY(y => r.latOf(y) < v.doubleValue()))
-        else y1 = math.min(y1, firstY(y => r.latOf(y) >= v.doubleValue()) - 1)
-      case sources.LessThanOrEqual(`yName`, v: java.lang.Double) =>
-        if (r.scaleY > 0) y0 = math.max(y0, firstY(y => r.latOf(y) <= v.doubleValue()))
-        else y1 = math.min(y1, firstY(y => r.latOf(y) > v.doubleValue()) - 1)
-      case sources.GreaterThan(`yName`, v: java.lang.Double) =>
-        if (r.scaleY > 0) y1 = math.min(y1, firstY(y => r.latOf(y) <= v.doubleValue()) - 1)
-        else y0 = math.max(y0, firstY(y => r.latOf(y) > v.doubleValue()))
-      case sources.GreaterThanOrEqual(`yName`, v: java.lang.Double) =>
-        if (r.scaleY > 0) y1 = math.min(y1, firstY(y => r.latOf(y) < v.doubleValue()) - 1)
-        else y0 = math.max(y0, firstY(y => r.latOf(y) >= v.doubleValue()))
-      case sources.EqualTo(`yName`, v: java.lang.Double) =>
-        val y =
-          if (r.scaleY > 0) firstY(y => r.latOf(y) <= v.doubleValue())
-          else firstY(y => r.latOf(y) >= v.doubleValue())
-        if (y < r.height && r.latOf(y) == v.doubleValue()) {
-          y0 = math.max(y0, y); y1 = math.min(y1, y)
-        } else { y0 = 1; y1 = 0 }
-      case _ =>
-    }
-    if (x0 > x1 || y0 > y1) None else Some((x0, x1, y0, y1))
-  }
 
-  private def pathKept(p: String): Boolean = pushed.forall {
-    case sources.EqualTo("path", v: String) => p == v
-    case _ => true
-  }
-
-  private def bandsOf(r: TiffRaster): Seq[Int] = {
-    val all = 1 to r.bands
-    pushed.foldLeft(all: Seq[Int]) { (acc, f) =>
-      f match {
-        case sources.EqualTo("band", v: Integer) => acc.filter(_ == v.intValue())
-        case sources.In("band", vs) =>
-          acc.filter(b => vs.exists(_.asInstanceOf[Integer].intValue() == b))
-        case _ => acc
-      }
-    }
-  }
+  private val bandKept: ((String, Int)) => Boolean =
+    TiffTable.BandColumns.keep(pushed.toSeq)
 
   // (path, raster, surviving tile refs, clip bounds, bands) per file
   private def fileTiles(p: String, r: TiffRaster): Option[
-      (String, TiffRaster, Seq[TiffTileRef], (Int, Int, Int, Int), Array[Int])] =
-    if (!pathKept(p)) None
-    else {
-      val bands = bandsOf(r)
-      if (bands.isEmpty) None
-      else pixelBounds(r) match {
-        case None => None
-        case Some((x0, x1, y0, y1)) =>
-          val t0x = x0 / r.tileWidth; val t1x = x1 / r.tileWidth
-          val t0y = y0 / r.tileHeight; val t1y = y1 / r.tileHeight
-          // slim descriptor: a partition must NOT serialize the whole
-          // tile index (O(tiles) per partition = O(tiles^2) shipped)
-          val slim = r.copy(tileOffsets = Array.emptyLongArray,
-            tileByteCounts = Array.emptyLongArray)
-          val tiles = for {
-            ty <- t0y to t1y
-            tx <- t0x to t1x
-            t = ty * r.tilesAcross + tx
-          } yield TiffTileRef(tx, ty, r.tileOffsets(t), r.tileByteCounts(t))
-          Some((p, slim, tiles, (x0, x1, y0, y1), bands.toArray))
-      }
+      (String, TiffRaster, Seq[TiffTileRef], (Int, Int, Int, Int), Array[Int])] = {
+    val bands = (1 to r.bands).filter(b => bandKept((p, b)))
+    if (bands.isEmpty) None
+    else pixelBounds(r).map { case (x0, x1, y0, y1) =>
+      val t0x = x0 / r.tileWidth; val t1x = x1 / r.tileWidth
+      val t0y = y0 / r.tileHeight; val t1y = y1 / r.tileHeight
+      // slim descriptor: a partition must NOT serialize the whole
+      // tile index (O(tiles) per partition = O(tiles^2) shipped)
+      val slim = r.copy(tileOffsets = Array.emptyLongArray,
+        tileByteCounts = Array.emptyLongArray)
+      val tiles = for {
+        ty <- t0y to t1y
+        tx <- t0x to t1x
+        t = ty * r.tilesAcross + tx
+      } yield TiffTileRef(tx, ty, r.tileOffsets(t), r.tileByteCounts(t))
+      (p, slim, tiles, (x0, x1, y0, y1), bands.toArray)
     }
-
-  /** Greedy same-file pack of tile refs up to `maxSplit` bytes (open cost
-    * charged once per split, like Spark's file-granular charging). */
-  private def packTiles(
-      f: (String, TiffRaster, Seq[TiffTileRef], (Int, Int, Int, Int), Array[Int]),
-      maxSplit: Long, openCost: Long): Seq[TiffInputPartition] = {
-    val (p, slim, tiles, (x0, x1, y0, y1), bands) = f
-    val groups = Seq.newBuilder[Seq[TiffTileRef]]
-    var cur = List.newBuilder[TiffTileRef]
-    // the per-file open cost charges ONCE, into the file's first split
-    // (Spark's file-granular charging) — charging it into every split
-    // made each split start "full" and degenerate back to one tile each
-    var curBytes = openCost
-    var curEmpty = true
-    tiles.foreach { t =>
-      if (!curEmpty && curBytes + t.count > maxSplit) {
-        groups += cur.result()
-        cur = List.newBuilder[TiffTileRef]; curBytes = 0L; curEmpty = true
-      }
-      cur += t; curBytes += t.count; curEmpty = false
-    }
-    if (!curEmpty) groups += cur.result()
-    groups.result().map(g => TiffInputPartition(p, slim, g.toArray,
-      x0, x1, y0, y1, bands, required.fieldNames))
   }
 
   /** Surviving tiles packed into byte-budgeted partitions (SplitBudget —
     * Spark's maxSplitBytes formula at tile granularity): one partition per
     * tile made a million-tile COG archive a million tasks; consecutive
     * same-file tiles now share a task and one open stream. */
-  private lazy val survivors: Seq[TiffInputPartition] = {
-    val perFile = byFile.flatMap { case (p, r) => fileTiles(p, r) }
-    if (perFile.isEmpty) Seq.empty
-    else {
-      val openCost = graft.sources.SplitBudget.openCostInBytes
-      val totalBytes = perFile.map(f => f._3.map(_.count).sum + openCost).sum
-      val maxSplit = graft.sources.SplitBudget.maxSplitBytes(totalBytes)
-      perFile.flatMap(packTiles(_, maxSplit, openCost))
+  private def packed(perFile: Seq[(String, TiffRaster, Seq[TiffTileRef],
+      (Int, Int, Int, Int), Array[Int])]): Seq[TiffInputPartition] = {
+    val byPath = perFile.map(f => f._1 -> f).toMap
+    SplitBudget.pack(perFile.flatMap(f => f._3.map(f._1 -> _)))(_.count).map {
+      case (p, tiles) =>
+        val (_, slim, _, (x0, x1, y0, y1), bands) = byPath(p)
+        TiffInputPartition(p, slim, tiles.toArray, x0, x1, y0, y1, bands,
+          required.fieldNames)
     }
   }
+
+  private lazy val survivors: Seq[TiffInputPartition] =
+    packed(byFile.flatMap { case (p, r) => fileTiles(p, r) })
 
   override def description(): String =
     s"graft-geotiff tiles=${survivors.map(_.tiles.length).sum}/${byFile.map(_._2.tileOffsets.length).sum}, " +
@@ -412,8 +292,8 @@ final class TiffScan(
   override def createReaderFactory(): PartitionReaderFactory =
     new TiffReaderFactory(new SerializableHadoopConf(conf))
 
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val rows = survivors.map { p =>
+  override def estimateStatistics(): Statistics =
+    Pushdown.stats(survivors.map { p =>
       val r = p.raster
       p.tiles.map { t =>
         val w = math.min((t.tx + 1) * r.tileWidth - 1, p.x1) -
@@ -422,11 +302,7 @@ final class TiffScan(
           math.max(t.ty * r.tileHeight, p.y0) + 1
         math.max(0L, w.toLong) * math.max(0L, h.toLong) * p.bands.length
       }.sum
-    }.sum
-    private val rowBytes = required.fields.map(_.dataType.defaultSize.toLong).sum
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(rows * math.max(1L, rowBytes))
-    override def numRows(): OptionalLong = OptionalLong.of(rows)
-  }
+    }.sum, required)
 }
 
 /** One surviving tile's grid position + byte extent in its file. */

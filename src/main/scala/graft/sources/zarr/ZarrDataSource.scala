@@ -1,7 +1,5 @@
 package graft.sources.zarr
 
-import java.util.OptionalLong
-
 import org.apache.hadoop.conf.Configuration
 
 import org.apache.spark.sql.SparkSession
@@ -10,11 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sources.Pushdown
 import graft.sources.nc.{Axis, IndexAxis, NumAxis, SerializableHadoopConf, TimeAxis}
 import graft.sources.nc.NcFormat.parseTimeUnits
 import ZarrMeta._
@@ -77,8 +75,8 @@ object ZarrTable {
     val conf = spark.sparkContext.hadoopConfiguration
     val path = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("zarr scan needs a path"))
-    val splitBytes = Option(options.get("splitBytes")).map(_.toLong)
-      .getOrElse(128L * 1024 * 1024)
+    val splitBytes = graft.sources.LandingDir.bytesOption(options,
+      "splitBytes", 128L << 20)
     val store =
       if (kerchunk) ZarrMeta.resolveRefs(conf, path)
       else ZarrMeta.resolveDirectory(conf, path)
@@ -200,45 +198,12 @@ final class ZarrTable(
   override def schema(): StructType = ZarrTable.schemaOf(grid)
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrScanBuilder(this)
-}
-
-final class ZarrScanBuilder(table: ZarrTable) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private var required: StructType = table.schema()
-  private var pushed: Array[Filter] = Array.empty
-
   /** Monotonic axes admit an EXACT index-range rewrite (and the reader
-    * re-bounds cells to the box), so these filters are fully handled. */
-  private val prunable: Set[String] =
-    table.grid.axes.filter(_.monotonic).map(_.name).toSet
-  private val axisCols: Set[String] = table.grid.axes.map(_.name).toSet
-
-  private def handled(f: Filter): Boolean = f match {
-    case sources.IsNotNull(a) => axisCols(a)
-    case sources.EqualTo(a, v) => prunable(a) && comparable(v)
-    case sources.GreaterThan(a, v) => prunable(a) && comparable(v)
-    case sources.GreaterThanOrEqual(a, v) => prunable(a) && comparable(v)
-    case sources.LessThan(a, v) => prunable(a) && comparable(v)
-    case sources.LessThanOrEqual(a, v) => prunable(a) && comparable(v)
-    case _ => false
-  }
-  private def comparable(v: Any): Boolean =
-    graft.sources.nc.NcScan.toKey(v).isDefined
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (h, residual) = filters.partition(handled)
-    pushed = h
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan =
-    new ZarrScan(table.grid, required, pushed, table.splitBytes, table.conf)
+    * re-bounds cells to the box), so comparisons on them are claimed. */
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new Pushdown.Builder(schema(),
+      Pushdown.axisClaim(grid.axes.filter(_.monotonic).map(_.name).toSet))(
+      new ZarrScan(grid, _, _, splitBytes, conf))
 }
 
 final class ZarrScan(
@@ -254,34 +219,13 @@ final class ZarrScan(
 
   /** Pruned [lo, hi] cell box per dimension, or None when empty — the whole
     * store is skipped (file-level pruning analog, F6). */
-  private[zarr] def prunedBox: Option[Array[(Int, Int)]] = {
-    val init = grid.axes.map(a => (0, a.n - 1)).toArray
-    pushed.foreach {
-      case _: sources.IsNotNull => ()
-      case f =>
-        f.references.headOption.foreach { ref =>
-          val i = grid.axes.indexWhere(_.name == ref)
-          if (i >= 0) {
-            val (lo, hi) = graft.sources.nc.NcScan.axisRange(grid.axes(i), f)
-            init(i) = (math.max(init(i)._1, lo), math.min(init(i)._2, hi))
-          }
-        }
-    }
-    if (init.exists(r => r._1 > r._2)) None else Some(init)
-  }
+  private[zarr] lazy val prunedBox: Option[Array[(Int, Int)]] =
+    Pushdown.box(grid.axes, pushed)
 
-  override def description(): String = {
-    val box = prunedBox match {
-      case Some(b) => grid.axes.zip(b).map { case (a, (lo, hi)) => s"${a.name}[$lo..$hi]" }
-        .mkString(", ")
-      case None => "<store pruned>"
-    }
-    val chunks = planInputPartitions().map(_.asInstanceOf[ZarrInputPartition].chunks.length).sum
-    s"graft-zarr ${grid.source}, PushedFilters: [${pushed.mkString(", ")}], " +
-      s"box: [$box], chunksRead: $chunks, ReadSchema: ${required.simpleString}"
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = prunedBox match {
+  /** Planned once per scan: Spark builds `description()` for every
+    * action's SQL-execution event, and each plan resolves every chunk ref
+    * (a shard-index lookup on sharded arrays). */
+  private lazy val partitions: Array[InputPartition] = prunedBox match {
     case None => Array.empty
     case Some(box) =>
       val vars = grid.dataArrays.filter(a => required.fieldNames.contains(a.name))
@@ -310,18 +254,25 @@ final class ZarrScan(
       }.toArray
   }
 
+  override def description(): String = {
+    val box = prunedBox match {
+      case Some(b) => grid.axes.zip(b).map { case (a, (lo, hi)) => s"${a.name}[$lo..$hi]" }
+        .mkString(", ")
+      case None => "<store pruned>"
+    }
+    val chunks = partitions.map(_.asInstanceOf[ZarrInputPartition].chunks.length).sum
+    s"graft-zarr ${grid.source}, PushedFilters: [${pushed.mkString(", ")}], " +
+      s"box: [$box], chunksRead: $chunks, ReadSchema: ${required.simpleString}"
+  }
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
   override def createReaderFactory(): PartitionReaderFactory =
     new ZarrReaderFactory(new SerializableHadoopConf(conf))
 
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val rows: Long = prunedBox match {
-      case Some(b) => b.map { case (lo, hi) => (hi - lo + 1).toLong }.product
-      case None => 0L
-    }
-    private val rowBytes: Long = required.fields.map(_.dataType.defaultSize.toLong).sum
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(rows * math.max(1L, rowBytes))
-    override def numRows(): OptionalLong = OptionalLong.of(rows)
-  }
+  override def estimateStatistics(): Statistics =
+    Pushdown.stats(prunedBox.map(_.map { case (lo, hi) => (hi - lo + 1).toLong }
+      .product).getOrElse(0L), required)
 }
 
 sealed trait ZColSpec extends Serializable

@@ -49,6 +49,19 @@ class LandingDirSpec extends SparkSpec {
       assert(e.getMessage.contains("maxFilesPerTrigger") &&
         e.getMessage.contains(bad), s"$name/$bad: ${e.getMessage}")
     }
+    // the byte-size options share the parse: refused by name as well
+    for {
+      (name, option) <- Seq("netcdf" -> "splitBytes", "zarr" -> "splitBytes",
+        "kerchunk" -> "splitBytes", "zip" -> "maxSplitBytes",
+        "warc" -> "maxSplitBytes", "warc" -> "maxMemberBytes",
+        "webdataset" -> "maxSplitBytes", "webdataset" -> "maxMemberBytes")
+      bad <- Seq("0", "-1", "abc")
+    } {
+      val e = intercept[IllegalArgumentException](
+        spark.read.format(name).option(option, bad).load(dir))
+      assert(e.getMessage.contains(option) && e.getMessage.contains(bad),
+        s"$name/$option/$bad: ${e.getMessage}")
+    }
   }
 
   test("checkpoint replay re-derives exactly the files in (lo, hi] in " +
