@@ -134,11 +134,6 @@ object Manifest {
     }.reduce(_ unionByName _)
   }
 
-  /** S13 — open a single raw file for QC comparison (publish.py:1097-1175);
-    * the caller composes Normalize.normalize on top. */
-  def openRaw(spark: SparkSession, path: String): DataFrame =
-    openInput(spark, path)
-
   /** P4 — move original input files into `<dir>_originals/` after a
     * conversion pass (transform.py:521-537). Hadoop FS rename, so file://
     * and object stores behave alike. Returns the new paths. */

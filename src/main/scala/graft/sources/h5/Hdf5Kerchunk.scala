@@ -185,133 +185,30 @@ object Hdf5Kerchunk {
 
   /** Multi-file combine along the leading (time) dimension — the
     * `MultiZarrToZarr` analog (transform.py:84-117) for netCDF-4 inputs:
-    * the leading COORDINATE is concatenated and inlined (coords are tiny),
-    * data-variable chunk keys renumber by the running chunk offset, and
-    * non-leading dims must be identical (S10). Requires every non-final
-    * file's leading extent to be chunk-aligned (per-timestep chunking, the
-    * netCDF-4 norm, always is). */
-  def combineHdf5(conf: Configuration, paths: Seq[String],
-      group: Option[String] = None): JObj = {
+    * every data variable must lead with one dimension, and the files'
+    * stores concatenate along it (`Kerchunk.concat`: chunk keys renumber
+    * by the running chunk offset, the leading coordinate is concatenated,
+    * non-leading dims and coordinate values must be identical, S10).
+    * Requires every non-final file's leading extent to be chunk-aligned
+    * (per-timestep chunking, the netCDF-4 norm, always is). */
+  def combinedStore(conf: Configuration, paths: Seq[String],
+      group: Option[String] = None): ZarrMeta.ResolvedStore = {
     require(paths.nonEmpty, "combine needs at least one file")
-    if (paths.length == 1) return fromHdf5(conf, paths.head, group)
-    val manifests = paths.map(p => p -> fromHdf5(conf, p, group))
-    def refsOf(m: JObj): JObj = m.get("refs").get.asInstanceOf[JObj]
-    def zarrayOf(refs: JObj, name: String): JObj =
-      JValue.parse(refs.get(s"$name/.zarray").get.asInstanceOf[JStr].s)
-        .asInstanceOf[JObj]
-    def shapeOf(z: JObj): Seq[Int] =
-      z.get("shape").get.asInstanceOf[JArr].items.map(_.asInstanceOf[JNum].n.toInt)
-    def chunksOf(z: JObj): Seq[Int] =
-      z.get("chunks").get.asInstanceOf[JArr].items.map(_.asInstanceOf[JNum].n.toInt)
-    def dimsOf(refs: JObj, name: String): Seq[String] =
-      JValue.parse(refs.get(s"$name/.zattrs").get.asInstanceOf[JStr].s)
-        .asInstanceOf[JObj].get("_ARRAY_DIMENSIONS").get.asInstanceOf[JArr]
-        .items.collect { case JStr(s) => s }
-
-    val firstRefs = refsOf(manifests.head._2)
-    val arrayNames = firstRefs.fields.collect {
-      case (k, _) if k.endsWith("/.zarray") => k.stripSuffix("/.zarray")
-    }
-    val dataVars = arrayNames.filter(n => dimsOf(firstRefs, n) != Seq(n))
+    val stores = paths.map(p => p -> ZarrMeta.resolveRefsDoc(fromHdf5(conf, p, group)))
+    if (paths.length == 1) return stores.head._2
+    val dataVars = stores.head._2.arrays.filterNot(a => a.meta.dimNames.contains(Seq(a.name)))
     require(dataVars.nonEmpty, s"${paths.head}: no data variables to combine")
-    val leadDim = dimsOf(firstRefs, dataVars.head).headOption.getOrElse(
+    def leading(a: ZarrMeta.ResolvedArray) = a.meta.dimNames.flatMap(_.headOption)
+    val leadDim = leading(dataVars.head).getOrElse(
       throw new IllegalArgumentException("scalar variables cannot combine"))
-    dataVars.foreach { v =>
-      require(dimsOf(firstRefs, v).headOption.contains(leadDim),
-        s"$v leads with ${dimsOf(firstRefs, v).headOption}, expected $leadDim")
-    }
-
-    // per-file leading extents + alignment
-    val extents = manifests.map { case (p, m) =>
-      val z = zarrayOf(refsOf(m), dataVars.head)
-      (p, shapeOf(z).head, chunksOf(z).head)
-    }
-    val leadChunk = extents.head._3
-    extents.dropRight(1).foreach { case (p, n, c) =>
-      require(c == leadChunk && n % leadChunk == 0,
-        s"$p: leading extent $n not aligned to chunk $leadChunk — cannot combine")
-    }
-    require(extents.last._3 == leadChunk, s"${extents.last._1}: chunk mismatch")
-    val totalLead = extents.map(_._2).sum
-
-    // concatenated leading coordinate, inlined (read each file's values)
-    val leadCoordEntry: Seq[(String, JValue)] =
-      if (!arrayNames.contains(leadDim)) Seq.empty
-      else {
-        val all = manifests.flatMap { case (p, m) =>
-          val store = ZarrMeta.resolveRefsDoc(m)
-          val arr = store.arrays.find(_.name == leadDim).getOrElse(
-            throw new IllegalStateException(s"$p: no $leadDim array"))
-          readAll(conf, arr)
-        }
-        val z0 = zarrayOf(firstRefs, leadDim)
-        val dt = ZarrMeta.parseDtype(
-          z0.get("dtype").get.asInstanceOf[JStr].s)
-        val buf = new Array[Byte](all.length * dt.size)
-        all.zipWithIndex.foreach { case (v, i) => dt.encodeDouble(buf, i, v) }
-        val z = z0
-          .updated("shape", JArr(Seq(JNum(all.length))))
-          .updated("chunks", JArr(Seq(JNum(all.length))))
-          .updated("compressor", JNull).updated("filters", JNull)
-        Seq(
-          s"$leadDim/.zarray" -> (JStr(z.render): JValue),
-          s"$leadDim/0" -> (JStr("base64:" +
-            java.util.Base64.getEncoder.encodeToString(buf)): JValue))
-      }
-
-    val out = scala.collection.mutable.LinkedHashMap.empty[String, JValue]
-    var chunkOffset = 0
-    manifests.zipWithIndex.foreach { case ((path, m), fileIdx) =>
-      val refs = refsOf(m)
-      refs.fields.foreach { case (key, value) =>
-        val varName = key.takeWhile(_ != '/')
-        val rest = key.stripPrefix(s"$varName/")
-        if (key == ".zgroup" || key == ".zattrs") {
-          if (fileIdx == 0) out(key) = value
-        } else if (rest.startsWith(".")) {
-          if (fileIdx == 0) {
-            if (rest == ".zarray" && dataVars.contains(varName)) {
-              val z = zarrayOf(refs, varName)
-              out(key) = JStr(z.updated("shape",
-                JArr((totalLead +: shapeOf(z).tail).map(s => JNum(s)))).render)
-            } else out(key) = value
-          } else if (dataVars.contains(varName) && rest == ".zarray") {
-            // identical-dims assertion across files
-            val z = zarrayOf(refs, varName)
-            val z0 = zarrayOf(firstRefs, varName)
-            require(shapeOf(z).tail == shapeOf(z0).tail &&
-              chunksOf(z) == chunksOf(z0),
-              s"$path: $varName grid differs from ${paths.head} (identical-dims)")
-          }
-        } else if (dataVars.contains(varName)) {
-          val coords = rest.split('.')
-          out(s"$varName/${((coords.head.toInt + chunkOffset).toString +: coords.tail).mkString(".")}") = value
-        } else if (fileIdx == 0 && varName != leadDim) {
-          out(key) = value // non-leading coords from the first file
-        }
-      }
-      chunkOffset += extents(fileIdx)._2 / leadChunk
-    }
-    leadCoordEntry.foreach { case (k, v) => out(k) = v }
-    JObj(Seq("version" -> JNum(1), "refs" -> JObj(out.toSeq)))
+    dataVars.foreach(v => require(leading(v).contains(leadDim),
+      s"${v.name} leads with ${leading(v)}, expected $leadDim"))
+    graft.sources.zarr.Kerchunk.concat(conf, stores, leadDim)
   }
 
-  private def readAll(conf: Configuration,
-      arr: ZarrMeta.ResolvedArray): Array[Double] = {
-    val n = arr.meta.shape.head
-    val chunk = arr.meta.chunks.head
-    val out = new Array[Double](n)
-    var c = 0
-    while (c * chunk < n) {
-      val buf = ZarrMeta.readChunk(conf, arr.meta, arr.chunkRef(Seq(c))).getOrElse(
-        throw new IllegalStateException(s"${arr.name}: missing coordinate chunk $c"))
-      var i = 0
-      while (i < chunk && c * chunk + i < n) {
-        out(c * chunk + i) = arr.meta.dtype.decodeDouble(buf, i)
-        i += 1
-      }
-      c += 1
-    }
-    out
-  }
+  /** [[combinedStore]] as a kerchunk manifest. */
+  def combineHdf5(conf: Configuration, paths: Seq[String],
+      group: Option[String] = None): JObj =
+    if (paths.length == 1) fromHdf5(conf, paths.head, group)
+    else graft.sources.zarr.Kerchunk.render(combinedStore(conf, paths, group))
 }

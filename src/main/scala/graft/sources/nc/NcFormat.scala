@@ -64,14 +64,6 @@ object NcFormat {
       begin: Long) {
     def attr(n: String): Option[String] = attrs.get(n).map(_.asText)
     def numAttr(n: String): Option[Double] = attrs.get(n).flatMap(_.asNum)
-
-    /** CF packed-data decode parameters (mask_and_scale — the reference gets
-      * this from xarray's decode_cf; here read straight from the attrs).
-      * `unpack` is attr PRESENCE, not value: an explicit `scale_factor: 1.0`
-      * still means "unpacked values are floating point" per CF §8.1. */
-    def scaleFactor: Double = numAttr("scale_factor").getOrElse(1.0)
-    def addOffset: Double = numAttr("add_offset").getOrElse(0.0)
-    def unpack: Boolean = attrs.contains("scale_factor") || attrs.contains("add_offset")
     /** `_FillValue` wins over `missing_value` when both are present (CF §2.5.1). */
     def fillValue: Option[Double] = numAttr("_FillValue").orElse(numAttr("missing_value"))
   }
@@ -568,82 +560,12 @@ object NcFormat {
   }
 
   /** CF-style time units: "<unit> since <epoch>" → (micros multiplier,
-    * epoch micros). Public CF convention, e.g. "hours since 2024-01-01". */
-  def parseTimeUnits(units: String): Option[(Long, Long)] = {
-    val m = "(?i)(microsecond|millisecond|second|minute|hour|day)s?\\s+since\\s+(.+)".r
-    units.trim match {
-      case m(unit, epochStr) =>
-        val mult = unit.toLowerCase match {
-          case "microsecond" => 1L
-          case "millisecond" => 1000L
-          case "second" => 1000000L
-          case "minute" => 60L * 1000000L
-          case "hour" => 3600L * 1000000L
-          case "day" => 86400L * 1000000L
-        }
-        // real-world CF epochs are often NOT zero-padded ("days since
-        // 1980-1-1 0:0:0", CHIRPS) — parse digit groups, not ISO strings
-        val dt = ("(\\d{1,4})-(\\d{1,2})-(\\d{1,2})" +
-          "(?:[T ](\\d{1,2}):(\\d{1,2})(?::(\\d{1,2})(?:\\.\\d+)?)?)?" +
-          "(?:\\s*(?:Z|UTC|\\+0+:?0*))?").r
-        epochStr.trim match {
-          case dt(y, mo, d, h, mi, sec) =>
-            try {
-              val ldt = java.time.LocalDateTime.of(y.toInt, mo.toInt, d.toInt,
-                Option(h).map(_.toInt).getOrElse(0),
-                Option(mi).map(_.toInt).getOrElse(0),
-                Option(sec).map(_.toInt).getOrElse(0))
-              Some((mult, ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L))
-            } catch { case _: java.time.DateTimeException => None }
-          case _ => None
-        }
-      case _ => None
+    * epoch micros) in the Gregorian calendar. Public CF convention, e.g.
+    * "hours since 2024-01-01". */
+  def parseTimeUnits(units: String): Option[(Long, Long)] =
+    parseTimeUnitParts(units).flatMap { case (mult, y, mo, d, intraMicros) =>
+      try Some((mult, java.time.LocalDateTime.of(y, mo, d, 0, 0)
+        .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + intraMicros))
+      catch { case _: java.time.DateTimeException => None }
     }
-  }
-
-  /** Read and decode a whole 1-D variable (coordinate axes are small —
-    * driver-side planning reads them once per file). */
-  def readCoordValues(
-      in: org.apache.hadoop.fs.FSDataInputStream,
-      header: NcHeader,
-      v: NcVar): Array[Double] = {
-    require(v.dimIds.length == 1, s"${v.name} is not 1-D")
-    val isRec = header.isRecordVar(v)
-    val n = header.dims(v.dimIds.head).length
-    val ts = typeSize(v.ncType)
-    val out = new Array[Double](n)
-    if (isRec) {
-      // one value per record, strided by recSize
-      val buf = new Array[Byte](ts)
-      var r = 0
-      while (r < n) {
-        in.readFully(v.begin + r * header.recSize, buf)
-        out(r) = decodeOne(buf, 0, v.ncType)
-        r += 1
-      }
-    } else {
-      val buf = new Array[Byte](n * ts)
-      in.readFully(v.begin, buf)
-      var i = 0
-      while (i < n) { out(i) = decodeOne(buf, i * ts, v.ncType); i += 1 }
-    }
-    out
-  }
-
-  def decodeOne(buf: Array[Byte], off: Int, ncType: Int): Double = {
-    val bb = java.nio.ByteBuffer.wrap(buf)
-    ncType match {
-      case NcByte => buf(off).toDouble
-      case NcUByte => (buf(off) & 0xFF).toDouble
-      case NcShort => bb.getShort(off).toDouble
-      case NcUShort => (bb.getShort(off) & 0xFFFF).toDouble
-      case NcInt => bb.getInt(off).toDouble
-      case NcUInt => (bb.getInt(off).toLong & 0xFFFFFFFFL).toDouble
-      case NcFloat => bb.getFloat(off).toDouble
-      case NcDouble => bb.getDouble(off)
-      // fill/unpack comparisons run in double space — exact inside ±2^53
-      case NcInt64 => bb.getLong(off).toDouble
-      case NcChar => (buf(off) & 0xFF).toDouble
-    }
-  }
 }

@@ -6,24 +6,29 @@ import org.apache.hadoop.fs.{Path => HPath}
 import graft.meta.{JArr, JNum, JObj, JStr, JValue}
 import graft.sources.nc.NcFormat
 import graft.sources.nc.NcFormat.{NcHeader, NcVar}
+import ZarrMeta._
 
-/** Kerchunk reference-manifest generation: index a classic NetCDF file's
-  * byte layout as zarr chunk references WITHOUT copying any data — the
+/** Classic NetCDF as a zarr store, indexed WITHOUT copying any data — the
   * reference's `kerchunkify` (transform.py:119-279) and multi-file
   * `MultiZarrToZarr` combine (transform.py:84-117), which together form its
-  * entire scan substrate. The manifest feeds the `kerchunk` DSv2 scan,
-  * whose chunk pruning then turns predicates into byte-range skips over the
-  * ORIGINAL archive file (S7/S11's real form).
+  * entire scan substrate. [[classicStore]] is the one translation of a
+  * classic header into zarr arrays: `format("netcdf")` scans it directly,
+  * and the manifest writers here render it for the `kerchunk` scan.
   *
-  * Layout mapping (the same one kerchunk's netCDF3 backend uses):
-  *  - a FIXED variable is one chunk covering its whole extent at `begin`;
+  * Layout mapping (kerchunk's netCDF3 backend, with fixed variables
+  * chunked like record ones):
   *  - a RECORD variable is one chunk per record — shape (1, inner...) at
   *    `begin + r * recSize` (records interleave all record variables, so
   *    per-record slabs are the only contiguous runs);
+  *  - a FIXED data variable is one chunk per outer row — shape
+  *    (1, inner...) at `begin + r * rowBytes` — so a fixed-only file fans
+  *    out along its outer dim exactly as a record file does;
+  *  - a fixed coordinate variable is one chunk;
   *  - NC attrs pass through to `.zattrs` verbatim (scale/offset/_FillValue
   *    keep CF mask_and_scale semantics at scan time, like the reference's
   *    decode_cf view);
-  *  - NC is big-endian, so dtypes render as `>i4` / `>f8` etc.
+  *  - NC is big-endian, so dtypes render as `>i4` / `>f8` etc.; CDF-5's
+  *    unsigned and 64-bit types map to `|u1`, `>u2`, `>u4`, `>i8`.
   */
 object Kerchunk {
 
@@ -33,7 +38,14 @@ object Kerchunk {
     case NcFormat.NcInt => ">i4"
     case NcFormat.NcFloat => ">f4"
     case NcFormat.NcDouble => ">f8"
-    case other => throw new IllegalArgumentException(s"nc_type $other not mappable")
+    case NcFormat.NcUByte => "|u1"
+    case NcFormat.NcUShort => ">u2"
+    case NcFormat.NcUInt => ">u4"
+    case NcFormat.NcInt64 => ">i8"
+    case NcFormat.NcUInt64 => throw new IllegalArgumentException(
+      "NC_UINT64 (nc_type 11) unsupported: no lossless Spark integral type")
+    case other => throw new IllegalArgumentException(
+      s"nc_type $other has no scan column mapping (NC_CHAR vars unsupported)")
   }
 
   private def attrsJson(v: NcVar, dimNames: Seq[String]): JObj = {
@@ -52,73 +64,138 @@ object Kerchunk {
     JObj(base ++ passed)
   }
 
-  /** Build the refs entries for one NetCDF file. Exposed for combine. */
-  private def fileEntries(conf: Configuration, path: String): (NcHeader, Seq[(String, JValue)]) = {
-    val p = new HPath(path)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    val header = try NcFormat.parseHeader(in) finally in.close()
-    val entries = header.vars.flatMap { v =>
+  /** One classic file's header as an in-memory zarr store whose chunks
+    * are byte ranges of the file, computed from (begin, stride, length). */
+  def classicStore(path: String, header: NcHeader): ResolvedStore = {
+    val arrays = header.vars.map { v =>
+      require(v.dimIds.nonEmpty, s"$path: scalar variable ${v.name} is not a grid")
       val dimNames = v.dimIds.map(header.dims(_).name)
       val shape = v.dimIds.map(header.dims(_).length)
-      val isRec = header.isRecordVar(v)
-      val chunks = if (isRec) 1 +: shape.drop(1) else shape
-      val zarray = JObj(Seq(
-        "chunks" -> JArr(chunks.map(c => JNum(c))),
-        "compressor" -> graft.meta.JNull,
-        "dtype" -> JStr(zdtype(v.ncType)),
-        "fill_value" -> v.fillValue.map(f => JNum(f): JValue).getOrElse(graft.meta.JNull),
-        "filters" -> graft.meta.JNull,
-        "order" -> JStr("C"),
-        "shape" -> JArr(shape.map(s => JNum(s))),
-        "zarr_format" -> JNum(2)))
-      val metaEntries = Seq[(String, JValue)](
-        s"${v.name}/.zarray" -> JStr(zarray.render),
-        s"${v.name}/.zattrs" -> JStr(attrsJson(v, dimNames).render))
-      val chunkEntries: Seq[(String, JValue)] =
-        if (isRec) {
-          val perRec = header.perRecordSize(v)
-          val nRec = header.dims(header.recDimId).length
-          val innerZeros = Seq.fill(shape.length - 1)("0")
-          (0 until nRec).map { r =>
-            val key = (r.toString +: innerZeros).mkString(".")
-            s"${v.name}/$key" -> (JArr(Seq(JStr(path),
-              JNum(v.begin + r * header.recSize), JNum(perRec))): JValue)
-          }
-        } else {
-          val key = Seq.fill(shape.length)("0").mkString(".")
-          Seq(s"${v.name}/$key" -> (JArr(Seq(JStr(path), JNum(v.begin),
-            JNum(header.fixedSize(v)))): JValue))
-        }
-      metaEntries ++ chunkEntries
+      val isCoord = v.dimIds.length == 1 && dimNames.head == v.name
+      val rowBytes = header.perRecordSize(v)
+      val (chunks, stride, length) =
+        if (header.isRecordVar(v)) (1 +: shape.drop(1), header.recSize, rowBytes)
+        else if (isCoord) (shape, 0L, header.fixedSize(v))
+        else (1 +: shape.drop(1), rowBytes, rowBytes)
+      val meta = ZArrayMeta(shape, chunks, parseDtype(zdtype(v.ncType)),
+        ZarrCodec.NullCodec, v.fillValue, ".", attrsJson(v, dimNames))
+      ResolvedArray(v.name, meta, StridedChunks(path, v.begin, stride, length))
     }
-    val rootAttrs = JObj(header.gattrs.toSeq.sortBy(_._1).map { case (k, a) =>
+    ResolvedStore(JObj(header.gattrs.toSeq.sortBy(_._1).map { case (k, a) =>
       k -> (JStr(a.asText): JValue)
-    })
-    (header, Seq[(String, JValue)](
+    }), arrays)
+  }
+
+  /** Parse one classic file's header and translate it. */
+  def classicStore(conf: Configuration, path: String): (NcHeader, ResolvedStore) = {
+    val p = new HPath(path)
+    val in = p.getFileSystem(conf).open(p)
+    val header = try NcFormat.parseHeader(in) finally in.close()
+    (header, classicStore(path, header))
+  }
+
+  /** Every chunk coordinate of a chunk grid, row-major. */
+  private def chunkCoords(grid: Seq[Int]): Seq[Seq[Int]] =
+    grid.foldLeft(Seq(Seq.empty[Int])) { (acc, n) =>
+      acc.flatMap(prefix => (0 until n).map(prefix :+ _))
+    }
+
+  /** A store rendered as a kerchunk manifest: metadata documents inline,
+    * every chunk an `[url, offset, length]`, `[url]` or inline base64
+    * reference. */
+  private[sources] def render(store: ResolvedStore): JObj = {
+    val entries = store.arrays.flatMap { a =>
+      Seq[(String, JValue)](
+        s"${a.name}/.zarray" -> JStr(a.meta.render),
+        s"${a.name}/.zattrs" -> JStr(a.meta.attrs.render)) ++
+        chunkCoords(a.meta.gridShape).flatMap(c => a.chunkRef(c).map { ref =>
+          val value: JValue = ref match {
+            case RangeChunk(url, off, len) => JArr(Seq(JStr(url), JNum(off), JNum(len)))
+            case FileChunk(url) => JArr(Seq(JStr(url)))
+            case InlineChunk(b) =>
+              JStr("base64:" + java.util.Base64.getEncoder.encodeToString(b))
+          }
+          s"${a.name}/${a.meta.chunkKey(c)}" -> value
+        })
+    }
+    JObj(Seq("version" -> JNum(1), "refs" -> JObj(Seq[(String, JValue)](
       ".zgroup" -> JStr(JObj(Seq("zarr_format" -> JNum(2))).render),
-      ".zattrs" -> JStr(rootAttrs.render)) ++ entries)
+      ".zattrs" -> JStr(store.attrs.render)) ++ entries)))
+  }
+
+  /** Several files' stores as one, concatenated along `leadDim` — the
+    * `MultiZarrToZarr` combine (transform.py:84-117) of both the classic
+    * and the netCDF-4 route. An array leading with `leadDim` gathers every
+    * file's chunks, keys renumbered by the running chunk offset (every
+    * non-final file's extent must be chunk-aligned); a leading coordinate
+    * that is not aligned is concatenated and inlined (coordinates are
+    * tiny). Every other array comes from the first file, so a coordinate
+    * among them must hold the same values in every file (the
+    * identical-dims rule). */
+  private[sources] def concat(conf: Configuration,
+      files: Seq[(String, ResolvedStore)], leadDim: String): ResolvedStore = {
+    val (first, store0) = files.head
+    val arrays = store0.arrays.map { a =>
+      val parts = files.map { case (p, s) => p -> s.arrays.find(_.name == a.name)
+        .getOrElse(throw new IllegalArgumentException(
+          s"$p: ${a.name} is missing (identical-dims)")) }
+      val isCoord = a.meta.dimNames.contains(Seq(a.name))
+      if (!a.meta.dimNames.exists(_.headOption.contains(leadDim))) {
+        if (isCoord) {
+          val values = a.readCoordinate(conf)
+          parts.tail.foreach { case (p, b) =>
+            require(java.util.Arrays.equals(b.readCoordinate(conf), values),
+              s"$p: coordinate ${a.name} values differ from $first (identical-dims)")
+          }
+        }
+        a
+      } else {
+        parts.foreach { case (p, b) => require(b.meta.shape.tail == a.meta.shape.tail,
+          s"$p: ${a.name} grid differs from $first (identical-dims)") }
+        val extents = parts.map(_._2.meta.shape.head)
+        val chunk = a.meta.chunks.head
+        val misaligned = parts.zipWithIndex.collectFirst {
+          case ((p, b), i) if b.meta.chunks != a.meta.chunks ||
+              (i < parts.length - 1 && extents(i) % chunk != 0) => p -> extents(i)
+        }
+        misaligned match {
+          case None =>
+            val offsets = extents.scanLeft(0)(_ + _).map(_ / chunk)
+            val refs = parts.zip(offsets).flatMap { case ((_, b), off) =>
+              chunkCoords(b.meta.gridShape).flatMap(c => b.chunkRef(conf, c)
+                .map(a.meta.chunkKey((c.head + off) +: c.tail) -> _))
+            }
+            ResolvedArray(a.name, a.meta.copy(shape = extents.sum +: a.meta.shape.tail),
+              RefChunks(refs.toMap))
+          case Some((p, n)) =>
+            require(isCoord, s"$p: ${a.name} leading extent $n not aligned to " +
+              s"chunk $chunk — cannot combine")
+            val values = parts.flatMap(_._2.readCoordinate(conf))
+            val buf = new Array[Byte](values.length * a.meta.dtype.size)
+            values.indices.foreach(i => a.meta.dtype.encodeDouble(buf, i, values(i)))
+            ResolvedArray(a.name, a.meta.copy(shape = Seq(values.length),
+              chunks = Seq(values.length), codec = ZarrCodec.NullCodec,
+              filters = Seq.empty), RefChunks(Map(a.meta.chunkKey(Seq(0)) -> InlineChunk(buf))))
+        }
+      }
+    }
+    ResolvedStore(store0.attrs, arrays)
   }
 
   /** Kerchunk manifest for ONE NetCDF file. */
-  def fromNetcdf(conf: Configuration, path: String): JObj = {
-    val (_, entries) = fileEntries(conf, path)
-    JObj(Seq("version" -> JNum(1), "refs" -> JObj(entries)))
-  }
+  def fromNetcdf(conf: Configuration, path: String): JObj =
+    render(classicStore(conf, path)._2)
 
-  /** Multi-file combine along the record dimension — `MultiZarrToZarr`
-    * (transform.py:84-117): shapes add along the record axis, record-var
-    * chunk keys renumber with the running offset, and every file must
-    * present identical non-record dims (S10's identical-dims assertion).
-    * Files are combined in the given order (the caller natural-sorts, the
-    * manifest convention). */
+  /** Multi-file combine along the record dimension: every file must
+    * present identical non-record dims (S10's identical-dims assertion),
+    * then [[concat]]. Files are combined in the given order (the caller
+    * natural-sorts, the manifest convention). */
   def combineNetcdf(conf: Configuration, paths: Seq[String]): JObj = {
     require(paths.nonEmpty, "combine needs at least one file")
-    val parsed = paths.map(p => (p, fileEntries(conf, p)))
-    val (_, (firstHeader, firstEntries)) = parsed.head
+    val parsed = paths.map(p => (p, classicStore(conf, p)))
+    val firstHeader = parsed.head._2._1
     val recDim = firstHeader.recDimId
     require(recDim >= 0, s"${paths.head} has no record dimension to combine along")
-    val recName = firstHeader.dims(recDim).name
     parsed.tail.foreach { case (p, (h, _)) =>
       require(h.dims.map(d => (d.name, d.isRecord)) ==
         firstHeader.dims.map(d => (d.name, d.isRecord)),
@@ -128,46 +205,8 @@ object Kerchunk {
           s"$p: fixed dim ${d.name} length ${d.length} != ${f.length} (identical-dims)")
       }
     }
-    val totalRecs = parsed.map(_._2._1.dims(recDim).length).sum
-
-    // start from the first file's entries; fixed vars and metadata come
-    // from it, record-var chunk keys from every file with offsets
-    var recOffset = 0
-    val out = scala.collection.mutable.LinkedHashMap.empty[String, JValue]
-    parsed.zipWithIndex.foreach { case ((path, (header, entries)), fileIdx) =>
-      val recVars = header.vars.filter(header.isRecordVar).map(_.name).toSet
-      entries.foreach { case (key, value) =>
-        val varName = key.takeWhile(_ != '/')
-        val rest = key.stripPrefix(s"$varName/")
-        if (key == ".zgroup" || key == ".zattrs") {
-          if (fileIdx == 0) out(key) = value
-        } else if (rest.startsWith(".")) {
-          // metadata: first file wins, but record-var shapes must total
-          if (fileIdx == 0) {
-            if (rest == ".zarray" && recVars(varName)) {
-              val doc = JValue.parse(value.asInstanceOf[JStr].s).asInstanceOf[JObj]
-              val shape = doc.get("shape").get.asInstanceOf[JArr].items
-                .map(_.asInstanceOf[JNum].n.toInt)
-              val newShape = totalRecs +: shape.drop(1)
-              out(key) = JStr(doc.updated("shape",
-                JArr(newShape.map(s => JNum(s)))).render)
-            } else out(key) = value
-          }
-        } else if (recVars(varName)) {
-          // renumber the record (leading) chunk index
-          val coords = rest.split('.')
-          val renumbered = ((coords.head.toInt + recOffset).toString +: coords.tail)
-            .mkString(".")
-          out(s"$varName/$renumbered") = value
-        } else if (fileIdx == 0) {
-          out(key) = value // fixed-var chunks from the first file
-        }
-      }
-      recOffset += header.dims(recDim).length
-    }
-    require(out.contains(s"$recName/.zarray") || firstHeader.vars.forall(_.name != recName),
-      s"combine: record coordinate $recName lost")
-    JObj(Seq("version" -> JNum(1), "refs" -> JObj(out.toSeq)))
+    render(concat(conf, parsed.map { case (p, (_, store)) => p -> store },
+      firstHeader.dims(recDim).name))
   }
 
   /** Write a manifest where the scan expects it. */

@@ -13,8 +13,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.Pushdown
-import graft.sources.nc.{Axis, IndexAxis, NumAxis, SerializableHadoopConf, TimeAxis}
-import graft.sources.nc.NcFormat.parseTimeUnits
+import graft.sources.nc.{NcFormat, SerializableHadoopConf}
 import ZarrMeta._
 
 /** DataSource V2 batch reader for Zarr v2 stores — the reference's NATIVE
@@ -61,6 +60,44 @@ class KerchunkDataSource extends TableProvider with DataSourceRegister {
     ZarrTable.resolve(new CaseInsensitiveStringMap(properties), kerchunk = true)
 }
 
+/** One grid axis of the scan, with its materialized (small, driver-read)
+  * coordinate values shipped to executors inside each partition. */
+sealed trait Axis extends Pushdown.KeyedAxis with Serializable {
+  def sparkType: DataType
+  /** Catalyst-internal value at index i. */
+  def emit(i: Int): Any
+}
+
+final case class TimeAxis(name: String, micros: Array[Long]) extends Axis {
+  def n: Int = micros.length
+  def sparkType: DataType = TimestampNTZType
+  def emit(i: Int): Any = micros(i)
+  def key(i: Int): Double = micros(i).toDouble
+}
+
+/** A numeric coordinate, surfaced in its own (or, packed, DOUBLE) type. */
+final case class NumAxis(name: String, vals: Array[Double], sparkType: DataType)
+    extends Axis {
+  def n: Int = vals.length
+  def emit(i: Int): Any = sparkType match {
+    case ByteType => vals(i).toByte
+    case ShortType => vals(i).toShort
+    case IntegerType => vals(i).toInt
+    case LongType => vals(i).toLong
+    case FloatType => vals(i).toFloat
+    case BooleanType => vals(i) != 0
+    case _ => vals(i)
+  }
+  def key(i: Int): Double = vals(i)
+}
+
+/** Dimension without a coordinate variable: a 0-based long index. */
+final case class IndexAxis(name: String, n: Int) extends Axis {
+  def sparkType: DataType = LongType
+  def emit(i: Int): Any = i.toLong
+  def key(i: Int): Double = i.toDouble
+}
+
 /** Planned grid: dimension axes + the data arrays sharing them. */
 final case class ZarrGrid(
     source: String,
@@ -89,11 +126,13 @@ object ZarrTable {
       splitBytes: Long): ZarrTable =
     new ZarrTable(planGrid(conf, label, store), splitBytes, conf)
 
-  /** Coordinate arrays are 1-D arrays labeled with their own name
-    * (xarray's `_ARRAY_DIMENSIONS` convention); everything else is data.
+  /** The one axis decode of every gridded scan (zarr, kerchunk, netCDF-4
+    * and classic NetCDF): coordinate arrays are 1-D arrays labeled with
+    * their own name (xarray's `_ARRAY_DIMENSIONS` convention); everything
+    * else is data.
     * All data arrays must share one dimension list AND one chunk grid —
     * the reference's datasets satisfy both (one `to_zarr` writes them). */
-  private[zarr] def planGrid(conf: Configuration, path: String,
+  def planGrid(conf: Configuration, path: String,
       store: ResolvedStore): ZarrGrid = {
     def isCoord(a: ResolvedArray) =
       a.meta.ndim == 1 && a.meta.dimNames.contains(Seq(a.name))
@@ -119,7 +158,8 @@ object ZarrTable {
         case Some(c) =>
           require(c.meta.shape == Seq(n),
             s"$path: coordinate $dim has shape ${c.meta.shape}, grid needs [$n]")
-          val raw = readCoordDoubles(conf, c)
+          val raw = c.readCoordinate(conf)
+          // A coordinate axis with missing values has no index semantics.
           c.meta.effectiveFill.foreach { f =>
             require(!raw.exists(v => fillMatches(v, f, c.meta.dtype)),
               s"$path: coordinate $dim contains its fill value $f")
@@ -127,49 +167,20 @@ object ZarrTable {
           val vals =
             if (c.meta.unpack) raw.map(v => v * c.meta.scaleFactor + c.meta.addOffset)
             else raw
-          // CF calendar-aware decode (incl. noleap/all_leap/360_day);
-          // see NcFormat.decodeTimeAxis
-          graft.sources.nc.NcFormat.decodeTimeAxis(c.meta.attr("units"),
-              c.meta.attr("calendar"), vals) match {
-            case Some(micros) =>
-              TimeAxis(dim, micros)
-            case _ =>
-              val numType = c.meta.dtype.sparkType match {
-                case _ if c.meta.unpack => graft.sources.nc.NcFormat.NcDouble
-                case DoubleType | LongType => graft.sources.nc.NcFormat.NcDouble
-                case FloatType => graft.sources.nc.NcFormat.NcFloat
-                case ShortType => graft.sources.nc.NcFormat.NcShort
-                case ByteType => graft.sources.nc.NcFormat.NcByte
-                case _ => graft.sources.nc.NcFormat.NcInt
-              }
-              NumAxis(dim, vals, numType)
+          // CF `calendar`-aware decode: Gregorian-compatible AND fixed-year
+          // calendars (noleap/365_day, all_leap/366_day, 360_day — the CMIP
+          // shapes) decode to calendar-correct timestamps; julian falls
+          // back to the raw numeric axis rather than silently shifting dates.
+          NcFormat.decodeTimeAxis(c.meta.attr("units"), c.meta.attr("calendar"),
+              vals) match {
+            case Some(micros) => TimeAxis(dim, micros)
+            case None => NumAxis(dim, vals,
+              if (c.meta.unpack) DoubleType else c.meta.dtype.sparkType)
           }
         case None => IndexAxis(dim, n)
       }
     }
     ZarrGrid(path, dimNames, axes, data)
-  }
-
-  /** Decode a whole 1-D coordinate array driver-side (axes are tiny next to
-    * the data payload — the same planning trade the NC scan makes). */
-  private def readCoordDoubles(conf: Configuration, a: ResolvedArray): Array[Double] = {
-    val n = a.meta.shape.head
-    val chunk = a.meta.chunks.head
-    val out = new Array[Double](n)
-    var c = 0
-    while (c * chunk < n) {
-      val buf = ZarrMeta.readChunk(conf, a.meta, a.chunkRef(conf, Seq(c))).getOrElse(
-        throw new IllegalStateException(
-          s"Coordinate ${a.name} chunk $c is missing — axes cannot have fill holes"))
-      var i = 0
-      val base = c * chunk
-      while (i < chunk && base + i < n) {
-        out(base + i) = a.meta.dtype.decodeDouble(buf, i)
-        i += 1
-      }
-      c += 1
-    }
-    out
   }
 
   /** Fill comparison in the variable's own float width (same rule as
@@ -203,13 +214,15 @@ final class ZarrTable(
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new Pushdown.Builder(schema(),
       Pushdown.axisClaim(grid.axes.filter(_.monotonic).map(_.name).toSet))(
-      new ZarrScan(grid, _, _, splitBytes, conf))
+      new ZarrScan(Seq(grid), _, _, splitBytes, conf))
 }
 
-final class ZarrScan(
-    grid: ZarrGrid,
+/** The one gridded scan: zarr and kerchunk stores, netCDF-4 manifests and
+  * classic NetCDF files (one grid per file) all plan and read here. */
+class ZarrScan(
+    val grids: Seq[ZarrGrid],
     required: StructType,
-    pushed: Array[Filter],
+    val pushed: Array[Filter],
     splitBytes: Long,
     @transient conf: Configuration)
     extends Scan with Batch with SupportsReportStatistics {
@@ -218,51 +231,59 @@ final class ZarrScan(
   override def toBatch: Batch = this
 
   /** Pruned [lo, hi] cell box per dimension, or None when empty — the whole
-    * store is skipped (file-level pruning analog, F6). */
-  private[zarr] lazy val prunedBox: Option[Array[(Int, Int)]] =
-    Pushdown.box(grid.axes, pushed)
+    * store or file is skipped (file-level pruning analog, F6). */
+  def box(grid: ZarrGrid): Option[Array[(Int, Int)]] = Pushdown.box(grid.axes, pushed)
 
-  /** Planned once per scan: Spark builds `description()` for every
-    * action's SQL-execution event, and each plan resolves every chunk ref
-    * (a shard-index lookup on sharded arrays). */
-  private lazy val partitions: Array[InputPartition] = prunedBox match {
-    case None => Array.empty
-    case Some(box) =>
+  /** The box as `name[lo..hi]` ranges, or `pruned` when it is empty. */
+  protected def ranges(grid: ZarrGrid, pruned: String): String = box(grid) match {
+    case Some(b) => grid.axes.zip(b).map { case (a, (lo, hi)) => s"${a.name}[$lo..$hi]" }
+      .mkString(", ")
+    case None => pruned
+  }
+
+  /** One grid's partitions: the chunks meeting its box, in row-major order,
+    * cut into runs of ~`splitBytes` (decompressed). A run is a (first,
+    * count) range over the box's chunk grid, and it carries refs only where
+    * they cannot be computed from the array's source (manifest keys, shard
+    * indexes) — so a 100k-record file ships no per-record state. */
+  def partitionsOf(grid: ZarrGrid): Seq[InputPartition] = box(grid) match {
+    case None => Seq.empty
+    case Some(b) =>
       val vars = grid.dataArrays.filter(a => required.fieldNames.contains(a.name))
-      val meta0 = grid.dataArrays.head.meta
-      val chunkDims = meta0.chunks.toArray
-      // chunk-coordinate ranges intersecting the box
-      val cr = box.zip(chunkDims).map { case ((lo, hi), c) => (lo / c, hi / c) }
-      val chunkCoords = cr.foldLeft(Seq(Seq.empty[Int])) { case (acc, (lo, hi)) =>
-        acc.flatMap(prefix => (lo to hi).map(prefix :+ _))
-      }
-      val bytesPerChunk = math.max(1L,
-        vars.map(_.meta.bytesPerChunk).sum)
-      val perPart = math.max(1L, splitBytes / bytesPerChunk).toInt
+      val chunkDims = grid.dataArrays.head.meta.chunks.toArray
+      val chunkBox = b.zip(chunkDims).map { case ((lo, hi), c) => Array(lo / c, hi / c) }
+      val total = chunkBox.map(r => (r(1) - r(0) + 1).toLong).product
+      val bytesPerChunk = math.max(1L, vars.map(_.meta.bytesPerChunk).sum)
+      val perPart = math.max(1L, splitBytes / bytesPerChunk)
       val cols: Array[ZColSpec] = required.fieldNames.map { f =>
         val ax = grid.axes.indexWhere(_.name == f)
         if (ax >= 0) ZAxisCol(ax)
         else ZDataCol(vars.indexWhere(_.name == f))
-      }.toArray
-      chunkCoords.grouped(perPart).map { group =>
-        val chunks = group.map(_.toArray).toArray
+      }
+      (0L until total by perPart).map { first =>
+        val count = math.min(perPart, total - first).toInt
         val varParts = vars.map { a =>
-          ZVarPart(a.name, a.meta, group.map(c => a.chunkRef(conf, c)).toArray)
+          if (a.computable) ZVarPart(a.name, a.meta, Some(a.source), Array.empty)
+          else ZVarPart(a.name, a.meta, None, ZarrScan.run(chunkBox, first, count)
+            .map(c => a.chunkRef(conf, c.toSeq)).toArray)
         }.toArray
-        ZarrInputPartition(chunks, box.map { case (lo, hi) => Array(lo, hi) },
-          chunkDims, grid.axes.toArray, varParts, cols)
-      }.toArray
+        ZarrInputPartition(chunkBox, first, count,
+          b.map { case (lo, hi) => Array(lo, hi) }, chunkDims, grid.axes.toArray,
+          varParts, cols)
+      }
   }
 
+  /** Planned once per scan: Spark builds `description()` for every
+    * action's SQL-execution event, and each plan resolves every listed
+    * chunk ref (a shard-index lookup on sharded arrays). */
+  private lazy val partitions: Array[InputPartition] =
+    grids.flatMap(partitionsOf).toArray
+
   override def description(): String = {
-    val box = prunedBox match {
-      case Some(b) => grid.axes.zip(b).map { case (a, (lo, hi)) => s"${a.name}[$lo..$hi]" }
-        .mkString(", ")
-      case None => "<store pruned>"
-    }
-    val chunks = partitions.map(_.asInstanceOf[ZarrInputPartition].chunks.length).sum
-    s"graft-zarr ${grid.source}, PushedFilters: [${pushed.mkString(", ")}], " +
-      s"box: [$box], chunksRead: $chunks, ReadSchema: ${required.simpleString}"
+    val chunks = partitions.map(_.asInstanceOf[ZarrInputPartition].count).sum
+    s"graft-zarr ${grids.head.source}, PushedFilters: [${pushed.mkString(", ")}], " +
+      s"box: [${ranges(grids.head, "<store pruned>")}], chunksRead: $chunks, " +
+      s"ReadSchema: ${required.simpleString}"
   }
 
   override def planInputPartitions(): Array[InputPartition] = partitions
@@ -271,21 +292,64 @@ final class ZarrScan(
     new ZarrReaderFactory(new SerializableHadoopConf(conf))
 
   override def estimateStatistics(): Statistics =
-    Pushdown.stats(prunedBox.map(_.map { case (lo, hi) => (hi - lo + 1).toLong }
-      .product).getOrElse(0L), required)
+    Pushdown.stats(grids.flatMap(box).map {
+      _.map { case (lo, hi) => (hi - lo + 1).toLong }.product
+    }.sum, required)
+}
+
+object ZarrScan {
+  /** The chunk coordinates at row-major position `first` of `chunkBox`
+    * ([lo, hi] per dim). */
+  def runStart(chunkBox: Array[Array[Int]], first: Long): Array[Int] = {
+    val c = new Array[Int](chunkBox.length)
+    var rem = first
+    var j = chunkBox.length - 1
+    while (j >= 0) {
+      val extent = chunkBox(j)(1) - chunkBox(j)(0) + 1
+      c(j) = chunkBox(j)(0) + (rem % extent).toInt
+      rem /= extent
+      j -= 1
+    }
+    c
+  }
+
+  /** Advance `c` in place to the next row-major position of `chunkBox`. */
+  def runStep(chunkBox: Array[Array[Int]], c: Array[Int]): Unit = {
+    var j = c.length - 1
+    while (j >= 0) {
+      if (c(j) < chunkBox(j)(1)) { c(j) += 1; return }
+      c(j) = chunkBox(j)(0)
+      j -= 1
+    }
+  }
+
+  /** The `count` chunk coordinates from position `first`. */
+  def run(chunkBox: Array[Array[Int]], first: Long, count: Int): Iterator[Array[Int]] = {
+    val c = runStart(chunkBox, first)
+    Iterator.tabulate(count) { i => if (i > 0) runStep(chunkBox, c); c.clone() }
+  }
 }
 
 sealed trait ZColSpec extends Serializable
 final case class ZAxisCol(dimPos: Int) extends ZColSpec
 final case class ZDataCol(varIdx: Int) extends ZColSpec
 
-/** One data variable inside a partition: refs aligned with the partition's
-  * chunk list (None only for manifest stores whose key is absent). */
+/** One data variable inside a partition: its chunk source when refs can be
+  * computed from it, else refs listed along the partition's run (None only
+  * for manifest stores whose key is absent). */
 final case class ZVarPart(name: String, meta: ZArrayMeta,
-    refs: Array[Option[ChunkRef]]) extends Serializable
+    computed: Option[ChunkSource], listed: Array[Option[ChunkRef]]) {
+  def ref(i: Int, coords: Array[Int]): Option[ChunkRef] = computed match {
+    case Some(src) => src.ref(meta, coords.toSeq)
+    case None => listed(i)
+  }
+}
 
+/** A run of `count` chunks from row-major position `first` of `chunkBox`. */
 final case class ZarrInputPartition(
-    chunks: Array[Array[Int]],
+    chunkBox: Array[Array[Int]],
+    first: Long,
+    count: Int,
     box: Array[Array[Int]],
     chunkDims: Array[Int],
     axes: Array[Axis],
@@ -298,9 +362,11 @@ final class ZarrReaderFactory(conf: SerializableHadoopConf)
     new ZarrPartitionReader(partition.asInstanceOf[ZarrInputPartition], conf.value)
 }
 
-/** Emits the cells of each chunk that fall inside the pruned box. A missing
-  * chunk object (or absent manifest key) is an all-fill chunk — zarr never
-  * writes chunks whose every cell is fill. */
+/** Emits the cells of each chunk that fall inside the pruned box, reading
+  * each file through one stream and an uncompressed chunk only over the
+  * span its box cells cover. A missing chunk object (or absent manifest
+  * key) is an all-fill chunk — zarr never writes chunks whose every cell is
+  * fill. */
 final class ZarrPartitionReader(part: ZarrInputPartition, conf: Configuration)
     extends PartitionReader[InternalRow] {
 
@@ -314,8 +380,10 @@ final class ZarrPartitionReader(part: ZarrInputPartition, conf: Configuration)
     s
   }
 
+  private val fetch = new ZarrMeta.ChunkFetcher(conf)
+  private val c = ZarrScan.runStart(part.chunkBox, part.first)
   private var chunkIdx = -1
-  private var bufs: Array[Option[Array[Byte]]] = Array.empty
+  private var bufs: Array[Option[(Array[Byte], Int)]] = Array.empty
   // iteration state: global coords + the chunk-local box
   private val gIdx = new Array[Int](k)
   private val lo = new Array[Int](k)
@@ -323,30 +391,27 @@ final class ZarrPartitionReader(part: ZarrInputPartition, conf: Configuration)
   private var haveCell = false
   private val row = new Array[Any](part.cols.length)
 
-  /** Load the next chunk that intersects the box; false when done. */
+  /** Load the next chunk of the run (every one meets the box); false when
+    * done. */
   private def nextChunk(): Boolean = {
-    while (true) {
-      chunkIdx += 1
-      if (chunkIdx >= part.chunks.length) return false
-      val c = part.chunks(chunkIdx)
-      var empty = false
-      var j = 0
-      while (j < k) {
-        val base = c(j) * part.chunkDims(j)
-        lo(j) = math.max(part.box(j)(0), base)
-        hi(j) = math.min(part.box(j)(1),
-          math.min(base + part.chunkDims(j) - 1, part.axes(j).n - 1))
-        if (lo(j) > hi(j)) empty = true
-        j += 1
-      }
-      if (!empty) {
-        bufs = part.vars.map(v => ZarrMeta.readChunk(conf, v.meta, v.refs(chunkIdx)))
-        var j2 = 0
-        while (j2 < k) { gIdx(j2) = lo(j2); j2 += 1 }
-        return true
-      }
+    if (chunkIdx + 1 >= part.count) return false
+    chunkIdx += 1
+    if (chunkIdx > 0) ZarrScan.runStep(part.chunkBox, c)
+    var spanLo = 0L
+    var spanHi = 0L
+    var j = 0
+    while (j < k) {
+      val base = c(j) * part.chunkDims(j)
+      lo(j) = math.max(part.box(j)(0), base)
+      hi(j) = math.min(part.box(j)(1), base + part.chunkDims(j) - 1)
+      spanLo += (lo(j) - base) * strides(j)
+      spanHi += (hi(j) - base) * strides(j)
+      gIdx(j) = lo(j)
+      j += 1
     }
-    false
+    bufs = part.vars.map(v =>
+      fetch.cells(v.meta, v.ref(chunkIdx, c), spanLo.toInt, spanHi.toInt))
+    true
   }
 
   /** Odometer over the box∩chunk cells. */
@@ -369,7 +434,6 @@ final class ZarrPartitionReader(part: ZarrInputPartition, conf: Configuration)
   }
 
   override def get(): InternalRow = {
-    val c = part.chunks(chunkIdx)
     // chunk-local linear offset of the current cell
     var lin = 0L
     var j = 0
@@ -390,14 +454,15 @@ final class ZarrPartitionReader(part: ZarrInputPartition, conf: Configuration)
                 throw new IllegalStateException(
                   s"${part.vars(v).name}: chunk ${meta.chunkKey(c.toSeq)} missing and no fill_value")
               null
-            case Some(buf) =>
+            case Some((buf, base)) =>
+              val at = cell - base
               val fill = meta.effectiveFill
-              if (fill.isEmpty && !meta.unpack) meta.dtype.decode(buf, cell)
+              if (fill.isEmpty && !meta.unpack) meta.dtype.decode(buf, at)
               else {
-                val raw = meta.dtype.decodeDouble(buf, cell)
+                val raw = meta.dtype.decodeDouble(buf, at)
                 if (fill.exists(f => ZarrTable.fillMatches(raw, f, meta.dtype))) null
                 else if (meta.unpack) raw * meta.scaleFactor + meta.addOffset
-                else meta.dtype.decode(buf, cell)
+                else meta.dtype.decode(buf, at)
               }
           }
       }
@@ -406,5 +471,5 @@ final class ZarrPartitionReader(part: ZarrInputPartition, conf: Configuration)
     new GenericInternalRow(row.clone())
   }
 
-  override def close(): Unit = ()
+  override def close(): Unit = fetch.close()
 }

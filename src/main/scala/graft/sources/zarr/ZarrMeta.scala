@@ -301,15 +301,19 @@ object ZarrMeta {
     def numAttr(name: String): Option[Double] = attrs.get(name).collect {
       case JNum(n) => n
     }
-    /** CF mask_and_scale, exactly as the NC scan reads it off variable
-      * attrs (kerchunk manifests carry the NC attrs through verbatim). */
-    def scaleFactor: Double = numAttr("scale_factor").getOrElse(1.0)
-    def addOffset: Double = numAttr("add_offset").getOrElse(0.0)
-    def unpack: Boolean =
+    /** CF mask_and_scale off the variable attrs (classic NetCDF and its
+      * kerchunk manifests carry the NC attrs through verbatim). `unpack` is
+      * attr PRESENCE, not value: an explicit `scale_factor: 1.0` still
+      * means "unpacked values are floating point" per CF §8.1. Vals, not
+      * defs: the reader consults them for every cell, and each is a scan
+      * of the attrs. */
+    lazy val scaleFactor: Double = numAttr("scale_factor").getOrElse(1.0)
+    lazy val addOffset: Double = numAttr("add_offset").getOrElse(0.0)
+    lazy val unpack: Boolean =
       attrs.get("scale_factor").isDefined || attrs.get("add_offset").isDefined
     /** Attr-declared fill (kerchunk from NC) falls back on the .zarray
       * fill_value; _FillValue wins over missing_value (CF §2.5.1). */
-    def effectiveFill: Option[Double] =
+    lazy val effectiveFill: Option[Double] =
       numAttr("_FillValue").orElse(numAttr("missing_value")).orElse(fill)
 
     def render: String = JObj(Seq(
@@ -411,6 +415,17 @@ object ZarrMeta {
     private def littleEndianOrByte: Boolean = dtype.size == 1 || dtype.littleEndian
   }
 
+  /** A `fill_value` member (v2 and v3 spell it alike); None = no fill. */
+  private def parseFill(v: Option[JValue]): Option[Double] = v match {
+    case None | Some(JNull) => None
+    case Some(JNum(n)) => Some(n)
+    case Some(JStr("NaN")) => Some(Double.NaN)
+    case Some(JStr("Infinity")) => Some(Double.PositiveInfinity)
+    case Some(JStr("-Infinity")) => Some(Double.NegativeInfinity)
+    case Some(JBool(b)) => Some(if (b) 1.0 else 0.0)
+    case other => throw new IllegalArgumentException(s"fill_value $other")
+  }
+
   def parseZArray(doc: JValue, attrs: JObj): ZArrayMeta = doc match {
     case o: JObj =>
       def ints(key: String): Seq[Int] = o.get(key) match {
@@ -453,15 +468,7 @@ object ZarrMeta {
         case Some(JStr(s)) => parseDtype(s)
         case other => throw new IllegalArgumentException(s".zarray dtype: $other")
       }
-      val fill = o.get("fill_value") match {
-        case None | Some(JNull) => None
-        case Some(JNum(n)) => Some(n)
-        case Some(JStr("NaN")) => Some(Double.NaN)
-        case Some(JStr("Infinity")) => Some(Double.PositiveInfinity)
-        case Some(JStr("-Infinity")) => Some(Double.NegativeInfinity)
-        case Some(JBool(b)) => Some(if (b) 1.0 else 0.0)
-        case other => throw new IllegalArgumentException(s"fill_value $other")
-      }
+      val fill = parseFill(o.get("fill_value"))
       val sep = o.get("dimension_separator") match {
         case Some(JStr(s)) => s
         case _ => "."
@@ -485,18 +492,66 @@ object ZarrMeta {
   /** Inline bytes (kerchunk inlines small chunks straight into the JSON). */
   final case class InlineChunk(bytes: Array[Byte]) extends ChunkRef
 
-  /** One array resolved for scanning: metadata + how to find each chunk.
-    * `refs` is None for directory stores (paths are derived; existence is
-    * checked at read time) and Some for reference manifests (missing key =
-    * fill chunk). */
+  /** How an array's chunk coordinates resolve to bytes. */
+  sealed trait ChunkSource extends Serializable {
+    def ref(meta: ZArrayMeta, coords: Seq[Int]): Option[ChunkRef]
+  }
+  /** A directory store: one object per chunk key (existence is checked at
+    * read time; an absent object is an all-fill chunk). */
+  final case class DirChunks(dir: String) extends ChunkSource {
+    def ref(meta: ZArrayMeta, coords: Seq[Int]): Option[ChunkRef] =
+      Some(FileChunk(s"$dir/${meta.chunkKey(coords)}"))
+  }
+  /** A reference manifest: chunk key → ref (an absent key is an all-fill
+    * chunk). */
+  final case class RefChunks(refs: Map[String, ChunkRef]) extends ChunkSource {
+    def ref(meta: ZArrayMeta, coords: Seq[Int]): Option[ChunkRef] =
+      refs.get(meta.chunkKey(coords))
+  }
+  /** Chunk k along the leading dimension is bytes [begin + k·stride,
+    * +length) of one file (a classic NetCDF variable, one chunk per
+    * record or row). Computed, so no ref is held per chunk. */
+  final case class StridedChunks(path: String, begin: Long, stride: Long,
+      length: Long) extends ChunkSource {
+    def ref(meta: ZArrayMeta, coords: Seq[Int]): Option[ChunkRef] =
+      Some(RangeChunk(path, begin + coords.head * stride, length))
+  }
+
+  /** One array resolved for scanning: metadata + how to find each chunk. */
   final case class ResolvedArray(
       name: String,
       meta: ZArrayMeta,
-      dir: Option[String],
-      refs: Option[Map[String, ChunkRef]]) extends Serializable {
-    def chunkRef(coords: Seq[Int]): Option[ChunkRef] = refs match {
-      case Some(m) => m.get(meta.chunkKey(coords))
-      case None => Some(FileChunk(s"${dir.get}/${meta.chunkKey(coords)}"))
+      source: ChunkSource) extends Serializable {
+    def chunkRef(coords: Seq[Int]): Option[ChunkRef] = source.ref(meta, coords)
+
+    /** Refs a task can compute from the source alone (no manifest map, no
+      * shard index), so partitions ship the source instead of a ref per
+      * chunk. */
+    def computable: Boolean = meta.sharding.isEmpty && !source.isInstanceOf[RefChunks]
+
+    /** The one 1-D coordinate read: every chunk decoded to doubles through
+      * one stream per file. A missing chunk refuses — an axis has no fill
+      * holes. */
+    def readCoordinate(conf: Configuration): Array[Double] = {
+      val n = meta.shape.head
+      val chunk = meta.chunks.head
+      val out = new Array[Double](n)
+      val fetch = new ChunkFetcher(conf)
+      try {
+        var c = 0
+        while (c * chunk < n) {
+          val buf = fetch.whole(meta, chunkRef(conf, Seq(c))).getOrElse(
+            throw new IllegalStateException(
+              s"Coordinate $name chunk $c is missing — axes cannot have fill holes"))
+          var i = 0
+          while (i < chunk && c * chunk + i < n) {
+            out(c * chunk + i) = meta.dtype.decodeDouble(buf, i)
+            i += 1
+          }
+          c += 1
+        }
+      } finally fetch.close()
+      out
     }
 
     /** Per-planning-pass shard index memo: one ranged read per TOUCHED
@@ -515,11 +570,7 @@ object ZarrMeta {
           val shardCoords = coords.zip(ratio).map { case (k, r) => k / r }
           val inner = coords.zip(ratio).map { case (k, r) => k % r }
           val shardKey = meta.chunkKey(shardCoords)
-          val base = refs match {
-            case Some(m) => m.get(shardKey)
-            case None => Some(FileChunk(s"${dir.get}/$shardKey"))
-          }
-          base.flatMap { b =>
+          source.ref(meta, shardCoords).flatMap { b =>
             shardIndexCache.getOrElseUpdate(shardKey,
               readShardIndex(conf, b, sh, meta.chunks)).flatMap { idx =>
               var lin = 0
@@ -611,23 +662,14 @@ object ZarrMeta {
 
   // ----------------------------------------------------------- zarr v3 read
 
-  /** Map a v3 `data_type` name onto the v2 typestr model. */
-  private def v3Dtype(name: String, littleEndian: Boolean): ZDtype = {
-    val (kind, size) = name match {
-      case "float64" => ('f', 8)
-      case "float32" => ('f', 4)
-      case "int64" => ('i', 8)
-      case "int32" => ('i', 4)
-      case "int16" => ('i', 2)
-      case "int8" => ('i', 1)
-      case "uint8" => ('u', 1)
-      case "uint16" => ('u', 2)
-      case "uint32" => ('u', 4)
-      case "bool" => ('b', 1)
-      case other => throw new IllegalArgumentException(s"zarr v3 data_type $other")
-    }
-    ZDtype(littleEndian, kind, size)
-  }
+  /** Map a v3 `data_type` name onto the v2 typestr model (the inverse of
+    * [[ZDtype.v3Name]]). */
+  private def v3Dtype(name: String, littleEndian: Boolean): ZDtype =
+    Seq('f' -> 8, 'f' -> 4, 'i' -> 8, 'i' -> 4, 'i' -> 2, 'i' -> 1, 'u' -> 1,
+        'u' -> 2, 'u' -> 4, 'b' -> 1)
+      .map { case (kind, size) => ZDtype(littleEndian, kind, size) }
+      .find(_.v3Name == name)
+      .getOrElse(throw new IllegalArgumentException(s"zarr v3 data_type $name"))
 
   /** Parse one v3 array document (`zarr.json` with node_type "array",
     * zarr v3 core spec): regular chunk grid, default chunk-key encoding,
@@ -732,15 +774,7 @@ object ZarrMeta {
       case Some(JStr(s)) => v3Dtype(s, littleEndian)
       case other => throw new IllegalArgumentException(s"v3 data_type: $other")
     }
-    val fill = doc.get("fill_value") match {
-      case None | Some(JNull) => None
-      case Some(JNum(n)) => Some(n)
-      case Some(JStr("NaN")) => Some(Double.NaN)
-      case Some(JStr("Infinity")) => Some(Double.PositiveInfinity)
-      case Some(JStr("-Infinity")) => Some(Double.NegativeInfinity)
-      case Some(JBool(b)) => Some(if (b) 1.0 else 0.0)
-      case other => throw new IllegalArgumentException(s"v3 fill_value $other")
-    }
+    val fill = parseFill(doc.get("fill_value"))
     val attrs0 = doc.get("attributes").collect { case o: JObj => o }
       .getOrElse(JObj(Seq.empty))
     // v3 dimension_names plays v2's _ARRAY_DIMENSIONS role — normalize so
@@ -769,7 +803,7 @@ object ZarrMeta {
       case Some(entries) =>
         entries.fields.collect {
           case (name, doc: JObj) if doc.get("node_type").contains(JStr("array")) =>
-            ResolvedArray(name, parseV3Array(doc), Some(s"$root/$name"), refs = None)
+            ResolvedArray(name, parseV3Array(doc), DirChunks(s"$root/$name"))
         }
       case None =>
         val p = new HPath(root)
@@ -778,7 +812,7 @@ object ZarrMeta {
           val name = st.getPath.getName
           readUtf8(conf, s"$root/$name/zarr.json").map { s =>
             ResolvedArray(name, parseV3Array(parseObj(s, s"$name/zarr.json")),
-              Some(s"$root/$name"), refs = None)
+              DirChunks(s"$root/$name"))
           }
         }
     }
@@ -813,7 +847,7 @@ object ZarrMeta {
             .getOrElse(JObj(Seq.empty))
           ResolvedArray(name,
             parseZArray(entries.get(s"$name/.zarray").get, attrs),
-            Some(s"$root/$name"), refs = None)
+            DirChunks(s"$root/$name"))
         }
         ResolvedStore(rootAttrs, arrays)
       case None =>
@@ -828,7 +862,7 @@ object ZarrMeta {
             val attrs = readUtf8(conf, s"$root/$name/.zattrs")
               .map(parseObj(_, s"$name/.zattrs")).getOrElse(JObj(Seq.empty))
             ResolvedArray(name, parseZArray(JValue.parse(za), attrs),
-              Some(s"$root/$name"), refs = None)
+              DirChunks(s"$root/$name"))
           }
         }
         require(arrays.nonEmpty, s"No zarr arrays under $root (no .zmetadata, no */.zarray)")
@@ -881,7 +915,7 @@ object ZarrMeta {
         case (k, v) if k.startsWith(s"$name/") && !k.substring(name.length + 1).startsWith(".") =>
           k.substring(name.length + 1) -> chunkRefOf(v)
       }.toMap
-      ResolvedArray(name, meta, dir = None, refs = Some(chunkMap))
+      ResolvedArray(name, meta, RefChunks(chunkMap))
     }
     require(arrays.nonEmpty, "Kerchunk manifest declares no arrays")
     ResolvedStore(rootAttrs, arrays)
@@ -891,26 +925,70 @@ object ZarrMeta {
     * first, then filters undone in reverse — zarr v2 decode order). Missing
     * directory-store chunks return None (fill semantics). */
   def readChunk(conf: Configuration, meta: ZArrayMeta, ref: Option[ChunkRef]): Option[Array[Byte]] = {
-    def decode(bytes: Array[Byte]): Array[Byte] = meta.decodeChunk(bytes)
-    ref match {
-      case None => None
-      case Some(InlineChunk(bytes)) => Some(decode(bytes))
-      case Some(FileChunk(path)) =>
-        val p = new HPath(path)
-        val fs = p.getFileSystem(conf)
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          val bytes = try in.readAllBytes() finally in.close()
-          Some(decode(bytes))
-        }
-      case Some(RangeChunk(path, off, len)) =>
-        val p = new HPath(path)
-        val fs = p.getFileSystem(conf)
-        val in = fs.open(p)
-        val bytes = new Array[Byte](len.toInt)
-        try in.readFully(off, bytes) finally in.close()
-        Some(decode(bytes))
+    val fetch = new ChunkFetcher(conf)
+    try fetch.whole(meta, ref) finally fetch.close()
+  }
+
+  /** The chunk reads of one task or planning pass: one open stream per
+    * referenced file, reused across its chunks (a classic NetCDF partition
+    * reads every record through one stream). Directory-store chunks are
+    * objects of their own, opened and closed per read. */
+  final class ChunkFetcher(conf: Configuration) extends AutoCloseable {
+    private val streams =
+      scala.collection.mutable.HashMap.empty[String, org.apache.hadoop.fs.FSDataInputStream]
+
+    private def stream(path: String) = streams.getOrElseUpdate(path, {
+      val p = new HPath(path)
+      p.getFileSystem(conf).open(p)
+    })
+
+    /** Bytes [off, off + len) of a stored chunk; None for an absent
+      * directory-store object. */
+    private def bytes(ref: ChunkRef, off: Long, len: Long): Option[Array[Byte]] =
+      ref match {
+        case InlineChunk(b) => Some(b)
+        case RangeChunk(path, o, l) =>
+          // seek + read on the task's own stream: a positioned read of a
+          // checksummed local file reopens it on every call
+          val buf = new Array[Byte]((if (len < 0) l else len).toInt)
+          val in = stream(path)
+          in.seek(o + off)
+          in.readFully(buf)
+          Some(buf)
+        case FileChunk(path) =>
+          val p = new HPath(path)
+          val fs = p.getFileSystem(conf)
+          if (!fs.exists(p)) None
+          else {
+            val in = fs.open(p)
+            try Some(if (len < 0) in.readAllBytes() else {
+              val buf = new Array[Byte](len.toInt)
+              in.readFully(off, buf)
+              buf
+            }) finally in.close()
+          }
+      }
+
+    /** One whole chunk, decoded. */
+    def whole(meta: ZArrayMeta, ref: Option[ChunkRef]): Option[Array[Byte]] =
+      ref.flatMap(r => bytes(r, 0L, -1L)).map(meta.decodeChunk)
+
+    /** Cells [lo, hi] (chunk-local, row-major) of one chunk, with the cell
+      * the buffer starts at: an uncompressed, unfiltered chunk stored
+      * outside the manifest is read over exactly that span, any other
+      * chunk whole. */
+    def cells(meta: ZArrayMeta, ref: Option[ChunkRef], lo: Int,
+        hi: Int): Option[(Array[Byte], Int)] = ref match {
+      case Some(r) if meta.codec == ZarrCodec.NullCodec && meta.filters.isEmpty &&
+          !r.isInstanceOf[InlineChunk] =>
+        val size = meta.dtype.size.toLong
+        bytes(r, lo * size, (hi - lo + 1) * size).map(b => (b, lo))
+      case _ => whole(meta, ref).map(b => (b, 0))
+    }
+
+    def close(): Unit = {
+      streams.values.foreach(_.close())
+      streams.clear()
     }
   }
 }

@@ -601,22 +601,12 @@ final class ZarrStore(
     val (mult, epoch) = meta.attr("units")
       .flatMap(graft.sources.nc.NcFormat.parseTimeUnits)
       .getOrElse((1L, 0L))
-    val n = meta.shape.head
-    val out = new Array[Long](n)
-    var c = 0
-    val chunk = meta.chunks.head
-    while (c * chunk < n) {
-      val buf = ZarrMeta.readChunk(conf, meta,
-        Some(ZarrMeta.FileChunk(s"$path/$timeCol/${meta.chunkKey(Seq(c))}"))).get
-      var i = 0
-      while (i < chunk && c * chunk + i < n) {
-        out(c * chunk + i) = meta.dtype.decodeDouble(buf, i).toLong * mult + epoch
-        i += 1
-      }
-      c += 1
-    }
-    out
+    coordinate(timeCol, meta).map(_.toLong * mult + epoch)
   }
+
+  private def coordinate(name: String, meta: ZarrMeta.ZArrayMeta): Array[Double] =
+    ZarrMeta.ResolvedArray(name, meta, ZarrMeta.DirChunks(s"$path/$name"))
+      .readCoordinate(conf)
 
   private def readSpatialAxes(): Seq[(String, Array[Double])] = {
     val arrays = listArrays().toMap
@@ -626,21 +616,7 @@ final class ZarrStore(
       require(meta.shape.head <= MaxAxisLength,
         s"$dim axis of ${meta.shape.head} values exceeds the driver-held " +
           s"planning bound $MaxAxisLength (see collectAxes)")
-      val n = meta.shape.head
-      val out = new Array[Double](n)
-      var c = 0
-      val chunk = meta.chunks.head
-      while (c * chunk < n) {
-        val buf = ZarrMeta.readChunk(conf, meta,
-          Some(ZarrMeta.FileChunk(s"$path/$dim/${meta.chunkKey(Seq(c))}"))).get
-        var i = 0
-        while (i < chunk && c * chunk + i < n) {
-          out(c * chunk + i) = meta.dtype.decodeDouble(buf, i)
-          i += 1
-        }
-        c += 1
-      }
-      dim -> out
+      dim -> coordinate(dim, meta)
     }
   }
 }

@@ -137,14 +137,14 @@ class GribSpec extends SparkSpec {
   test("header cache is a true LRU: crossing the bound evicts only the " +
       "oldest-touched files — the working set survives a re-plan") {
     // (format, its shared header cache, file extension, write file i,
-    // rows per file): GRIB messages, and NetCDF layouts through the
+    // rows per file): GRIB messages, and NetCDF grids through the
     // same cache
     import graft.sources.nc.NcFormat
     val inputs: Seq[(String, graft.sources.HeaderCache[_], String,
         (String, Int) => Unit, Long)] = Seq(
       ("grib1", GribTable.headers, ".grb",
         (p: String, i: Int) => writeDay(p, day = i + 1, base = i * 10.0), 12L),
-      ("netcdf", graft.sources.nc.NcTable.layouts, ".nc",
+      ("netcdf", graft.sources.nc.NcTable.grids, ".nc",
         (p: String, i: Int) => NcFormat.writeFile(spark, p,
           dims = Seq("cell" -> 4), vars = Seq(NcFormat.WriteVar("v",
             Seq("cell"), NcFormat.NcFloat, Array.tabulate(4)(_ + i * 10.0)))),
